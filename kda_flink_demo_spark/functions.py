@@ -14,6 +14,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier, for column names spliced
+    into ``selectExpr``/``F.expr`` strings (spaces, dots, keywords)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def det_round(col: Column, digits: int) -> Column:
     scale = 10**digits
     return F.floor(col * F.lit(float(scale)) + F.lit(0.5)) / F.lit(float(scale))
@@ -58,10 +64,33 @@ def narrow_checkpoint(df, rows_per_partition: int):
 
     obs = Observation()
     ck = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-    want = max(1, -(-obs.get["n"] // rows_per_partition))
+    n = _observed(obs, ck.sparkSession, "narrow_checkpoint")["n"]
+    want = max(1, -(-n // rows_per_partition))
     if want < ck.rdd.getNumPartitions():
         return ck.coalesce(want)
     return ck
+
+
+def _observed(obs, spark, what: str) -> dict:
+    """``obs.get`` for an Observation whose action has returned, or a clear
+    error if that action produced no metrics. ``Observation.get`` alone blocks
+    forever when the observed plan never ran. The metrics arrive through the
+    listener bus after the action returns, so the bus is drained (for at most
+    a minute) before the verdict."""
+    from py4j.protocol import Py4JJavaError
+
+    done = obs._jo.future().isCompleted
+    if not done():
+        try:
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        except Py4JJavaError:
+            pass  # timed out: the check below decides
+    if not done():
+        raise RuntimeError(
+            f"{what}: the observed action produced no metrics, so it did not run "
+            "the observed plan"
+        )
+    return obs.get
 
 
 def spread_for_compute(df):

@@ -21,11 +21,6 @@ from pyspark.sql import functions as F
 from kda_flink_demo_spark.functions import det_round
 
 
-def grouped_counts(df: DataFrame, *keys: str, alias: str = "cnt") -> DataFrame:
-    """A1/A2/A4/A5: grouped COUNT with partial aggregation (map-side combine)."""
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(alias))
-
-
 def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1-shaped multi-aggregate over the fact table — exercises sum/avg/count
     in one pass (single shuffle, partial aggs). Doubles are rounded so results are
@@ -49,14 +44,6 @@ def pricing_summary(lineitem: DataFrame) -> DataFrame:
 def distinct_counts(df: DataFrame, group_key: str, value: str, alias: str = "distinct_cnt") -> DataFrame:
     """A6 breadth: exact COUNT(DISTINCT value) per group (expand + two-phase agg)."""
     return df.groupBy(group_key).agg(F.countDistinct(value).alias(alias))
-
-
-def approx_distinct_counts(
-    df: DataFrame, group_key: str, value: str, rsd: float = 0.01, alias: str = "approx_cnt"
-) -> DataFrame:
-    """A6 breadth: HyperLogLog++ distinct estimate — the 100 TB-scale path (single
-    shuffle, constant-size sketch state per group)."""
-    return df.groupBy(group_key).agg(F.approx_count_distinct(value, rsd).alias(alias))
 
 
 def approx_distinct_report(
@@ -96,16 +83,6 @@ def approx_distinct_report(
         )
         .select(group_key, "exact_distinct", ok)
     )
-
-
-def rollup_counts(df: DataFrame, *keys: str, alias: str = "cnt") -> DataFrame:
-    """A6 breadth: ROLLUP grouping-sets aggregate."""
-    return df.rollup(*keys).agg(F.count(F.lit(1)).alias(alias))
-
-
-def cube_counts(df: DataFrame, *keys: str, alias: str = "cnt") -> DataFrame:
-    """A6 breadth: CUBE grouping-sets aggregate."""
-    return df.cube(*keys).agg(F.count(F.lit(1)).alias(alias))
 
 
 def value_histogram(

@@ -596,11 +596,6 @@ def minhash_signature_from_hashes(
     return F.array(*mins)
 
 
-def minhash_signature(text: Column, n: int = 3, num_hashes: int = 64, seed: int = 42) -> Column:
-    """Convenience composition: text → shingles → hashes → signature."""
-    return minhash_signature_from_hashes(shingle_hashes(word_ngrams(text, n)), num_hashes, seed)
-
-
 def minhash_signature_udf(num_hashes: int = 64, seed: int = 42):
     """Vectorized twin of :func:`minhash_signature_from_hashes`: an
     Arrow-batched pandas UDF computing all permutations as one numpy

@@ -384,7 +384,7 @@ def pq_encode(
     """
     from pyspark.sql.functions import broadcast
 
-    from kda_flink_demo_spark.functions import spread_for_compute
+    from kda_flink_demo_spark.functions import quote_ident, spread_for_compute
 
     # Construction note (optimization r14, same rationale as kmeans_assign):
     # per-round expressions are SQL strings, not Column-object lambda trees —
@@ -404,26 +404,27 @@ def pq_encode(
     # CPU-heavy enough that a single-file input (1 scan partition) pins every
     # Lloyd round to one core; spread first (the dedup.py shingle rule)
     df = spread_for_compute(df)
+    qid = quote_ident(id_col)
     base = (
         df.selectExpr(
-            f"CAST({id_col} AS LONG) AS {id_col}",
-            f"transform({vec_col}, x -> CAST(x AS DOUBLE)) AS _v",
+            f"CAST({qid} AS LONG) AS {qid}",
+            f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE)) AS _v",
         )
-        .selectExpr(id_col, f"explode(sequence(0, {m - 1})) AS sub", "_v")
-        .selectExpr(id_col, "sub", f"slice(_v, sub * {subdim} + 1, {subdim}) AS _sv")
+        .selectExpr(qid, f"explode(sequence(0, {m - 1})) AS sub", "_v")
+        .selectExpr(qid, "sub", f"slice(_v, sub * {subdim} + 1, {subdim}) AS _sv")
         .selectExpr("*", f"{dot_sql('_sv', '_sv')} AS _svn2")
     )
 
     seeds = (
         df.selectExpr(
-            f"CAST({id_col} AS LONG) AS {id_col}",
-            f"md5(CAST({id_col} AS STRING)) AS _h",
+            f"CAST({qid} AS LONG) AS {qid}",
+            f"md5(CAST({qid} AS STRING)) AS _h",
         )
         .orderBy("_h", id_col)
         .limit(k)
         .selectExpr(
-            id_col,
-            f"CAST(row_number() OVER (ORDER BY _h, {id_col}) - 1 AS LONG) AS cluster",
+            qid,
+            f"CAST(row_number() OVER (ORDER BY _h, {qid}) - 1 AS LONG) AS cluster",
         )
     )
     cent = base.join(broadcast(seeds), id_col).select(
@@ -450,7 +451,7 @@ def pq_encode(
             base.join(broadcast(cset), "sub")
             .selectExpr("*", f"{best} AS _m")
             .selectExpr(
-                id_col, "sub", "_m.cluster AS code", "_m._d2 AS dist2", "_sv", "_svn2"
+                qid, "sub", "_m.cluster AS code", "_m._d2 AS dist2", "_sv", "_svn2"
             )
         )
         if i < iters - 1:

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from kda_flink_demo_spark.functions import det_round_sql
+from kda_flink_demo_spark.functions import det_round_sql, quote_ident
 from kda_flink_demo_spark.operators.llm.similarity import embedding_near_dup_pairs
 
 
@@ -82,18 +82,19 @@ def kmeans_assign(
         # similarity.dot as SQL: the same sequential fold
         return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
 
+    qid = quote_ident(id_col)
     base = df.selectExpr(
-        f"CAST({id_col} AS LONG) AS {id_col}",
-        f"transform({vec_col}, x -> CAST(x AS DOUBLE)) AS _v",
+        f"CAST({qid} AS LONG) AS {qid}",
+        f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE)) AS _v",
     ).selectExpr("*", f"{dot_sql('_v', '_v')} AS _vn2")
 
     # deterministic seeds: k smallest md5(id); TakeOrdered, not a global sort
     cent = (
-        base.selectExpr(id_col, "_v", f"md5(CAST({id_col} AS STRING)) AS _h")
+        base.selectExpr(qid, "_v", f"md5(CAST({qid} AS STRING)) AS _h")
         .orderBy("_h", id_col)
         .limit(k)
         .selectExpr(
-            f"CAST(row_number() OVER (ORDER BY _h, {id_col}) - 1 AS LONG) AS cluster",
+            f"CAST(row_number() OVER (ORDER BY _h, {qid}) - 1 AS LONG) AS cluster",
             "_v AS _c",
         )
     )
@@ -117,7 +118,7 @@ def kmeans_assign(
         asg = (
             base.crossJoin(broadcast(cset))
             .selectExpr("*", f"{best} AS _m")
-            .selectExpr(id_col, "_m.cluster AS cluster", "_m._d2 AS dist2", "_v")
+            .selectExpr(qid, "_m.cluster AS cluster", "_m._d2 AS dist2", "_v")
         )
         if i < iters - 1:
             cent = (

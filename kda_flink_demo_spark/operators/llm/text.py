@@ -627,20 +627,6 @@ def bm25_stats_oracle_sql(table: str = "documents", pred: str = "TRUE") -> str:
 _FP_MOD = 1_000_000_007
 
 
-def polyhash(text: Column) -> Column:
-    """Sequential polynomial rolling hash over characters:
-    acc = (acc*31 + codepoint) mod 1e9+7. Deterministic fold — DuckDB's
-    list_reduce over ord() computes the identical value. This Catalyst
-    expression is the semantic spec; ``doc_fingerprint`` computes the same
-    values through a vectorized prefix-hash kernel (interpreted per-character
-    HOF folds are ~5× slower)."""
-    return F.aggregate(
-        F.split(text, ""),
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * 31 + F.ascii(ch)) % F.lit(_FP_MOD),
-    )
-
-
 def doc_fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Document fingerprint: full-text rolling hash + a winnowing-style minimum
     over word-5-gram hashes (robust to local edits — standard near-dup

@@ -13,6 +13,12 @@ At 100 TB these defaults matter:
   ~800k tasks over 100 TB, a healthy task count for a 1000-executor cluster.
 - ``autoBroadcastJoinThreshold`` 64m: dimension tables (region/nation/customer at
   TPC-H-ish shape) broadcast instead of shuffling the 100 TB fact side.
+- ``spark.sql.shuffle.partitions`` 32 is the BATCH value, an upper bound that
+  AQE coalesces per shuffle. Streaming queries started by
+  ``streaming.jobs.run_to_sink`` use fewer: the value capped at the task slots.
+  AQE does not coalesce a stateful streaming shuffle, and Spark fixes the count
+  for the checkpoint's whole life, so every micro-batch would otherwise run one
+  state-store task per partition, however little state there is.
 """
 
 from __future__ import annotations

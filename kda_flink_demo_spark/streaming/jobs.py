@@ -18,6 +18,9 @@ checkpoint location — the whole O5 write-ahead machinery.
 
 from __future__ import annotations
 
+import threading
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
 from kda_flink_demo_spark.operators.windows import hopping_counts, tumbling_counts
@@ -167,6 +170,35 @@ def dispatch(job_class_name: str):
         ) from None
 
 
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+CHECKPOINT_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+# Spark 4.1's name for the manager that writes through the Hadoop FileSystem API
+FS_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+# Serialises run_to_sink's set/start/restore of the shared session conf, so
+# two concurrent starts cannot restore each other's value. It also covers
+# foreachBatch, whose first call starts PySpark's py4j callback server with
+# an unsynchronised check-then-start.
+_START_LOCK = threading.Lock()
+_INIT_TIMEOUT_MS = 60_000
+
+
+def _start_conf(spark, checkpoint_dir: str) -> dict[str, str]:
+    """The session conf a new ``run_to_sink`` query starts with (see there):
+    shuffle/state partitions capped at the task slots, and, for a checkpoint
+    on the local file system whose session names no manager, the
+    FileSystem-API checkpoint file manager."""
+    batch_value = int(spark.conf.get(SHUFFLE_PARTITIONS))
+    conf = {SHUFFLE_PARTITIONS: str(min(batch_value, spark.sparkContext.defaultParallelism))}
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.getUri().getScheme() == "file" and spark.conf.get(CHECKPOINT_FILE_MANAGER, None) is None:
+        conf[CHECKPOINT_FILE_MANAGER] = FS_CHECKPOINT_FILE_MANAGER
+    return conf
+
+
 def run_to_sink(
     result: DataFrame,
     sink: DuckDBUpsertSink,
@@ -176,12 +208,59 @@ def run_to_sink(
     """Start the streaming query into the idempotent upsert sink with a
     checkpoint — Spark replays failed batches under the same batchId, the keyed
     upsert absorbs the replay (the reference's 244-line checkpoint-coordinated
-    WAL sink, SinkDataApiTumbling.java:30-273, in one call)."""
-    writer = (
-        result.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    WAL sink, SinkDataApiTumbling.java:30-273, in one call).
+
+    A new checkpoint starts with fewer shuffle/state partitions than batch
+    queries use. AQE does not coalesce a stateful streaming shuffle, and
+    Spark fixes the count for the checkpoint's whole life, so the batch value
+    would cost one state-store load/commit task per partition on every
+    micro-batch (32 partitions on 2 slots: 16 waves of near-empty tasks per
+    trigger). A new query therefore gets the session value capped at the task
+    slots (``defaultParallelism``), so its stateful stage runs in one wave; a
+    cluster with at least as many slots keeps the session value. A restarted
+    checkpoint keeps the count recorded in its offset log, which Spark
+    applies over the session value.
+
+    A checkpoint on the local file system is also written through the Hadoop
+    FileSystem API instead of Spark's default FileContext one. Without
+    Hadoop's native library, FileContext's rename runs a ``readlink``
+    subprocess for each path it checks (four per rename), so every atomic
+    checkpoint file (source, offset and commit log entries, each state
+    partition's delta and checksum: seven per micro-batch at two partitions)
+    costs about 50 ms, against 15 ms through FileSystem (4-cpu host): most of
+    a small trigger's fixed cost, and a cost that grows with the host's load.
+    Local rename is atomic either way; a session that names a manager keeps
+    it.
+
+    Both are session conf, set just before ``start()`` and restored once the
+    query has initialised: Spark clones the session for the query at
+    ``start()``, but builds the sources' logs from the caller's session in
+    the query thread. The caller's session is left unchanged."""
+    spark = result.sparkSession
+    with _START_LOCK:
+        writer = (
+            result.writeStream.outputMode("append")
+            .foreachBatch(sink)
+            .option("checkpointLocation", checkpoint_dir)
+        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        conf = _start_conf(spark, checkpoint_dir)
+        before = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            query = writer.start()
+            try:
+                # the query thread builds the sources, and their logs, from
+                # this session only after start() returns
+                query._jsq.streamingQuery().awaitInitialization(_INIT_TIMEOUT_MS)
+            except Py4JJavaError:
+                pass  # the query reports its own failure, as before
+            return query
+        finally:
+            for k, v in before.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)

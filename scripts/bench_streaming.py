@@ -1,6 +1,8 @@
 """Streaming throughput bench: replay the sf0.1 events table (≈100k rows) in 10
 time-ordered chunks through the streaming jobs into the upsert sink, report
-end-to-end rows/sec (including checkpointing and sink writes).
+end-to-end rows/sec (including checkpointing and sink writes), and per job the
+median micro-batch time (``triggerExecution``), the median state-store commit
+time per batch and the state partitions of its stateful operator.
 
 Run: python scripts/bench_streaming.py [n_chunks]   (default 10; fewer chunks =
 bigger micro-batches = higher rows/sec, since per-batch fixed cost dominates)
@@ -10,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import tempfile
 import time
@@ -77,10 +80,19 @@ def main() -> None:
         q.awaitTermination(600)
         elapsed = time.time() - t0
         _, rows = sink.read_all()
+        batches = [p for p in q.recentProgress if p.numInputRows > 0]
         results[job_name] = {
             "sec": round(elapsed, 2),
             "rows_per_sec": round(n_rows / elapsed),
             "sink_rows": len(rows),
+            "batches": len(batches),
+            "batch_ms_median": statistics.median(
+                p.durationMs["triggerExecution"] for p in batches
+            ),
+            "state_commit_ms_median": statistics.median(
+                sum(op.commitTimeMs for op in p.stateOperators) for p in batches
+            ),
+            "state_partitions": [op.numShufflePartitions for op in batches[-1].stateOperators],
         }
     print(json.dumps({"events_rows": n_rows, "chunks": chunks, "jobs": results}))
 

@@ -52,8 +52,8 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
             jobs = job_id() - j0
-            best_c = min(t1 - t0, best_c) if best_c else t1 - t0
-            best_e = min(t2 - t1, best_e) if best_e else t2 - t1
+            best_c = min(t1 - t0, best_c) if best_c is not None else t1 - t0
+            best_e = min(t2 - t1, best_e) if best_e is not None else t2 - t1
         out[name] = {
             "construct": round(best_c, 3),
             "execute": round(best_e, 3),

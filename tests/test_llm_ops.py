@@ -556,6 +556,29 @@ def test_kmeans_empty_input_and_k_exceeding_n(spark):
     assert len({r.cluster for r in out}) == 3
 
 
+def test_kmeans_and_pq_accept_column_names_with_spaces(embeddings):
+    """Column names are spliced into selectExpr strings backtick-quoted: an id
+    and a vector column whose names hold a space give the same assignments
+    and codes as the bare names."""
+    from kda_flink_demo_spark.operators.llm import kmeans
+    from kda_flink_demo_spark.operators.llm.embeddings import pq_encode
+
+    spaced = embeddings.withColumnRenamed("vec_id", "vec id").withColumnRenamed(
+        "embedding", "the vector"
+    )
+    kw = {"id_col": "vec id", "vec_col": "the vector"}
+
+    got = kmeans.kmeans_assign(spaced, k=5, iters=2, **kw)
+    assert got.columns == ["vec id", "cluster", "dist2"]
+    want = kmeans.kmeans_assign(embeddings, k=5, iters=2)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+    got = pq_encode(spaced, m=4, subdim=4, k=4, iters=2, **kw)
+    assert got.columns == ["vec id", "sub", "code", "dist2"]
+    want = pq_encode(embeddings, m=4, subdim=4, k=4, iters=2)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
 def test_semantic_dedup_pairs_within_clusters_only(embeddings):
     """Every emitted pair must share a k-means cluster (blocking soundness)
     and carry a cosine at/above the threshold."""

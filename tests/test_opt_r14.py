@@ -189,6 +189,18 @@ def test_narrow_checkpoint_values_and_partitions(spark):
     assert wide.rdd.getNumPartitions() == 4  # want 10 parts > current 4: keep
 
 
+def test_narrow_checkpoint_fails_loudly_when_checkpoint_did_not_run(spark, monkeypatch):
+    """If the checkpoint action never runs the observed plan, the row count
+    never arrives: narrow_checkpoint must raise a clear error, not block
+    forever in Observation.get."""
+    from kda_flink_demo_spark.functions import narrow_checkpoint
+
+    df = spark.range(0, 100, 1, 4)
+    monkeypatch.setattr(type(df), "localCheckpoint", lambda self, eager=True: self)
+    with pytest.raises(RuntimeError, match="narrow_checkpoint: the observed action"):
+        narrow_checkpoint(df, 10)
+
+
 def test_bpe_train_degenerate_corpus_emits_no_step_rows(spark):
     """A corpus whose vocabulary runs out of adjacent pairs mid-training
     emits NO row for the pair-less steps (the pre-r14 behavior the lazy-argmax

@@ -5,6 +5,8 @@ replay guarantee (the reference's O5 effectively-exactly-once behavior)."""
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
 
 import pytest
@@ -81,6 +83,36 @@ def _run(spark, result, sink, checkpoint):
     q = jobs.run_to_sink(result, sink, checkpoint)
     q.awaitTermination(300)
     assert not q.isActive
+
+
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n: int):
+    """Run the block with the session's batch shuffle-partition count at
+    ``n`` (other test modules share the session and may have changed it)."""
+    prev = spark.conf.get(jobs.SHUFFLE_PARTITIONS)
+    spark.conf.set(jobs.SHUFFLE_PARTITIONS, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(jobs.SHUFFLE_PARTITIONS, prev)
+
+
+def _recorded_partitions(checkpoint: str) -> list[str]:
+    """The shuffle-partition count a checkpoint's offset log recorded for each
+    planned batch (line 2 of ``offsets/<n>`` is the batch metadata)."""
+    out = []
+    offsets = os.path.join(checkpoint, "offsets")
+    for name in os.listdir(offsets):
+        if name.isdigit():
+            with open(os.path.join(offsets, name)) as f:
+                meta = json.loads(f.read().splitlines()[1])
+            out.append(meta["conf"][jobs.SHUFFLE_PARTITIONS])
+    return out
+
+
+def _state_partition_dirs(checkpoint: str) -> int:
+    """State-store partitions of the query's first stateful operator."""
+    return sum(1 for d in os.listdir(os.path.join(checkpoint, "state", "0")) if d.isdigit())
 
 
 def test_streaming_tumbling_matches_batch(spark, replay_dir, tmp_path):
@@ -187,7 +219,11 @@ def test_streaming_windows_match_batch(spark, replay_dir, tmp_path, job_name, ba
 def test_crash_recovery_mid_stream(spark, replay_dir, tmp_path):
     """Stronger O5 check: stop the query after the first micro-batch (simulated
     crash), restart from the checkpoint, drain — final sink must equal the batch
-    computation exactly (no lost or double-counted windows)."""
+    computation exactly (no lost or double-counted windows).
+
+    Phase 1 is started by hand at the batch value of 32 partitions; the
+    run_to_sink restart would cap a NEW query below that, but the checkpoint's
+    recorded count must win (a changed count would misroute the state)."""
     import time
 
     sink = DuckDBUpsertSink(
@@ -195,27 +231,33 @@ def test_crash_recovery_mid_stream(spark, replay_dir, tmp_path):
     )
     ckpt = str(tmp_path / "crash_ckpt")
 
-    # phase 1: continuous trigger, kill after ≥1 committed batch
-    q = (
-        jobs.job_tumbling(_stream(spark, replay_dir))
-        .writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        if any(p["numInputRows"] > 0 for p in (q.recentProgress or [])):
-            break
-        time.sleep(0.5)
-    q.stop()
-    _, mid = sink.read_all()
+    with _shuffle_partitions(spark, 32):
+        # phase 1: continuous trigger, kill after ≥1 committed batch
+        q = (
+            jobs.job_tumbling(_stream(spark, replay_dir))
+            .writeStream.outputMode("append")
+            .foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="1 second")
+            .start()
+        )
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            if any(p["numInputRows"] > 0 for p in (q.recentProgress or [])):
+                break
+            time.sleep(0.5)
+        q.stop()
+        _, mid = sink.read_all()
+        n_batches = len(_recorded_partitions(ckpt))
 
-    # phase 2: restart from the same checkpoint, drain the rest
-    q2 = jobs.run_to_sink(jobs.job_tumbling(_stream(spark, replay_dir)), sink, ckpt)
-    q2.awaitTermination(300)
+        # phase 2: restart from the same checkpoint, drain the rest
+        q2 = jobs.run_to_sink(jobs.job_tumbling(_stream(spark, replay_dir)), sink, ckpt)
+        q2.awaitTermination(300)
     cols, got = sink.read_all()
+
+    recorded = _recorded_partitions(ckpt)
+    assert len(recorded) > n_batches and set(recorded) == {"32"}
+    assert _state_partition_dirs(ckpt) == 32
 
     batch = tumbling_counts(
         load_table(spark, SF_DIR, "events").select(
@@ -234,6 +276,128 @@ def test_crash_recovery_mid_stream(spark, replay_dir, tmp_path):
     assert len(got_map) > len(mid), "restart should have made progress beyond the crash point"
     for k, v in got_map.items():
         assert expected[k] == v, f"window {k}: stream={v} batch={expected[k]}"
+
+
+def test_run_to_sink_caps_state_partitions_at_task_slots(spark, replay_dir, tmp_path):
+    """A NEW run_to_sink query gets min(batch partitions, defaultParallelism)
+    shuffle/state partitions — recorded in its offset log and laid out as
+    that many state-store dirs — while the caller's session keeps the batch
+    value."""
+    sink = DuckDBUpsertSink(
+        str(tmp_path / "cap.duckdb"), "tumbling", jobs.TUMBLING_SINK_KEYS, jobs.TUMBLING_SINK_SCHEMA
+    )
+    ckpt = str(tmp_path / "cap_ckpt")
+    want = min(32, spark.sparkContext.defaultParallelism)
+    with _shuffle_partitions(spark, 32):
+        q = jobs.run_to_sink(jobs.job_tumbling(_stream(spark, replay_dir)), sink, ckpt)
+        assert spark.conf.get(jobs.SHUFFLE_PARTITIONS) == "32"
+        q.awaitTermination(300)
+        assert spark.conf.get(jobs.SHUFFLE_PARTITIONS) == "32"
+    assert not q.isActive and q.exception() is None
+    assert set(_recorded_partitions(ckpt)) == {str(want)}
+    assert _state_partition_dirs(ckpt) == want
+    assert sink.read_all()[1], "the capped query must still emit closed windows"
+
+
+def test_concurrent_run_to_sink_starts_restore_the_session_value(spark, replay_dir, tmp_path):
+    """Concurrent run_to_sink calls on one session must not restore each
+    other's capped value: after eight concurrent starts on a short switch
+    interval, the session still holds the batch value and every query
+    recorded the capped one."""
+    import sys
+    import threading
+
+    want = str(min(32, spark.sparkContext.defaultParallelism))
+    n = 8
+    queries, errors = [], []
+
+    def start(i):
+        try:
+            sink = DuckDBUpsertSink(
+                str(tmp_path / f"c{i}.duckdb"), "tumbling",
+                jobs.TUMBLING_SINK_KEYS, jobs.TUMBLING_SINK_SCHEMA,
+            )
+            stream = jobs.job_tumbling(_stream(spark, replay_dir))
+            queries.append((jobs.run_to_sink(stream, sink, str(tmp_path / f"c{i}")), i))
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with _shuffle_partitions(spark, 32):
+            threads = [threading.Thread(target=start, args=(i,)) for i in range(n)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(300)
+            assert not any(t.is_alive() for t in threads)
+            assert spark.conf.get(jobs.SHUFFLE_PARTITIONS) == "32"
+            assert spark.conf.get(jobs.CHECKPOINT_FILE_MANAGER, None) is None
+    finally:
+        sys.setswitchinterval(interval)
+        for q, _ in queries:
+            q.awaitTermination(300)
+    assert not errors, errors
+    assert len(queries) == n
+    for q, i in queries:
+        assert not q.isActive and q.exception() is None
+        assert set(_recorded_partitions(str(tmp_path / f"c{i}"))) == {want}
+
+
+def _checkpoint_managers(query) -> set[str]:
+    """Class names of the checkpoint file managers behind a running query's
+    offset and commit logs and its file sources' logs (a private field,
+    read by reflection)."""
+    sq = query._jsq.streamingQuery()
+    logs = [sq.offsetLog(), sq.commitLog()]
+    sources = sq.sources()
+    for i in range(sources.size()):
+        src = sources.apply(i)
+        field = src.getClass().getDeclaredField("metadataLog")
+        field.setAccessible(True)
+        logs.append(field.get(src))
+    return {log.fileManager().getClass().getName() for log in logs}
+
+
+def test_run_to_sink_writes_local_checkpoints_through_filesystem_api(spark, replay_dir, tmp_path):
+    """A run_to_sink query on a local checkpoint writes every log through the
+    Hadoop FileSystem API — including the source's log, which Spark builds
+    from the caller's session after start() returns — and leaves the
+    caller's session without a checkpoint-manager setting."""
+    sink = DuckDBUpsertSink(
+        str(tmp_path / "fs.duckdb"), "tumbling", jobs.TUMBLING_SINK_KEYS, jobs.TUMBLING_SINK_SCHEMA
+    )
+    assert spark.conf.get(jobs.CHECKPOINT_FILE_MANAGER, None) is None
+    q = jobs.run_to_sink(jobs.job_tumbling(_stream(spark, replay_dir)), sink, str(tmp_path / "fs"))
+    try:
+        assert spark.conf.get(jobs.CHECKPOINT_FILE_MANAGER, None) is None
+        managers = _checkpoint_managers(q)
+    finally:
+        q.awaitTermination(300)
+    assert managers == {jobs.FS_CHECKPOINT_FILE_MANAGER}
+    assert q.exception() is None and sink.read_all()[1]
+
+
+def test_run_to_sink_keeps_a_named_checkpoint_manager(spark, replay_dir, tmp_path):
+    """A session that names a checkpoint file manager keeps it: run_to_sink
+    only replaces Spark's default."""
+    default = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    sink = DuckDBUpsertSink(
+        str(tmp_path / "fc.duckdb"), "tumbling", jobs.TUMBLING_SINK_KEYS, jobs.TUMBLING_SINK_SCHEMA
+    )
+    spark.conf.set(jobs.CHECKPOINT_FILE_MANAGER, default)
+    try:
+        q = jobs.run_to_sink(jobs.job_tumbling(_stream(spark, replay_dir)), sink, str(tmp_path / "fc"))
+        try:
+            assert spark.conf.get(jobs.CHECKPOINT_FILE_MANAGER) == default
+            managers = _checkpoint_managers(q)
+        finally:
+            q.awaitTermination(300)
+    finally:
+        spark.conf.unset(jobs.CHECKPOINT_FILE_MANAGER)
+    assert managers == {default}
+    assert q.exception() is None
 
 
 def test_streaming_session_windows_match_batch(spark, replay_dir, tmp_path):
