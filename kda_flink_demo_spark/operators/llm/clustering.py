@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from kda_flink_demo_spark.functions import narrow_checkpoint
+from kda_flink_demo_spark.functions import _observed, narrow_checkpoint
 
 # target edge rows per partition for the size-adaptive narrow (see
 # connected_components: ~25 bytes/edge → ~5 MB partitions; a fixture-scale
@@ -131,9 +131,8 @@ def connected_components(
     # and builds on the driver, so past the node threshold both per-round
     # joins are pinned to spill-safe sort-merge (see _loop_join_big). The
     # node count rides the init checkpoint's own job (Observation).
-    hinted = (
-        (lambda df: df.hint("merge")) if _loop_join_big(n_obs.get["n"]) else (lambda df: df)
-    )
+    n_nodes = _observed(n_obs, labels.sparkSession, "connected_components")["n"]
+    hinted = (lambda df: df.hint("merge")) if _loop_join_big(n_nodes) else (lambda df: df)
     converged = False
     for it in range(max_iter):
         # every node adopts min(own label, neighbors' labels); the convergence
@@ -224,7 +223,10 @@ def connected_components(
             )
         # the convergence probe rides the checkpoint job above (Observation);
         # sum-of-changed == 0 is exactly the old "no _changed row exists"
-        changed = c_obs.get["n_changed"] or 0
+        changed = (
+            _observed(c_obs, new_labels.sparkSession, "connected_components")["n_changed"]
+            or 0
+        )
         labels = new_labels.drop("_changed")
         if changed == 0:
             converged = True

@@ -1,38 +1,40 @@
-"""Streaming twins for SCD2 history and corpus snapshot diff — fold CDC /
-snapshot micro-batches into standing stores via ``foreachBatch``, using the
-crash-safe primitives in ``streaming/store.py`` (same template as the sketch
-store; reference parity: the upsert-sink family O2–O8,
-/root/reference/src/main/java/ .../StreamJobSingle.java sinks, generalized to
-materialized-view maintenance).
+"""Standing stores: streaming folds (call from ``foreachBatch``) that keep a
+materialized view current across micro-batches and sessions (reference
+parity: the upsert-sink family O2–O8, generalized to materialized-view
+maintenance). The on-disk protocols — ``_SUCCESS`` visibility, promote,
+segments, the cseg shadow and crash-safe compaction — are written once in
+``streaming/store.py``; each store here is only what it writes per batch,
+how it merges and how it reads out.
 
-SCD2 store
-----------
-``update_scd2_store`` maintains the COMPRESSED change log (each key's real
-transitions, ``operators/cdc.py:scd2_compress``): per batch, only the
-standing rows of keys PRESENT in the batch are re-compressed together with
-the batch; untouched keys pass through untouched — per-batch work is
-O(batch + affected keys' history), never the full store. A replayed batch
-unions rows that are either already-kept transitions (compression dedupes
-them NULL-safely) or rows that were compressed away before (compressed away
-again), so replay is IDEMPOTENT. History (valid_from / valid_to /
-is_current) is derived at read time by ``scd2_from_store`` — the lead()
-interval close must see each key's full transition list anyway, and deriving
-it keeps the store minimal. Contract (the standard CDC assumption): batches
-arrive per-key in event-time order; a late change older than a key's stored
-transitions would need that key's raw log replayed.
+Promote stores (one standing table, replaced per fold)
+    * SCD2 (``update_scd2_store`` / ``scd2_from_store``): the COMPRESSED
+      change log (each key's real transitions, ``operators/cdc.py:
+      scd2_compress``). Per batch only the standing rows of keys PRESENT in
+      the batch are re-compressed with it — O(batch + affected keys'
+      history), never the full store. A replayed batch unions rows that are
+      already-kept transitions (compression dedupes them NULL-safely) or were
+      compressed away before (compressed away again), so replay is
+      idempotent. History (valid_from / valid_to / is_current) is derived at
+      read time. Contract (the standard CDC assumption): batches arrive
+      per-key in event-time order.
+    * BPE merge table (``train_bpe_to_store`` / ``bpe_merges_from_store``).
 
-Snapshot version store
-----------------------
-``update_snapshot_version_store`` persists each micro-batch (a corpus
-snapshot) as a 16-byte ``(id, xxhash64(text))`` projection under
-``version=<batch_id>`` — document text is never retained or shuffled.
-Writes are idempotent per version (a replayed batch rewrites identical
-bytes into the same directory) and a partial version directory (no
-``_SUCCESS``) is invisible to readers. ``diff_snapshot_versions`` then
-computes added / removed / changed between ANY two retained versions from
-the projections alone — the streaming twin of
-``operators/llm/versioning.py:snapshot_diff``, with the diff available
-after the fact for every historical pair, not just consecutive ones.
+Segment stores (one ``seg=<batch_id>`` directory per batch)
+    * count-min cells (``update_cms_store``), drift profiles
+      (``update_drift_store``), PCA sufficient statistics
+      (``update_pca_stats_store``) and CUMULATE partials
+      (``update_cumulate_store``) merge by ADDITION;
+    * span-hash, aHash and editdist indexes (``update_*_index_store``) are
+      gates: each batch is cleaned against the index without its own
+      segment, then adds its own keys; they merge by set union.
+    * snapshot versions (``update_snapshot_version_store``) keep one 16-byte
+      ``(id, xxhash64(text))`` projection per ``version=<batch_id>``, so
+      ``diff_snapshot_versions`` diffs ANY two retained versions without the
+      text.
+
+Sinks (``enrich_batch_with_scd2``, ``update_quarantine_store`` and the index
+gates) land each batch under ``batch=<batch_id>`` by overwrite, so a replay
+rewrites the same partition.
 """
 
 from __future__ import annotations
@@ -43,7 +45,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kda_flink_demo_spark.operators.cdc import scd2_compress, scd2_history
-from kda_flink_demo_spark.streaming.store import is_complete, promote, recover_standing
+from kda_flink_demo_spark.streaming.store import (
+    committed_dirs,
+    compact_segments,
+    compact_when_due,
+    part_dir,
+    promote,
+    read_segments,
+    recover_standing,
+    write_part,
+)
 
 
 def update_scd2_store(
@@ -55,8 +66,7 @@ def update_scd2_store(
     tie_col: str | None = None,
 ) -> None:
     """Fold one micro-batch of change rows into the standing compressed
-    transition log (call from ``foreachBatch``; see module docstring for the
-    idempotence/ordering contract)."""
+    transition log."""
     spark = batch_df.sparkSession
     cols = [*keys, *attr_cols, ts_col, *([tie_col] if tie_col else [])]
     batch = batch_df.select(*cols)
@@ -90,10 +100,6 @@ def scd2_from_store(
     )
 
 
-def _version_dir(store_path: str, version: int) -> str:
-    return f"{store_path.rstrip('/')}/version={int(version)}"
-
-
 def update_snapshot_version_store(
     batch_df: DataFrame,
     store_path: str,
@@ -102,31 +108,16 @@ def update_snapshot_version_store(
     text_col: str = "text",
 ) -> None:
     """Persist one snapshot micro-batch's (id, hash) projection as
-    ``version=<batch_id>`` (call from ``foreachBatch(lambda df, bid: ...)``);
-    per-version overwrite makes checkpoint replays idempotent."""
+    ``version=<batch_id>``; document text is never retained or shuffled."""
     proj = batch_df.select(
         F.col(id_col).alias(id_col), F.xxhash64(F.col(text_col)).alias("text_hash")
     )
-    proj.write.mode("overwrite").parquet(_version_dir(store_path, batch_id))
+    write_part(proj, store_path, batch_id, "version")
 
 
 def list_snapshot_versions(spark: SparkSession, store_path: str) -> list[int]:
-    """Committed versions only (a half-written ``version=`` dir without
-    ``_SUCCESS`` is invisible until its replay rewrites it)."""
-    from kda_flink_demo_spark.streaming.store import _fs
-
-    store = store_path.rstrip("/")
-    fs, hpath = _fs(spark, store)
-    if not fs.exists(hpath(store)):
-        return []
-    out = []
-    for st in fs.listStatus(hpath(store)):
-        name = st.getPath().getName()
-        if name.startswith("version="):
-            v = int(name.split("=", 1)[1])
-            if is_complete(spark, f"{store}/{name}"):
-                out.append(v)
-    return sorted(out)
+    """Committed versions only, ascending."""
+    return list(committed_dirs(spark, store_path, kind="version"))
 
 
 def enrich_batch_with_scd2(
@@ -146,16 +137,16 @@ def enrich_batch_with_scd2(
     loop: each fact micro-batch joins the STANDING SCD2 store (maintained by
     :func:`update_scd2_store`, possibly by another stream) picking up the
     attributes valid AT each fact's own timestamp, then lands under
-    ``sink_path/batch=<id>`` (idempotent per-batch overwrite). Call from
-    ``foreachBatch``. Re-deriving the history from the store inside the batch
-    (rather than a stream-static join against a fixed plan) guarantees each
-    batch sees the store's LATEST promoted state. ``attr_aliases`` renames
-    the picked-up attributes (required when facts carry same-named columns).
-    Batches arriving BEFORE the first dimension state land with typed NULL
-    attributes: pass ``attr_types`` (Spark SQL type strings, default
-    "string") matching the store's real attribute types — otherwise a
-    string-NULL batch 0 and a double batch 1 would leave the sink with
-    conflicting parquet schemas that whole-sink reads cannot merge.
+    ``sink_path/batch=<id>``. Re-deriving the history from the store inside
+    the batch (rather than a stream-static join against a fixed plan)
+    guarantees each batch sees the store's LATEST promoted state.
+    ``attr_aliases`` renames the picked-up attributes (required when facts
+    carry same-named columns). Batches arriving BEFORE the first dimension
+    state land with typed NULL attributes: pass ``attr_types`` (Spark SQL
+    type strings, default "string") matching the store's real attribute
+    types — otherwise a string-NULL batch 0 and a double batch 1 would leave
+    the sink with conflicting parquet schemas that whole-sink reads cannot
+    merge.
 
     Leakage note: correctness of "state as of the fact's time" only needs
     the store to CONTAIN each key's transitions up to that time — extra
@@ -179,7 +170,7 @@ def enrich_batch_with_scd2(
         out = batch_df
         for alias, t in zip(out_names, types):
             out = out.withColumn(alias, F.lit(None).cast(t))
-    out.write.mode("overwrite").parquet(f"{sink_path.rstrip('/')}/batch={int(batch_id)}")
+    write_part(out, sink_path, batch_id, "batch")
 
 
 def update_quarantine_store(
@@ -193,22 +184,19 @@ def update_quarantine_store(
     micro-batch by the rule dictionary (``validation.quarantine_split``),
     landing passing rows under ``good_path/batch=<id>`` and violating rows —
     tagged with the names of every failed rule — under
-    ``quarantine_path/batch=<id>``. Call from
-    ``foreachBatch(lambda df, bid: update_quarantine_store(df, bid, ...))``.
-
-    Idempotence is per-batch-partition overwrite (the snapshot-version-store
-    move): a checkpoint replay rewrites identical bytes into the same
-    ``batch=`` directory instead of appending duplicates, and a half-written
-    partition (no ``_SUCCESS``) is simply rewritten on replay. The split is
-    one map-side projection — both branches prune from the same scan; no
-    shuffle enters the gate at any scale."""
+    ``quarantine_path/batch=<id>``. The split is one map-side projection —
+    both branches prune from the same scan; no shuffle enters the gate at
+    any scale."""
     from kda_flink_demo_spark.operators.validation import quarantine_split
 
     good, bad = quarantine_split(batch_df, rules)
-    good.write.mode("overwrite").parquet(f"{good_path.rstrip('/')}/batch={int(batch_id)}")
-    bad.withColumn("violations", F.array_join("violations", ",")).write.mode(
-        "overwrite"
-    ).parquet(f"{quarantine_path.rstrip('/')}/batch={int(batch_id)}")
+    write_part(good, good_path, batch_id, "batch")
+    write_part(
+        bad.withColumn("violations", F.array_join("violations", ",")),
+        quarantine_path,
+        batch_id,
+        "batch",
+    )
 
 
 def diff_snapshot_versions(
@@ -221,19 +209,20 @@ def diff_snapshot_versions(
     """added / removed / changed ids between two retained versions, computed
     from the 16-byte projections alone (same full-outer-join shape and
     statuses as the batch ``snapshot_diff``)."""
-    o = spark.read.parquet(_version_dir(store_path, old_version)).select(
-        F.col(id_col).alias("_id"), F.col("text_hash").alias("_ho")
-    )
-    n = spark.read.parquet(_version_dir(store_path, new_version)).select(
-        F.col(id_col).alias("_id"), F.col("text_hash").alias("_hn")
-    )
+
+    def side(version: int, h: str) -> DataFrame:
+        return spark.read.parquet(part_dir(store_path, "version", version)).select(
+            F.col(id_col).alias("_id"), F.col("text_hash").alias(h)
+        )
+
     status = (
         F.when(F.col("_ho").isNull(), F.lit("added"))
         .when(F.col("_hn").isNull(), F.lit("removed"))
         .when(F.col("_ho") != F.col("_hn"), F.lit("changed"))
     )
     return (
-        o.join(n, "_id", "full_outer")
+        side(old_version, "_ho")
+        .join(side(new_version, "_hn"), "_id", "full_outer")
         .select(F.col("_id").alias(id_col), status.alias("status"))
         .filter(F.col("status").isNotNull())
     )
@@ -241,26 +230,22 @@ def diff_snapshot_versions(
 
 # ---------------------------------------------------------------------------
 # Standing span-hash index (streaming twin of operators/llm/dedup.py:
-# span_dedup_apply — r06 VERDICT directive 7)
+# span_dedup_apply)
 # ---------------------------------------------------------------------------
 
 
-def _seg_dir(store_path: str, batch_id: int) -> str:
-    return f"{store_path.rstrip('/')}/seg={int(batch_id)}"
+def _span_merge(df: DataFrame) -> DataFrame:
+    return df.select("h").distinct()
 
 
 def read_span_index(
     spark: SparkSession, store_path: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
-    """Union of all COMMITTED index segments (column ``h``); None before the
-    first fold. A half-written segment (no ``_SUCCESS``) is invisible until
-    its replay rewrites it — same visibility rule as the snapshot store.
-    ``exclude_batch`` drops that batch's own segment: on a checkpoint replay a
-    doc must never be cleaned against spans it itself introduced."""
-    segs = _cms_segment_frames(spark, store_path, exclude_batch=exclude_batch)
-    if not segs:
-        return None
-    return spark.read.parquet(*segs).select("h")
+    """The standing span-hash set (column ``h``); None before the first
+    fold. A replaying batch passes its own id: a doc must never be cleaned
+    against spans it itself introduced."""
+    segs = read_segments(spark, store_path, exclude_batch)
+    return None if segs is None else segs.select("h")
 
 
 def update_span_index_store(
@@ -272,22 +257,13 @@ def update_span_index_store(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> None:
-    """Fold one micro-batch through the standing span-dedup gate (call from
-    ``foreachBatch(lambda df, bid: ...)``): clean the batch against the
-    standing index + within-batch earlier docs (``dedup.span_dedup_probe``),
-    land the cleaned rows under ``sink_path/batch=<id>``, then commit the
-    batch's own distinct span hashes as index segment ``seg=<id>``.
-
-    The index is APPEND-ONLY segments — per-batch cost is O(batch), never a
-    full index rewrite (the snapshot-version-store move, not the SCD2
-    promote), and the corpus-sized index itself never shuffles (the probe
-    broadcasts batch hashes both ways). Idempotence: a checkpoint replay
-    overwrites both the ``batch=`` sink partition and the ``seg=`` segment
-    with identical bytes — the standing index visible to batch N is exactly
-    segments < N either way (its own half-written segment only ever ADDS
-    hashes the batch itself contains, and a doc never probes its own spans
-    cross-segment because the replayed segment is rewritten before any later
-    batch reads it)."""
+    """Fold one micro-batch through the standing span-dedup gate: clean the
+    batch against the standing index + within-batch earlier docs
+    (``dedup.span_dedup_probe``), land the cleaned rows under
+    ``sink_path/batch=<id>``, then commit the batch's own distinct span
+    hashes as its segment. Per-batch cost is O(batch), never an index
+    rewrite, and the corpus-sized index never shuffles (the probe broadcasts
+    batch hashes both ways)."""
     from kda_flink_demo_spark.operators.llm.dedup import (
         span_dedup_probe,
         span_index_hashes,
@@ -298,38 +274,32 @@ def update_span_index_store(
     cleaned = span_dedup_probe(
         batch_df, idx, text_col=text_col, id_col=id_col, span=span
     )
-    cleaned.write.mode("overwrite").parquet(
-        f"{sink_path.rstrip('/')}/batch={int(batch_id)}"
+    write_part(cleaned, sink_path, batch_id, "batch")
+    write_part(
+        span_index_hashes(batch_df, text_col=text_col, id_col=id_col, span=span),
+        store_path,
+        batch_id,
     )
-    span_index_hashes(batch_df, text_col=text_col, id_col=id_col, span=span).write.mode(
-        "overwrite"
-    ).parquet(_seg_dir(store_path, batch_id))
 
 
 def compact_span_index_store(
     spark: SparkSession, store_path: str, upto_batch: int
 ) -> None:
-    """Merge every committed span-index segment with id ≤ ``upto_batch`` into
-    ONE distinct hash segment — same shared crash-safe protocol as the CMS
-    and aHash stores (``_compact_segment_store``); the span-hash set, and so
-    every later gate decision, is identical before, during (cseg shadow) and
-    after. Same replay constraint: compact only ≤ latest − 1."""
-    _compact_segment_store(
-        spark, store_path, upto_batch, lambda df: df.select("h").distinct()
-    )
+    """Compact span-index segments ≤ ``upto_batch`` into one distinct hash
+    segment; the hash set, and so every later gate decision, is unchanged."""
+    compact_segments(spark, store_path, upto_batch, _span_merge)
 
 
 # ---------------------------------------------------------------------------
 # Standing BPE merge-table store (tokenizer trained once, applied in any
-# later session — r06 VERDICT directive 6)
+# later session)
 # ---------------------------------------------------------------------------
 
 
 def train_bpe_to_store(
     df: DataFrame, store_path: str, steps: int = 4, text_col: str = "text"
 ) -> None:
-    """Train the BPE merge table on ``df`` and promote it crash-safely
-    (``.next`` staging + delete/rename, the sketch-store move) so a tokenizer
+    """Train the BPE merge table on ``df`` and promote it, so a tokenizer
     trained in one session encodes in the next."""
     from kda_flink_demo_spark.operators.llm.text import bpe_merge_train
 
@@ -337,8 +307,8 @@ def train_bpe_to_store(
 
 
 def bpe_merges_from_store(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """The stored merge table, promoting an interrupted ``.next`` first;
-    None when no committed store exists (caller trains)."""
+    """The stored merge table; None when no committed store exists (caller
+    trains)."""
     if recover_standing(spark, store_path):
         return spark.read.parquet(store_path.rstrip("/"))
     return None
@@ -350,29 +320,8 @@ def bpe_merges_from_store(spark: SparkSession, store_path: str) -> DataFrame | N
 # ---------------------------------------------------------------------------
 
 
-def _committed_seg_paths(
-    spark: SparkSession, store_path: str, exclude_batch: int | None = None
-) -> list[str]:
-    """All COMMITTED ``seg=<batch_id>`` directories under a segment store
-    (the span-index visibility rule, factored for reuse): half-written
-    segments (no ``_SUCCESS``) are invisible until their replay rewrites
-    them; ``exclude_batch`` drops that batch's own segment."""
-    from kda_flink_demo_spark.streaming.store import _fs
-
-    store = store_path.rstrip("/")
-    fs, hpath = _fs(spark, store)
-    if not fs.exists(hpath(store)):
-        return []
-    out = []
-    for st in fs.listStatus(hpath(store)):
-        name = st.getPath().getName()
-        if not name.startswith("seg="):
-            continue
-        if exclude_batch is not None and int(name.split("=", 1)[1]) == int(exclude_batch):
-            continue
-        if is_complete(spark, f"{store}/{name}"):
-            out.append(f"{store}/{name}")
-    return out
+def _cms_merge(df: DataFrame) -> DataFrame:
+    return df.groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def update_cms_store(
@@ -384,40 +333,34 @@ def update_cms_store(
     width: int = 512,
 ) -> None:
     """Fold one micro-batch's item stream into a standing count-min frequency
-    store (call from ``foreachBatch(lambda df, bid: ...)``) — the streaming
-    frequency monitor next to the HLL/Theta distinct store
-    (``update_sketch_store``).
+    store — the streaming frequency monitor next to the HLL/Theta distinct
+    store (``update_sketch_store``).
 
-    CMS cells merge by ADDITION, which is associative/commutative but NOT
-    idempotent — re-merging a checkpoint-replayed batch into a single
-    standing table would double-count it (the failure mode the HLL/Theta
-    store never has, because register-max/set-union absorb replays). The
-    store therefore keeps ONE ``seg=<batch_id>`` cell table per batch,
-    written with overwrite: a replay REWRITES its own segment with identical
-    bytes instead of re-adding, and the standing sketch is exact for any
-    replay history. Per-segment size is the constant depth×width regardless
-    of batch size, so even 10⁵ folded batches stay a cheap scan; a
-    compaction job may merge closed segments (pure cell addition) without
-    changing any readout."""
+    CMS cells merge by ADDITION, which is NOT idempotent — re-merging a
+    replayed batch into one standing table would double-count it (the
+    HLL/Theta store never has this problem: register-max and set-union
+    absorb replays). Hence one cell table per batch, which a replay
+    rewrites. A segment is the constant depth×width cells regardless of
+    batch size, so even 10⁵ folded batches stay a cheap scan."""
     from kda_flink_demo_spark.operators.sketches import cms_state
 
     cells = cms_state(batch_df, item_col=item_col, depth=depth, width=width)
-    cells.write.mode("overwrite").parquet(_seg_dir(store_path, batch_id))
+    write_part(cells, store_path, batch_id)
 
 
 def cms_from_store(spark: SparkSession, store_path: str) -> DataFrame | None:
     """The standing sketch: committed segments summed cell-wise — equals the
     one-pass ``cms_state`` over every row ever folded (bit-exact, pinned by
-    tests, INCLUDING mid-compaction states — see `compact_cms_store`). None
-    before the first committed fold."""
-    segs = _cms_segment_frames(spark, store_path)
-    if not segs:
-        return None
-    return (
-        spark.read.parquet(*segs)
-        .groupBy("d", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    tests, including mid-compaction states). None before the first
+    committed fold."""
+    segs = read_segments(spark, store_path)
+    return None if segs is None else _cms_merge(segs)
+
+
+def compact_cms_store(spark: SparkSession, store_path: str, upto_batch: int) -> None:
+    """Compact CMS segments ≤ ``upto_batch`` into one (cell-wise sum — the
+    readout is bit-identical before and after, test-pinned)."""
+    compact_segments(spark, store_path, upto_batch, _cms_merge)
 
 
 # ---------------------------------------------------------------------------
@@ -433,14 +376,13 @@ def update_drift_store(
     dims: dict,
 ) -> None:
     """Fold one micro-batch's distribution PROFILE into a standing drift
-    store (call from ``foreachBatch``): the batch's per-(dim, bucket) counts
-    land as segment ``seg=<batch_id>`` — bucket-count-sized regardless of
-    batch size, overwrite-idempotent on replay like the CMS store (counts
-    add, so replay must rewrite, never re-add). The standing store then
-    answers PSI drift between ANY two fold ranges after the fact (this
-    week's ingest vs last month's) from the retained profiles alone — the
-    batch `distribution_drift` would need both corpora rescanned; this is
-    the snapshot-version-store move applied to distributions."""
+    store: the batch's per-(dim, bucket) counts, bucket-count-sized
+    regardless of batch size (counts add, so a replay must rewrite, never
+    re-add). The store then answers PSI drift between ANY two fold ranges
+    after the fact (this week's ingest vs last month's) from the retained
+    profiles alone — the batch `distribution_drift` would need both corpora
+    rescanned. Drift segments are never compacted: ``drift_between``
+    addresses single batches."""
     from kda_flink_demo_spark.operators.validation import dim_bucket_rows
 
     counts = (
@@ -448,7 +390,7 @@ def update_drift_store(
         .groupBy("dim", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    counts.write.mode("overwrite").parquet(_seg_dir(store_path, batch_id))
+    write_part(counts, store_path, batch_id)
 
 
 def drift_between(
@@ -465,13 +407,9 @@ def drift_between(
     counting the union). None if any requested batch isn't committed yet."""
     from kda_flink_demo_spark.operators.validation import psi_report
 
-    segs = {
-        int(p.rsplit("=", 1)[1]): p
-        for p in _committed_seg_paths(spark, store_path)
-    }
     # a batch id repeated within a list would read the same parquet path
-    # twice and silently inflate that side's counts (advice finding); an id
-    # on BOTH sides makes the comparison meaningless — caller error
+    # twice and silently inflate that side's counts; an id on BOTH sides
+    # makes the comparison meaningless — caller error
     old_ids, new_ids = sorted(set(old_batches)), sorted(set(new_batches))
     overlap = set(old_ids) & set(new_ids)
     if overlap:
@@ -480,6 +418,7 @@ def drift_between(
             "old_batches and new_batches"
         )
     need = [*old_ids, *new_ids]
+    segs = committed_dirs(spark, store_path)
     if not need or any(b not in segs for b in need):
         return None
 
@@ -500,172 +439,6 @@ def drift_between(
     return psi_report(counted, psi_micro_threshold)
 
 
-def _cseg_dir(store_path: str, upto: int) -> str:
-    return f"{store_path.rstrip('/')}/cseg={int(upto)}"
-
-
-def compact_cms_store(spark: SparkSession, store_path: str, upto_batch: int) -> None:
-    """Merge every committed CMS segment with id ≤ ``upto_batch`` into ONE
-    segment (cell-wise sum — the readout is bit-identical before and after,
-    test-pinned). Thin wrapper over ``_compact_segment_store``; see it for
-    the crash-safe protocol."""
-    _compact_segment_store(
-        spark,
-        store_path,
-        upto_batch,
-        lambda df: df.groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt")),
-    )
-
-
-def compact_ahash_index_store(
-    spark: SparkSession, store_path: str, upto_batch: int
-) -> None:
-    """Merge every committed aHash-index segment with id ≤ ``upto_batch``
-    into ONE distinct (doc_id, ahash) segment — a billion-image standing
-    index folds one segment per micro-batch and would otherwise accumulate
-    unbounded small files; the index READOUT (and therefore every gate
-    decision) is identical before, during, and after (set-union semantics,
-    so unlike the additive CMS cells the merge is a plain distinct).
-    Same replay constraint as the CMS store: only compact batches beyond the
-    checkpoint's replay horizon (``update_ahash_index_store`` auto-compacts
-    at ``batch_id − 1``, which Structured Streaming guarantees is committed
-    before batch_id starts)."""
-    _compact_segment_store(
-        spark,
-        store_path,
-        upto_batch,
-        lambda df: df.select("doc_id", "ahash").distinct(),
-    )
-
-
-def _compact_segment_store(
-    spark: SparkSession, store_path: str, upto_batch: int, merge
-) -> None:
-    """Merge every committed segment with id ≤ ``upto_batch`` into ONE
-    segment via ``merge`` (a DataFrame → DataFrame reducer whose readout
-    must be invariant under segment regrouping — cell-wise sum for CMS,
-    distinct union for the aHash index), bounding segment count for
-    long-running streams.
-
-    ONLY call for batches beyond the streaming checkpoint's replay horizon:
-    a replay of a compacted batch would rewrite its ``seg=`` dir as a fresh
-    segment and its counts would then exist twice (once inside the compacted
-    segment, once fresh) — the same reason WAL compaction everywhere trails
-    the recovery point.
-
-    Crash-safe protocol (every window covered, fault-injection tested):
-    1. write the merged cells to ``cseg=<upto>`` (committed via _SUCCESS);
-    2. delete the covered ``seg=`` dirs;
-    3. rename ``cseg=<upto>`` → ``seg=<upto>``.
-    Readers (`cms_from_store`) treat a COMMITTED cseg as authoritative for
-    ids ≤ upto and ignore those seg dirs, so a crash after (1) or mid-(2)
-    never double-counts and never loses counts; the next compact or read
-    completes the swap. A half-written cseg (no _SUCCESS) is invisible."""
-    from kda_flink_demo_spark.streaming.store import _fs
-
-    store = store_path.rstrip("/")
-    fs, hpath = _fs(spark, store)
-    # FIRST finish any pending swap from an earlier compaction that crashed
-    # between delete and rename: its committed cseg holds counts whose seg
-    # dirs may already be gone — a NEW compaction that read only seg= dirs
-    # would silently drop them (fault-injection tested).
-    if fs.exists(hpath(store)):
-        committed = []
-        for st in fs.listStatus(hpath(store)):
-            name = st.getPath().getName()
-            if name.startswith("cseg=") and is_complete(spark, f"{store}/{name}"):
-                committed.append(int(name.split("=", 1)[1]))
-        # Recover EVERY committed cseg, including one whose id equals this
-        # call's upto_batch — the old `u != upto_batch` guard meant a retry
-        # with the same upto after a mid-step-2 crash never finished the
-        # swap and instead built a second, subsumed cseg from the surviving
-        # seg dirs (advice finding). Two committed csegs can therefore
-        # coexist transiently: the HIGHER one is authoritative for all ids
-        # <= its own (it merged everything the lower one covers), so the
-        # lower is deleted outright — renaming it into a seg= dir would
-        # double-count its cells.
-        #
-        # ORDER MATTERS (r08 review finding): delete ALL subsumed lower
-        # csegs BEFORE performing the highest one's swap. The reverse order
-        # has a crash window — highest cseg renamed into seg=, lower cseg
-        # still present — where the lower cseg becomes the read shadow and
-        # the renamed seg (which contains its batches) survives the
-        # id-filter, double-counting them; a later recovery would then bake
-        # that in by renaming the leftover too.
-        top = max(committed) if committed else None
-        for u in committed:
-            if u < top:
-                fs.delete(hpath(_cseg_dir(store, u)), True)
-        if top is not None:
-            for p in _committed_seg_paths(spark, store):
-                if int(p.rsplit("=", 1)[1]) <= top:
-                    fs.delete(hpath(p), True)
-            fs.rename(hpath(_cseg_dir(store, top)), hpath(_seg_dir(store, top)))
-    # clamp the compacted segment's id to the NEWEST covered segment: naming
-    # it after a not-yet-folded upto_batch (e.g. a watermark-style id) would
-    # let that future batch's own overwrite destroy the compacted history
-    # (review finding)
-    covered = [
-        p
-        for p in _committed_seg_paths(spark, store)
-        if int(p.rsplit("=", 1)[1]) <= upto_batch
-    ]
-    if not covered:
-        # nothing to merge — but a crash after covered-segment deletion can
-        # leave a committed cseg=<upto> with NO remaining covered segs;
-        # finish its rename so the swap converges
-        orphan = _cseg_dir(store, upto_batch)
-        if is_complete(spark, orphan):
-            fs.rename(hpath(orphan), hpath(_seg_dir(store, upto_batch)))
-        return
-    upto_batch = max(int(p.rsplit("=", 1)[1]) for p in covered)
-    if len(covered) == 1:
-        # a single committed segment is already its own compaction — in
-        # particular, right after the recovery above finishes a pending swap,
-        # rebuilding an identity merge of seg=<upto> would just churn the fs
-        return
-    cseg = _cseg_dir(store, upto_batch)
-    if not is_complete(spark, cseg):
-        merged = merge(spark.read.parquet(*covered))
-        # clear any half-written previous attempt, then commit the compacted cells
-        if fs.exists(hpath(cseg)):
-            fs.delete(hpath(cseg), True)
-        merged.write.parquet(cseg)
-    # steps 2+3 (also the recovery path after a crash between them)
-    for p in _committed_seg_paths(spark, store):
-        if int(p.rsplit("=", 1)[1]) <= upto_batch:
-            fs.delete(hpath(p), True)
-    fs.rename(hpath(cseg), hpath(_seg_dir(store, upto_batch)))
-
-
-def _cms_segment_frames(
-    spark: SparkSession, store_path: str, exclude_batch: int | None = None
-) -> list[str]:
-    """Segment paths honoring the compaction protocol: a COMMITTED
-    ``cseg=<u>`` shadows every ``seg=`` with id ≤ u (mid-compaction reads
-    stay exact); half-written csegs are invisible. ``exclude_batch`` drops
-    that batch's own seg (never a cseg — compaction trails the replay
-    horizon, so a replaying batch's segment is always uncompacted)."""
-    from kda_flink_demo_spark.streaming.store import _fs
-
-    store = store_path.rstrip("/")
-    fs, hpath = _fs(spark, store)
-    shadow = None
-    cseg_path = None
-    if fs.exists(hpath(store)):
-        for st in fs.listStatus(hpath(store)):
-            name = st.getPath().getName()
-            if name.startswith("cseg=") and is_complete(spark, f"{store}/{name}"):
-                u = int(name.split("=", 1)[1])
-                if shadow is None or u > shadow:
-                    shadow, cseg_path = u, f"{store}/{name}"
-    segs = _committed_seg_paths(spark, store, exclude_batch=exclude_batch)
-    if shadow is not None:
-        segs = [p for p in segs if int(p.rsplit("=", 1)[1]) > shadow]
-        segs.append(cseg_path)
-    return segs
-
-
 # ---------------------------------------------------------------------------
 # Standing PCA sufficient-statistics store (streaming twin of
 # operators/llm/embeddings.py: pca_project's fit)
@@ -679,25 +452,21 @@ def update_pca_stats_store(
     vec_col: str = "embedding",
 ) -> None:
     """Fold one micro-batch's PCA sufficient statistics into a standing
-    store (call from ``foreachBatch``): the batch's dim²-bounded ``(i, j,
-    v)`` cell table lands as ``seg=<batch_id>`` — model-sized regardless of
-    batch size, overwrite-idempotent on replay (stat cells are additive
-    DOUBLE sums, so like the CMS store a replay must rewrite, never re-add;
-    unlike the integer CMS cells, a rewrite may differ in fold-noise low
-    bits — the replay guarantee is numerical, and the det-rounded
-    projections are unaffected). The model then refits FROM THE RETAINED
-    STATS at read time —
-    embeddings stream in all day, the projection model refreshes whenever
-    wanted, and no historical vector is ever rescanned."""
+    store: the batch's dim²-bounded ``(i, j, v)`` cell table — model-sized
+    regardless of batch size. Stat cells are additive DOUBLE sums, so like
+    the CMS store a replay must rewrite, never re-add; unlike the integer
+    CMS cells, a rewrite may differ in fold-noise low bits — the replay
+    guarantee is numerical, and the det-rounded projections are unaffected.
+    The model refits FROM THE RETAINED STATS at read time: embeddings stream
+    in all day, the projection model refreshes whenever wanted, and no
+    historical vector is ever rescanned."""
     from kda_flink_demo_spark.operators.llm.embeddings import pca_stats_df
     from kda_flink_demo_spark.operators.llm.similarity import _as_double
 
     # only the vector column is read — requiring an id would crash streams
-    # whose rows carry embeddings alone (review finding)
+    # whose rows carry embeddings alone
     base = batch_df.select(_as_double(F.col(vec_col)).alias("_v"))
-    pca_stats_df(base).write.mode("overwrite").parquet(
-        _seg_dir(store_path, batch_id)
-    )
+    write_part(pca_stats_df(base), store_path, batch_id)
 
 
 def pca_model_from_store(spark: SparkSession, store_path: str, k: int = 8):
@@ -710,15 +479,10 @@ def pca_model_from_store(spark: SparkSession, store_path: str, k: int = 8):
     committed fold."""
     from kda_flink_demo_spark.operators.llm.embeddings import model_from_pca_stats
 
-    segs = _committed_seg_paths(spark, store_path)
-    if not segs:
+    segs = read_segments(spark, store_path)
+    if segs is None:
         return None
-    stats = (
-        spark.read.parquet(*segs)
-        .groupBy("i", "j")
-        .agg(F.sum("v").alias("v"))
-        .collect()
-    )
+    stats = segs.groupBy("i", "j").agg(F.sum("v").alias("v")).collect()
     return model_from_pca_stats(stats, k)
 
 
@@ -729,19 +493,28 @@ def pca_model_from_store(spark: SparkSession, store_path: str, k: int = 8):
 # ---------------------------------------------------------------------------
 
 
+def _ahash_merge(df: DataFrame) -> DataFrame:
+    return df.select("doc_id", "ahash").distinct()
+
+
+def compact_ahash_index_store(
+    spark: SparkSession, store_path: str, upto_batch: int
+) -> None:
+    """Compact aHash-index segments ≤ ``upto_batch`` into one distinct
+    (doc_id, ahash) segment — a billion-image standing index folds one
+    segment per micro-batch and would otherwise accumulate unbounded small
+    files; the index readout, and so every gate decision, is unchanged."""
+    compact_segments(spark, store_path, upto_batch, _ahash_merge)
+
+
 def read_ahash_index(
     spark: SparkSession, store_path: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
-    """Union of all COMMITTED ``(doc_id, ahash)`` index segments; None before
-    the first fold. Same visibility rules as the span index: half-written
-    segments are invisible, ``exclude_batch`` drops a replaying batch's own
-    segment so an image never probes its own hash. Honors the compaction
-    protocol (``compact_ahash_index_store``): a committed ``cseg=<u>``
-    shadows every segment with id ≤ u, so mid-compaction reads stay exact."""
-    segs = _cms_segment_frames(spark, store_path, exclude_batch=exclude_batch)
-    if not segs:
-        return None
-    return spark.read.parquet(*segs).select("doc_id", "ahash")
+    """The standing ``(doc_id, ahash)`` index; None before the first fold. A
+    replaying batch passes its own id, so an image never probes its own
+    hash."""
+    segs = read_segments(spark, store_path, exclude_batch)
+    return None if segs is None else segs.select("doc_id", "ahash")
 
 
 def update_ahash_index_store(
@@ -756,18 +529,14 @@ def update_ahash_index_store(
     compact_every: int | None = None,
 ) -> None:
     """Fold one micro-batch of media payloads through the standing
-    perceptual-dedup gate (call from ``foreachBatch``): clean the batch
-    against the standing fingerprint index + earlier within-batch payloads
-    (``image_dedup_probe`` — hash-agnostic once given hash tables), land
-    survivors under ``sink_path/batch=<id>``, then commit the batch's OWN
-    hashes as index segment ``seg=<id>`` — including dropped images' hashes,
-    so a later re-crawl of a dropped near-dup still gates (the index records
-    everything seen, the sink records what survived).
-
-    Append-only per-batch segments: O(batch) fold cost, never an index
-    rewrite; replay overwrites both the ``batch=`` sink partition and the
-    ``seg=`` segment with identical bytes (hashes are deterministic), and
-    the index visible to batch N is exactly segments < N either way."""
+    perceptual-dedup gate: clean the batch against the standing fingerprint
+    index + earlier within-batch payloads (``image_dedup_probe`` —
+    hash-agnostic once given hash tables), land survivors under
+    ``sink_path/batch=<id>``, then commit the batch's OWN hashes as its
+    segment — including dropped images' hashes, so a later re-crawl of a
+    dropped near-dup still gates (the index records everything seen, the
+    sink records what survived). ``compact_every`` bounds the segment count
+    of a long-running stream (``store.compact_when_due``)."""
     from kda_flink_demo_spark.operators.llm.image_dedup import (
         image_ahash,
         image_dedup_probe,
@@ -777,13 +546,13 @@ def update_ahash_index_store(
     idx = read_ahash_index(spark, store_path, exclude_batch=batch_id)
     # hash the batch ONCE: the checkpointed table feeds both the probe's two
     # joins and the index segment write — recomputing would run the
-    # per-image decode mapInPandas twice per fold (r08 second-review finding).
+    # per-image decode mapInPandas twice per fold.
     # ``hasher`` defaults to the image aHash; pass ``audio_ahash`` (or any
     # (df, id_col, payload_col) → (doc_id, ahash BIGINT) projection) and the
     # identical gate/store machinery dedups that modality — the probe and the
     # segment format are hash-agnostic. One store holds ONE modality: never
     # mix hashers in a store_path (hashes from different fingerprint spaces
-    # are incomparable — the same failure the canonical-backend fix closed).
+    # are incomparable).
     if hasher is None:
         hasher = image_ahash
     bh = hasher(batch_df, id_col=id_col, payload_col=payload_col).localCheckpoint()
@@ -795,57 +564,36 @@ def update_ahash_index_store(
         payload_col=payload_col,
         batch_hashes=bh,
     )
-    cleaned.write.mode("overwrite").parquet(
-        f"{sink_path.rstrip('/')}/batch={int(batch_id)}"
-    )
-    bh.write.mode("overwrite").parquet(_seg_dir(store_path, batch_id))
-    # bound the segment count for long-running streams: once this batch's
-    # PREDECESSORS pile past the threshold, fold them into one distinct
-    # segment. upto = batch_id − 1 is replay-safe by construction: Structured
-    # Streaming commits batch N−1 before starting N, so only THIS batch can
-    # ever replay — and its own segment is never compacted here. Each
-    # compaction rewrites the whole standing index (the compacted seg is the
-    # index), so with threshold N the amortized extra cost is O(index/N) per
-    # batch — size N to taste (e.g. 64: full rewrite every 63 batches) the
-    # same way any LSM picks its compaction fan-in.
-    if compact_every is not None:
-        prior = [
-            p
-            for p in _committed_seg_paths(spark, store_path)
-            if int(p.rsplit("=", 1)[1]) < int(batch_id)
-        ]
-        if len(prior) >= compact_every:
-            compact_ahash_index_store(spark, store_path, int(batch_id) - 1)
+    write_part(cleaned, sink_path, batch_id, "batch")
+    write_part(bh, store_path, batch_id)
+    compact_when_due(spark, store_path, batch_id, compact_every, _ahash_merge)
+
+
+# ---------------------------------------------------------------------------
+# Standing edit-distance index (the text twin of the aHash index)
+# ---------------------------------------------------------------------------
+
+
+def _editdist_merge(df: DataFrame) -> DataFrame:
+    return df.select("text").distinct()
 
 
 def compact_editdist_index_store(
     spark: SparkSession, store_path: str, upto_batch: int
 ) -> None:
-    """Merge every committed editdist-index segment with id ≤ ``upto_batch``
-    into ONE distinct text segment — set-union semantics like the aHash
-    index, so every gate decision is identical before, during, and after
-    (same crash-safe cseg shadow/swap protocol; same replay constraint:
-    only compact beyond the checkpoint's replay horizon)."""
-    _compact_segment_store(
-        spark,
-        store_path,
-        upto_batch,
-        lambda df: df.select("text").distinct(),
-    )
+    """Compact editdist-index segments ≤ ``upto_batch`` into one distinct
+    text segment; every gate decision is unchanged."""
+    compact_segments(spark, store_path, upto_batch, _editdist_merge)
 
 
 def read_editdist_index(
     spark: SparkSession, store_path: str, exclude_batch: int | None = None
 ) -> DataFrame | None:
-    """Union of all COMMITTED distinct-text index segments; None before the
-    first fold. Same visibility rules as the aHash index: half-written
-    segments are invisible, ``exclude_batch`` drops a replaying batch's own
-    segment (a doc must never gate against its own text), committed
-    ``cseg=<u>`` shadows segments ≤ u."""
-    segs = _cms_segment_frames(spark, store_path, exclude_batch=exclude_batch)
-    if not segs:
-        return None
-    return spark.read.parquet(*segs).select("text").distinct()
+    """The standing distinct-text index; None before the first fold. A
+    replaying batch passes its own id: a doc must never gate against its own
+    text."""
+    segs = read_segments(spark, store_path, exclude_batch)
+    return None if segs is None else _editdist_merge(segs)
 
 
 def update_editdist_index_store(
@@ -860,23 +608,15 @@ def update_editdist_index_store(
     compact_every: int | None = None,
 ) -> None:
     """Fold one micro-batch of documents through the standing edit-distance
-    gate (call from ``foreachBatch``) — the text twin of
-    ``update_ahash_index_store``: clean the batch against the standing
-    distinct-text index + earlier within-batch texts
+    gate — the text twin of ``update_ahash_index_store``: clean the batch
+    against the standing distinct-text index + earlier within-batch texts
     (``ingest_editdist_gate`` probing a ``build_editdist_ingest_index`` of
     the store's texts), land survivors under ``sink_path/batch=<id>``, then
-    commit the batch's OWN distinct texts as index segment ``seg=<id>`` —
-    including dropped docs' texts, so a later re-crawl of a dropped
-    near-identical doc still gates (the index records everything seen, the
-    sink records what survived).
-
-    Append-only per-batch segments: O(batch) fold cost, never an index
-    rewrite; replay overwrites both the ``batch=`` sink partition and the
-    ``seg=`` segment with identical bytes (texts are the data), and the
-    index visible to batch N is exactly segments < N either way. The store
-    keeps ONLY texts — block keys (prefix, length bucket) are derived at
-    read time, so threshold/prefix parametrize the gate, not the stored
-    bytes."""
+    commit the batch's OWN distinct texts as its segment — including dropped
+    docs' texts, so a later re-crawl of a dropped near-identical doc still
+    gates. The store keeps ONLY texts — block keys (prefix, length bucket)
+    are derived at read time, so threshold/prefix parametrize the gate, not
+    the stored bytes."""
     from kda_flink_demo_spark.operators.llm.dedup import (
         build_editdist_ingest_index,
         ingest_editdist_gate,
@@ -897,24 +637,21 @@ def update_editdist_index_store(
         threshold=threshold,
         prefix_len=prefix_len,
     )
-    cleaned.write.mode("overwrite").parquet(
-        f"{sink_path.rstrip('/')}/batch={int(batch_id)}"
-    )
-    (
+    write_part(cleaned, sink_path, batch_id, "batch")
+    write_part(
         batch_df.filter(F.col(text_col).isNotNull())
         .select(F.col(text_col).alias("text"))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(_seg_dir(store_path, batch_id))
+        .distinct(),
+        store_path,
+        batch_id,
     )
-    if compact_every is not None:
-        prior = [
-            p
-            for p in _committed_seg_paths(spark, store_path)
-            if int(p.rsplit("=", 1)[1]) < int(batch_id)
-        ]
-        if len(prior) >= compact_every:
-            compact_editdist_index_store(spark, store_path, int(batch_id) - 1)
+    compact_when_due(spark, store_path, batch_id, compact_every, _editdist_merge)
+
+
+# ---------------------------------------------------------------------------
+# Standing CUMULATE windows (streaming twin of operators/windows.py:
+# cumulate_counts)
+# ---------------------------------------------------------------------------
 
 
 def update_cumulate_store(
@@ -926,19 +663,15 @@ def update_cumulate_store(
     step_s: int = 120,
     max_s: int = 600,
 ) -> None:
-    """Streaming CUMULATE maintenance (foreachBatch): windowed counts are
-    ADDITIVE, so each micro-batch folds its own ``cumulate_counts`` partial
-    as segment ``seg=<batch_id>`` and the live result is a grouped sum over
-    committed segments (``cumulate_from_store``) — the CMS/agg-state merge
-    convention applied to the window family's newest member. Replay
-    overwrites the segment with identical bytes (counts are deterministic);
-    every early-firing refresh of a growing window is exact because partial
-    counts merge by addition regardless of how events split across
-    batches."""
+    """Streaming CUMULATE maintenance: windowed counts are ADDITIVE, so each
+    micro-batch folds its own ``cumulate_counts`` partial as its segment and
+    the live result is a grouped sum (``cumulate_from_store``). Every
+    early-firing refresh of a growing window is exact because partial counts
+    merge by addition regardless of how events split across batches."""
     from kda_flink_demo_spark.operators.windows import cumulate_counts
 
     part = cumulate_counts(batch_df, key=key, ts=ts, step_s=step_s, max_s=max_s)
-    part.write.mode("overwrite").parquet(_seg_dir(store_path, batch_id))
+    write_part(part, store_path, batch_id)
 
 
 def cumulate_from_store(
@@ -948,12 +681,10 @@ def cumulate_from_store(
 ) -> DataFrame | None:
     """Merged CUMULATE read-out: grouped sum of the per-batch partials —
     equal to one-shot ``cumulate_counts`` over everything replayed
-    (additive merge; batch-as-oracle test-pinned). None before the first
-    fold."""
-    segs = _cms_segment_frames(spark, store_path)
-    if not segs:
+    (batch-as-oracle test-pinned). None before the first fold."""
+    df = read_segments(spark, store_path)
+    if df is None:
         return None
-    df = spark.read.parquet(*segs)
     keys = [c for c in df.columns if c != count_alias]
     return df.groupBy(*keys).agg(
         F.sum(count_alias).cast("long").alias(count_alias)

@@ -1,18 +1,45 @@
-"""Crash-safe standing-store primitives shared by the streaming
-materialized-view folds (sketch store, SCD2 store, snapshot version store).
-
-Contract: a store directory is trusted only when its ``_SUCCESS`` marker
-exists — a partial directory is never read. A new state is materialized at
-``<store>.next`` first (Spark commits ``_SUCCESS`` last), then the old store
-is deleted and ``.next`` is RENAMED into place (a metadata move). A crash
-between the delete and the rename is recovered on the next fold by promoting
-the complete ``.next``; a crash mid-write of ``.next`` leaves the marker
-absent, so the stale ``.next`` is ignored and overwritten while the old
-store stays intact. Everything goes through the Hadoop FileSystem API so the
-same code runs on local disk, HDFS, or S3A (a driver-local ``os.path`` probe
-would silently never find a remote store and reset state every batch). On
+"""Crash-safe on-disk protocols of the standing stores the streaming folds
+maintain (``streaming/standing_stores.py``). Two protocols, both written
+only here. Everything goes through the Hadoop FileSystem API, so the same
+code runs on local disk, HDFS or S3A (a driver-local ``os.path`` probe would
+silently never find a remote store and reset state every batch). On
 filesystems without atomic rename (raw S3) use a transactional table format
 instead.
+
+Common rule: a directory is trusted only once its ``_SUCCESS`` marker exists
+(Spark commits it last); a partial directory is never read.
+
+Promote (one standing table, rewritten per fold: SCD2, BPE merges, sketch)
+--------------------------------------------------------------------------
+A new state is materialized at ``<store>.next`` first, then the old store is
+deleted and ``.next`` is RENAMED into place (a metadata move, never a second
+data write). A crash between the delete and the rename is recovered on the
+next fold by promoting the complete ``.next`` (``recover_standing``); a crash
+mid-write of ``.next`` leaves the marker absent, so the stale ``.next`` is
+ignored and overwritten while the old store stays intact.
+
+Segments (one directory per micro-batch: CMS, drift, PCA stats, span,
+aHash and editdist indexes, cumulate; and ``version=`` snapshots)
+---------------------------------------------------------------------
+* Batch ``b`` overwrites ``<store>/seg=<b>`` (``write_part``): a checkpoint
+  replay rewrites its own segment instead of adding to a standing table, so
+  merges that are not idempotent (addition) stay exact under any replay
+  history. Sink partitions ``batch=<b>`` and snapshot ``version=<b>`` dirs
+  are written the same way.
+* Readers see the committed segments (``committed_dirs``): ``_SUCCESS``
+  present; a replaying batch passes ``exclude_batch`` and never sees its own
+  segment; a committed ``cseg=<u>`` stands for every segment with id ≤ u and
+  shadows them, so a read in the middle of a compaction stays exact.
+* ``compact_segments`` merges the committed segments ≤ ``upto`` into one:
+  (1) write the merge to ``cseg=<upto>`` (committed via ``_SUCCESS``);
+  (2) delete the covered ``seg=`` dirs; (3) rename ``cseg=<upto>`` →
+  ``seg=<upto>``. A crash after (1) or during (2) neither loses nor
+  double-counts (the shadow above); the next compaction first finishes every
+  pending swap. Compact only batches behind the streaming checkpoint's
+  replay horizon: a replay of a compacted batch would rewrite its ``seg=``
+  dir as a fresh segment, and its rows would then exist twice.
+  ``compact_when_due`` applies that with ``upto = batch_id − 1``, which is
+  safe because Structured Streaming commits batch N−1 before starting N.
 """
 
 from __future__ import annotations
@@ -58,11 +85,123 @@ def recover_standing(spark: SparkSession, store_path: str) -> bool:
 
 
 def promote(df: DataFrame, store_path: str) -> None:
-    """Materialize ``df`` at ``<store>.next``, then delete + rename into place
-    (never a second data write of the new state)."""
+    """Materialize ``df`` at ``<store>.next``, then delete + rename into place."""
     spark = df.sparkSession
     store = store_path.rstrip("/")
     nxt = store + ".next"
     fs, hpath = _fs(spark, store)
     df.write.mode("overwrite").parquet(nxt)
     _swap_in(fs, hpath, store, nxt)
+
+
+def part_dir(path: str, kind: str, n: int) -> str:
+    """``<path>/<kind>=<n>``: a segment, compacted segment, sink partition
+    or snapshot version directory."""
+    return f"{path.rstrip('/')}/{kind}={int(n)}"
+
+
+def cseg_dir(store_path: str, upto: int) -> str:
+    return part_dir(store_path, "cseg", upto)
+
+
+def write_part(df: DataFrame, path: str, batch_id: int, kind: str = "seg") -> None:
+    """Overwrite ``<path>/<kind>=<batch_id>`` with ``df``."""
+    df.write.mode("overwrite").parquet(part_dir(path, kind, batch_id))
+
+
+def _scan(spark: SparkSession, store_path: str):
+    """The only listing of a store directory: ``(fs, hpath, dirs)`` with
+    ``dirs[kind][id]`` the path of each COMMITTED ``<kind>=<id>`` child."""
+    store = store_path.rstrip("/")
+    fs, hpath = _fs(spark, store)
+    dirs: dict[str, dict[int, str]] = {}
+    if fs.exists(hpath(store)):
+        for st in fs.listStatus(hpath(store)):
+            name = st.getPath().getName()
+            kind, _, n = name.partition("=")
+            path = f"{store}/{name}"
+            if n.isdigit() and fs.exists(hpath(path + "/_SUCCESS")):
+                dirs.setdefault(kind, {})[int(n)] = path
+    return fs, hpath, dirs
+
+
+def committed_dirs(
+    spark: SparkSession,
+    store_path: str,
+    exclude_batch: int | None = None,
+    kind: str = "seg",
+) -> dict[int, str]:
+    """The readable ``<kind>=<id>`` directories by id, ascending: committed
+    only, ``exclude_batch``'s own dropped, and every id ≤ u replaced by the
+    highest committed ``cseg=<u>`` (keyed u)."""
+    _, _, dirs = _scan(spark, store_path)
+    segs = dirs.get(kind, {})
+    if exclude_batch is not None:
+        segs.pop(int(exclude_batch), None)
+    csegs = dirs.get("cseg")
+    if csegs:
+        top = max(csegs)
+        segs = {i: p for i, p in segs.items() if i > top}
+        segs[top] = csegs[top]
+    return dict(sorted(segs.items()))
+
+
+def read_segments(
+    spark: SparkSession, store_path: str, exclude_batch: int | None = None
+) -> DataFrame | None:
+    """Union of the readable segments; None before the first committed fold."""
+    segs = committed_dirs(spark, store_path, exclude_batch)
+    return spark.read.parquet(*segs.values()) if segs else None
+
+
+def compact_segments(spark: SparkSession, store_path: str, upto_batch: int, merge) -> None:
+    """Merge every committed segment with id ≤ ``upto_batch`` into ONE via
+    ``merge`` (a DataFrame → DataFrame reducer whose readout is invariant
+    under segment regrouping), in the three crash-safe steps of the module
+    docstring. The segment is named after the NEWEST covered id, never a
+    not-yet-folded ``upto_batch``: that batch's own overwrite would destroy
+    the compacted history."""
+    store = store_path.rstrip("/")
+    fs, hpath, dirs = _scan(spark, store)
+    segs, csegs = dirs.get("seg", {}), dirs.get("cseg", {})
+    # FIRST finish every pending swap of an earlier compaction that crashed:
+    # its committed cseg holds rows whose seg dirs may already be gone, and
+    # a compaction that read only seg= dirs would silently drop them. The
+    # HIGHEST committed cseg merged everything a lower one covers, so the
+    # lower ones are deleted outright (renaming one into a seg= dir would
+    # double-count it) — and deleted BEFORE the highest one's swap: in the
+    # reverse order a crash leaves a lower cseg as the read shadow beside the
+    # renamed seg that also holds its batches.
+    if csegs:
+        top = max(csegs)
+        for u in csegs:
+            if u < top:
+                fs.delete(hpath(csegs[u]), True)
+        for i in [i for i in segs if i <= top]:
+            fs.delete(hpath(segs.pop(i)), True)
+        segs[top] = part_dir(store, "seg", top)
+        fs.rename(hpath(csegs[top]), hpath(segs[top]))
+    covered = {i: p for i, p in segs.items() if i <= upto_batch}
+    # one segment is already its own compaction
+    if len(covered) < 2:
+        return
+    upto_batch = max(covered)
+    cseg = cseg_dir(store, upto_batch)
+    merge(spark.read.parquet(*covered.values())).write.mode("overwrite").parquet(cseg)
+    for p in covered.values():
+        fs.delete(hpath(p), True)
+    fs.rename(hpath(cseg), hpath(part_dir(store, "seg", upto_batch)))
+
+
+def compact_when_due(
+    spark: SparkSession, store_path: str, batch_id: int, compact_every: int | None, merge
+) -> None:
+    """Compact the segments before ``batch_id`` once ``compact_every`` of them
+    have piled up (``None``: never). Each compaction rewrites the whole
+    merged store, so threshold N costs O(store/N) per batch, the fan-in
+    choice of any LSM store."""
+    if compact_every is None:
+        return
+    prior = [i for i in committed_dirs(spark, store_path) if i < int(batch_id)]
+    if len(prior) >= compact_every:
+        compact_segments(spark, store_path, int(batch_id) - 1, merge)

@@ -201,6 +201,30 @@ def test_narrow_checkpoint_fails_loudly_when_checkpoint_did_not_run(spark, monke
         narrow_checkpoint(df, 10)
 
 
+@pytest.mark.parametrize("real_checkpoints", [0, 1], ids=["node_count", "convergence"])
+def test_connected_components_fails_loudly_when_checkpoint_did_not_run(
+    spark, monkeypatch, real_checkpoints
+):
+    """The node count and each round's convergence flag ride the label
+    checkpoints as Observations: if a checkpoint action never runs the
+    observed plan, connected_components must raise a clear error, not block
+    forever in Observation.get."""
+    from kda_flink_demo_spark.operators.llm import clustering
+
+    df = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
+    real = type(df).localCheckpoint
+    calls = []
+
+    def local_checkpoint(self, eager=True):
+        calls.append(1)
+        return real(self, eager) if len(calls) <= real_checkpoints else self
+
+    monkeypatch.setattr(clustering, "narrow_checkpoint", lambda d, rows: d)
+    monkeypatch.setattr(type(df), "localCheckpoint", local_checkpoint)
+    with pytest.raises(RuntimeError, match="connected_components: the observed action"):
+        clustering.connected_components(df)
+
+
 def test_bpe_train_degenerate_corpus_emits_no_step_rows(spark):
     """A corpus whose vocabulary runs out of adjacent pairs mid-training
     emits NO row for the pair-less steps (the pre-r14 behavior the lazy-argmax

@@ -1074,143 +1074,6 @@ def test_cms_store_real_stream_matches_one_pass(spark, tmp_path):
     )
 
 
-def test_cms_compaction_preserves_readout_bit_exact(spark, tmp_path):
-    from kda_flink_demo_spark.streaming.standing_stores import (
-        cms_from_store,
-        compact_cms_store,
-        update_cms_store,
-    )
-
-    docs = _docs(spark, n=150)
-    terms = _term_stream(docs)
-    store = str(tmp_path / "cms")
-    for bid in range(4):
-        update_cms_store(terms.filter(F.col("doc_id") % 4 == bid), bid, store, depth=3, width=64)
-    before = _canon(cms_from_store(spark, store))
-    compact_cms_store(spark, store, upto_batch=2)
-    assert _canon(cms_from_store(spark, store)) == before
-    # segment layout: seg=2 (compacted 0..2) + seg=3
-    segs = sorted(
-        d for d in os.listdir(store) if d.startswith("seg=")
-    )
-    assert segs == ["seg=2", "seg=3"]
-    # compaction is idempotent on an already-compacted range
-    compact_cms_store(spark, store, upto_batch=2)
-    assert _canon(cms_from_store(spark, store)) == before
-
-
-def test_cms_compaction_crash_windows_never_lose_or_double_count(spark, tmp_path):
-    """Fault injection across the 3-step swap: (a) committed cseg + intact
-    segs (crash after step 1) must read exactly once via the cseg shadow;
-    (b) committed cseg + partially deleted segs (crash mid step 2) same;
-    (c) a HALF-written cseg is invisible and the segs still rule."""
-    import shutil
-
-    from kda_flink_demo_spark.streaming.standing_stores import (
-        _cseg_dir,
-        cms_from_store,
-        compact_cms_store,
-        update_cms_store,
-    )
-
-    docs = _docs(spark, n=150)
-    terms = _term_stream(docs)
-    store = str(tmp_path / "cms")
-    for bid in range(3):
-        update_cms_store(terms.filter(F.col("doc_id") % 3 == bid), bid, store, depth=3, width=64)
-    before = _canon(cms_from_store(spark, store))
-
-    # (c) half-written cseg first: no _SUCCESS → invisible
-    fake = _cseg_dir(store, 1)
-    os.makedirs(fake)
-    with open(os.path.join(fake, "part-0.parquet"), "wb") as fh:
-        fh.write(b"garbage")
-    assert _canon(cms_from_store(spark, store)) == before
-    shutil.rmtree(fake)
-
-    # (a) crash after step 1: build a real committed cseg by hand, keep segs
-    seg0 = os.path.join(store, "seg=0")
-    seg1 = os.path.join(store, "seg=1")
-    cseg = _cseg_dir(store, 1)
-    merged = (
-        spark.read.parquet(seg0, seg1)
-        .groupBy("d", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    merged.write.parquet(cseg)
-    assert _canon(cms_from_store(spark, store)) == before  # shadow, not double
-
-    # (b) crash mid step 2: one covered segment already deleted
-    shutil.rmtree(seg0)
-    assert _canon(cms_from_store(spark, store)) == before
-
-    # recovery: re-running compact completes deletion + rename
-    compact_cms_store(spark, store, upto_batch=1)
-    assert _canon(cms_from_store(spark, store)) == before
-    segs = sorted(d for d in os.listdir(store) if d.startswith("seg="))
-    assert segs == ["seg=1", "seg=2"]
-    assert not os.path.exists(cseg)
-
-
-def test_cms_compaction_orphan_cseg_survives_later_compaction(spark, tmp_path):
-    """Crash between delete and rename at upto=1, then a LATER compact at
-    upto=2: the orphaned committed cseg=1 holds counts whose seg dirs are
-    gone — the new compaction must fold them in, not silently drop them."""
-    import shutil
-
-    from kda_flink_demo_spark.streaming.standing_stores import (
-        _cseg_dir,
-        cms_from_store,
-        compact_cms_store,
-        update_cms_store,
-    )
-
-    docs = _docs(spark, n=150)
-    terms = _term_stream(docs)
-    store = str(tmp_path / "cms")
-    for bid in range(4):
-        update_cms_store(terms.filter(F.col("doc_id") % 4 == bid), bid, store, depth=3, width=64)
-    before = _canon(cms_from_store(spark, store))
-    # hand-craft the crashed state: committed cseg=1 covering segs 0..1,
-    # both covered seg dirs already deleted, rename never happened
-    seg0, seg1 = os.path.join(store, "seg=0"), os.path.join(store, "seg=1")
-    merged = (
-        spark.read.parquet(seg0, seg1).groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt"))
-    )
-    merged.write.parquet(_cseg_dir(store, 1))
-    shutil.rmtree(seg0)
-    shutil.rmtree(seg1)
-    assert _canon(cms_from_store(spark, store)) == before  # shadow read exact
-    compact_cms_store(spark, store, upto_batch=2)
-    assert _canon(cms_from_store(spark, store)) == before
-    segs = sorted(d for d in os.listdir(store) if d.startswith("seg="))
-    assert segs == ["seg=2", "seg=3"]
-    assert not os.path.exists(_cseg_dir(store, 1))
-
-
-def test_cms_compaction_clamps_to_newest_covered_segment(spark, tmp_path):
-    """compact(upto=<future id>) must name the merged segment after the
-    NEWEST covered segment, not the future id — else the future batch's own
-    seg overwrite would destroy the compacted history."""
-    from kda_flink_demo_spark.streaming.standing_stores import (
-        cms_from_store,
-        compact_cms_store,
-        update_cms_store,
-    )
-
-    docs = _docs(spark, n=150)
-    terms = _term_stream(docs)
-    store = str(tmp_path / "cms")
-    for bid in range(3):
-        update_cms_store(terms.filter(F.col("doc_id") % 3 == bid), bid, store, depth=3, width=64)
-    before = _canon(cms_from_store(spark, store))
-    compact_cms_store(spark, store, upto_batch=10)  # batch 10 never folded
-    assert sorted(d for d in os.listdir(store) if d.startswith("seg=")) == ["seg=2"]
-    # the future batch now folds — it must NOT clobber the compacted history
-    update_cms_store(terms.limit(0), 10, store, depth=3, width=64)
-    assert _canon(cms_from_store(spark, store)) == before
-
-
 def test_quantile_report_booleans_ignore_null_values(spark):
     """The GK rank targets must count only the values the percentiles rank:
     a NULL-heavy key would otherwise push every p*_ok boolean FALSE."""

@@ -1,12 +1,12 @@
-"""Round-8 regressions: the r07 advice findings (CMS compaction retry with
-the same upto after a mid-step-2 crash, drift_between duplicate/overlapping
-batch lists, pq_adc_topk geometry derived from a caller-supplied index) plus
-the oracle/registry hygiene changes."""
+"""Round-8 regressions: the r07 advice findings (drift_between
+duplicate/overlapping batch lists, pq_adc_topk geometry derived from a
+caller-supplied index; the compaction-retry findings are pinned on the
+segment protocol in test_segment_store.py) plus the oracle/registry hygiene
+changes."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,138 +26,8 @@ def _emb(spark):
     return load_table(spark, SF_DIR, "embeddings")
 
 
-def _term_stream(docs):
-    return docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
-    ).filter(F.col("term") != "")
-
-
 def _canon(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def _seg_names(store):
-    return sorted(d for d in os.listdir(store) if d.startswith("seg="))
-
-
-# ---------------------------------------------------------------------------
-# CMS compaction: retry-with-same-upto and two-committed-cseg recovery
-# (r07 advice, medium)
-# ---------------------------------------------------------------------------
-
-
-def _cms_store(spark, tmp_path, n_batches=4):
-    from kda_flink_demo_spark.streaming.standing_stores import (
-        cms_from_store,
-        update_cms_store,
-    )
-
-    docs = _docs(spark)
-    terms = _term_stream(docs)
-    store = str(tmp_path / "cms")
-    for bid in range(n_batches):
-        update_cms_store(
-            terms.filter(F.col("doc_id") % n_batches == bid),
-            bid,
-            store,
-            depth=3,
-            width=64,
-        )
-    return store, _canon(cms_from_store(spark, store))
-
-
-def _hand_cseg(spark, store, upto):
-    """Committed cseg=<upto> exactly as step 1 of the protocol writes it."""
-    from kda_flink_demo_spark.streaming.standing_stores import _cseg_dir
-
-    covered = [
-        os.path.join(store, d)
-        for d in _seg_names(store)
-        if int(d.split("=", 1)[1]) <= upto
-    ]
-    (
-        spark.read.parquet(*covered)
-        .groupBy("d", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    ).write.parquet(_cseg_dir(store, upto))
-
-
-def test_cms_compaction_retry_same_upto_after_mid_step2_crash(spark, tmp_path):
-    """Crash mid step 2 (cseg=2 committed, seg=2 already deleted, seg=0/1
-    survive), then RETRY with the SAME upto: the old recovery skipped a
-    committed cseg whose id equals upto_batch, so the retry rebuilt a second
-    subsumed cseg from the survivors instead of finishing the swap. The fix
-    must converge in one call with a bit-exact readout."""
-    from kda_flink_demo_spark.streaming.standing_stores import (
-        _cseg_dir,
-        cms_from_store,
-        compact_cms_store,
-    )
-
-    store, before = _cms_store(spark, tmp_path)
-    _hand_cseg(spark, store, 2)
-    shutil.rmtree(os.path.join(store, "seg=2"))  # mid-step-2 crash
-    assert _canon(cms_from_store(spark, store)) == before  # shadow read exact
-
-    compact_cms_store(spark, store, upto_batch=2)  # the retry
-    assert _canon(cms_from_store(spark, store)) == before
-    assert _seg_names(store) == ["seg=2", "seg=3"]
-    assert not os.path.exists(_cseg_dir(store, 2))
-    assert not os.path.exists(_cseg_dir(store, 1))
-
-
-def test_cms_compaction_two_committed_csegs_never_double_count(spark, tmp_path):
-    """The advice's worst case: two committed csegs coexist (a retry built a
-    second, subsumed one and then crashed before its delete+rename). The next
-    compact must DELETE the subsumed cseg — renaming both into seg= dirs
-    double-counts the lower one's cells."""
-    from kda_flink_demo_spark.streaming.standing_stores import (
-        _cseg_dir,
-        cms_from_store,
-        compact_cms_store,
-    )
-
-    store, before = _cms_store(spark, tmp_path)
-    _hand_cseg(spark, store, 1)  # cseg=1 covers batches 0..1
-    _hand_cseg(spark, store, 2)  # cseg=2 covers batches 0..2 (subsumes it)
-    for s in ("seg=0", "seg=1", "seg=2"):
-        shutil.rmtree(os.path.join(store, s))
-    assert _canon(cms_from_store(spark, store)) == before  # highest shadows
-
-    compact_cms_store(spark, store, upto_batch=3)
-    assert _canon(cms_from_store(spark, store)) == before
-    assert not os.path.exists(_cseg_dir(store, 1))
-    assert not os.path.exists(_cseg_dir(store, 2))
-    # all cells now live in committed seg= dirs only, no cseg residue
-    assert all(n.startswith("seg=") or n == "_SUCCESS" or n.startswith(".")
-               for n in os.listdir(store) if not n.startswith("_"))
-
-
-def test_cms_compaction_recovery_crash_windows_stay_exact(spark, tmp_path):
-    """The FIXED recovery order (delete subsumed csegs, THEN swap the
-    highest) must leave a read-exact store at its one intermediate crash
-    point — {highest cseg, trailing segs} — and converge on rerun. The
-    reverse order's intermediate (highest already renamed into seg=, lower
-    cseg surviving as the shadow) double-counts the lower cseg's batches and
-    is unrecoverable, which is why the order is pinned here (r08 review)."""
-    from kda_flink_demo_spark.streaming.standing_stores import (
-        _cseg_dir,
-        cms_from_store,
-        compact_cms_store,
-    )
-
-    store, before = _cms_store(spark, tmp_path)
-    _hand_cseg(spark, store, 1)
-    _hand_cseg(spark, store, 2)
-    for s in ("seg=0", "seg=1", "seg=2"):
-        shutil.rmtree(os.path.join(store, s))
-    # crash window A: subsumed cseg=1 deleted, swap of cseg=2 not yet done
-    shutil.rmtree(_cseg_dir(store, 1))
-    assert _canon(cms_from_store(spark, store)) == before
-    # rerun converges from window A
-    compact_cms_store(spark, store, upto_batch=3)
-    assert _canon(cms_from_store(spark, store)) == before
-    assert not any(d.startswith("cseg=") for d in os.listdir(store))
 
 
 # ---------------------------------------------------------------------------

@@ -605,11 +605,11 @@ def test_ahash_index_mid_compaction_shadow_read_exact(spark, tmp_path):
     import shutil
 
     from kda_flink_demo_spark.streaming.standing_stores import (
-        _cseg_dir,
         compact_ahash_index_store,
         read_ahash_index,
         update_ahash_index_store,
     )
+    from kda_flink_demo_spark.streaming.store import cseg_dir as _cseg_dir
 
     store, sink = str(tmp_path / "idx"), str(tmp_path / "clean")
     update_ahash_index_store(_img_batch(spark, range(0, 6)), 0, store, sink)
