@@ -1,8 +1,11 @@
 """Streaming exact distinct-count via ``transformWithStateInPandas``
-MapState — the fourth TWS operator, completing the state-type matrix the
-engine exercises on Spark 4's successor API: ListState (sliding range),
-ValueState (count windows), event-time timers (session finalize), and HERE
-typed MapState (per-key sub-keyed state with point lookups).
+MapState — the engine's one operator on Spark 4's successor stateful API.
+Exact distinct needs per-key sub-keyed state with point lookups (typed
+MapState); ``applyInPandasWithState`` keeps one state row per key, read and
+rewritten whole every batch. The other custom stateful operators (sliding
+range count, count windows, anomaly z-score) run on
+``applyInPandasWithState``, and session windows on Spark's native
+``session_window``; none of them needs more than one state value per key.
 
 Semantics: per grouping key, maintain the exact set of distinct users seen
 (MapState user → event count: point ``containsKey``/``updateValue`` per

@@ -1,7 +1,7 @@
 """Protobuf runtime shim (self-contained — runs at interpreter start).
 
-`transformWithStateInPandas` (Spark 4's successor stateful API, the
-production twin of `sliding_state.sliding_range_count`) speaks a protobuf
+`transformWithStateInPandas` (Spark 4's successor stateful API, which
+`distinct_state.distinct_users_tws` runs on for its MapState) speaks a protobuf
 state-server protocol: the python worker imports
 ``pyspark.sql.streaming.proto.StateMessage_pb2``, which needs a
 ``google.protobuf`` runtime. This container has no protobuf install, but the

@@ -9,7 +9,7 @@ Usage (before the SparkSession/JVM exists):
     protobuf_compat.export_worker_pythonpath()   # workers get the shim
     protobuf_compat.install_in_process()         # this interpreter too
     if protobuf_compat.tws_available():
-        ...  # sliding_state.sliding_range_count_tws is runnable
+        ...  # distinct_state.distinct_users_tws is runnable
 
 Everything is environment-gated; on a host with a real protobuf install all
 of this collapses to no-ops.

@@ -35,9 +35,11 @@ aHash and editdist indexes, cumulate; and ``version=`` snapshots)
   (2) delete the covered ``seg=`` dirs; (3) rename ``cseg=<upto>`` →
   ``seg=<upto>``. A crash after (1) or during (2) neither loses nor
   double-counts (the shadow above); the next compaction first finishes every
-  pending swap. Compact only batches behind the streaming checkpoint's
-  replay horizon: a replay of a compacted batch would rewrite its ``seg=``
-  dir as a fresh segment, and its rows would then exist twice.
+  pending swap. A delete or rename the file system refuses raises, so a
+  covered ``seg=`` dir never outlives its cseg shadow. Compact only batches
+  behind the streaming checkpoint's replay horizon: a replay of a compacted
+  batch would rewrite its ``seg=`` dir as a fresh segment, and its rows
+  would then exist twice.
   ``compact_when_due`` applies that with ``upto = batch_id − 1``, which is
   safe because Structured Streaming commits batch N−1 before starting N.
 """
@@ -58,19 +60,32 @@ def is_complete(spark: SparkSession, path: str) -> bool:
     return fs.exists(hpath(path.rstrip("/") + "/_SUCCESS"))
 
 
-def _swap_in(fs, hpath, store: str, nxt: str) -> None:
-    """Delete the old store and rename ``.next`` into place, CHECKING the
-    Hadoop boolean results: an ignored failed delete would make the
-    subsequent rename nest ``.next`` INSIDE the still-existing store
-    directory (Hadoop rename-into-existing-dir semantics) — silent state
-    corruption. Raising instead makes the batch fail and replay."""
-    if fs.exists(hpath(store)) and not fs.delete(hpath(store), True):
-        raise IOError(f"standing store promote: could not delete old store {store}")
-    if not fs.rename(hpath(nxt), hpath(store)):
+def _delete(fs, hpath, path: str) -> None:
+    """Hadoop's recursive delete, CHECKED: ``fs.delete`` and ``fs.rename``
+    report failure by returning False, and every caller here would go on to
+    corrupt the store if it ignored that (see ``_swap_in`` and
+    ``compact_segments``). Raising instead makes the batch fail and replay."""
+    if not fs.delete(hpath(path), True):
+        raise IOError(f"standing store: could not delete {path}")
+
+
+def _rename(fs, hpath, src: str, dst: str) -> None:
+    """Hadoop's rename, checked like ``_delete``."""
+    if not fs.rename(hpath(src), hpath(dst)):
         raise IOError(
-            f"standing store promote: rename {nxt} -> {store} failed "
+            f"standing store: rename {src} -> {dst} failed "
             "(concurrent writer on the same store_path?)"
         )
+
+
+def _swap_in(fs, hpath, store: str, nxt: str) -> None:
+    """Delete the old store and rename ``.next`` into place. An ignored
+    failed delete would make the rename nest ``.next`` INSIDE the
+    still-existing store directory (Hadoop rename-into-existing-dir
+    semantics) — silent state corruption."""
+    if fs.exists(hpath(store)):
+        _delete(fs, hpath, store)
+    _rename(fs, hpath, nxt, store)
 
 
 def recover_standing(spark: SparkSession, store_path: str) -> bool:
@@ -176,11 +191,11 @@ def compact_segments(spark: SparkSession, store_path: str, upto_batch: int, merg
         top = max(csegs)
         for u in csegs:
             if u < top:
-                fs.delete(hpath(csegs[u]), True)
+                _delete(fs, hpath, csegs[u])
         for i in [i for i in segs if i <= top]:
-            fs.delete(hpath(segs.pop(i)), True)
+            _delete(fs, hpath, segs.pop(i))
         segs[top] = part_dir(store, "seg", top)
-        fs.rename(hpath(csegs[top]), hpath(segs[top]))
+        _rename(fs, hpath, csegs[top], segs[top])
     covered = {i: p for i, p in segs.items() if i <= upto_batch}
     # one segment is already its own compaction
     if len(covered) < 2:
@@ -189,8 +204,8 @@ def compact_segments(spark: SparkSession, store_path: str, upto_batch: int, merg
     cseg = cseg_dir(store, upto_batch)
     merge(spark.read.parquet(*covered.values())).write.mode("overwrite").parquet(cseg)
     for p in covered.values():
-        fs.delete(hpath(p), True)
-    fs.rename(hpath(cseg), hpath(part_dir(store, "seg", upto_batch)))
+        _delete(fs, hpath, p)
+    _rename(fs, hpath, cseg, part_dir(store, "seg", upto_batch))
 
 
 def compact_when_due(

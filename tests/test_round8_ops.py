@@ -391,7 +391,7 @@ def test_protobuf_compat_shims_tws_protocol():
     this interpreter (idempotently); where it reports available, pyspark's
     protobuf-6 gencode must actually build messages on the shimmed runtime.
     The end-to-end streaming parity lives in
-    tests/test_streaming.py::test_transform_with_state_matches_batch."""
+    tests/test_streaming.py::test_distinct_users_tws_mapstate_matches_batch."""
     from kda_flink_demo_spark.streaming import protobuf_compat
 
     assert os.path.isdir(protobuf_compat.shim_dir())

@@ -1,8 +1,9 @@
 """The segment-store protocol of ``streaming/store.py``, tested once against
 the protocol rather than per store: the compaction crash windows run over an
 additive merge (the count-min store) and a set-union merge (the span-hash
-index); every segment reader hides a half-written segment; and a read or a
-compaction lists the store directory once."""
+index), as do the file-system refusals compaction must raise on; every
+segment reader hides a half-written segment; and a read or a compaction
+lists the store directory once."""
 
 from __future__ import annotations
 
@@ -257,6 +258,73 @@ def test_compaction_recovery_crash_windows_stay_exact(spark, tmp_path, seg_store
     s.compact(spark, store, upto_batch=3)
     assert _canon(s.read(spark, store)) == before
     assert not any(d.startswith("cseg=") for d in os.listdir(store))
+
+
+def test_compaction_fails_loudly_when_hadoop_refuses(spark, tmp_path, monkeypatch, seg_store):
+    """Hadoop's ``delete`` and ``rename`` report failure by returning False.
+    A covered ``seg=`` dir whose delete is refused would survive beside the
+    renamed merged segment and count twice, so a refused delete (in step 2,
+    then in the recovery step of the next compaction) or a refused rename
+    must raise, with the committed cseg still shadowing the covered
+    segments; a retry on a healthy file system compacts to the same exact
+    readout."""
+    from kda_flink_demo_spark.streaming import store as protocol
+
+    s = seg_store
+    store, before = _fold_store(spark, tmp_path, s)
+    refuse = {}
+    real_fs = protocol._fs
+
+    class RefusingFs:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def delete(self, path, recursive):
+            if "delete" in refuse and str(path).endswith(refuse["delete"]):
+                return False
+            return self._fs.delete(path, recursive)
+
+        def rename(self, src, dst):
+            if "rename" in refuse:
+                return False
+            return self._fs.rename(src, dst)
+
+        def __getattr__(self, attr):
+            return getattr(self._fs, attr)
+
+    def refusing_fs(spark, path):
+        fs, hpath = real_fs(spark, path)
+        return RefusingFs(fs), hpath
+
+    monkeypatch.setattr(protocol, "_fs", refusing_fs)
+
+    # a refused delete of one covered segment: step 2, then recovery
+    refuse["delete"] = "/seg=1"
+    for _ in range(2):
+        with pytest.raises(IOError, match="could not delete"):
+            s.compact(spark, store, upto_batch=2)
+        assert _canon(s.read(spark, store)) == before
+    refuse.clear()
+    s.compact(spark, store, upto_batch=2)
+    assert _canon(s.read(spark, store)) == before
+    assert _seg_names(store) == ["seg=2", "seg=3"]
+    assert not os.path.exists(_cseg_dir(store, 2))
+
+    # a refused rename: step 3, then recovery
+    more = _docs(spark, n=300).filter(F.col("doc_id") >= 150)
+    s.fold(more.filter(F.col("doc_id") % 2 == 0), 4, store)
+    s.fold(more.filter(F.col("doc_id") % 2 == 1), 5, store)
+    before = _canon(s.read(spark, store))
+    refuse["rename"] = True
+    for _ in range(2):
+        with pytest.raises(IOError, match="rename"):
+            s.compact(spark, store, upto_batch=5)
+        assert _canon(s.read(spark, store)) == before
+    refuse.clear()
+    s.compact(spark, store, upto_batch=5)
+    assert _canon(s.read(spark, store)) == before
+    assert _seg_names(store) == ["seg=5"]
+    assert not os.path.exists(_cseg_dir(store, 5))
 
 
 # ---------------------------------------------------------------------------

@@ -19,11 +19,6 @@ from kda_flink_demo_spark.streaming import jobs
 from kda_flink_demo_spark.streaming.upsert import DuckDBUpsertSink
 from tests.conftest import SF_DIR
 
-TUMBLING_SINK_SCHEMA_SESS = (
-    "railway_class VARCHAR, railway_class_count BIGINT, "
-    "window_start TIMESTAMP, window_end TIMESTAMP"
-)
-
 
 @pytest.fixture(scope="module")
 def replay_dir(spark, tmp_path_factory):
@@ -400,33 +395,6 @@ def test_run_to_sink_keeps_a_named_checkpoint_manager(spark, replay_dir, tmp_pat
     assert q.exception() is None
 
 
-def test_streaming_session_windows_match_batch(spark, replay_dir, tmp_path):
-    """W6 streaming: session windows with state-store merge across batches."""
-    from kda_flink_demo_spark.operators.windows import session_counts
-
-    sink = DuckDBUpsertSink(
-        str(tmp_path / "sess.duckdb"), "sessions", jobs.TUMBLING_SINK_KEYS, jobs.TUMBLING_SINK_SCHEMA
-    )
-    result = session_counts(_stream(spark, replay_dir).withWatermark("rowtime", "0 seconds"))
-    _run(spark, result, sink, str(tmp_path / "sess_ckpt"))
-    cols, got = sink.read_all()
-    ev = load_table(spark, SF_DIR, "events").select(
-        F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime")
-    )
-    expected = {
-        (r.railway_class, r.window_start, r.window_end): r.railway_class_count
-        for r in session_counts(ev).collect()
-    }
-    got_map = {
-        (r[cols.index("railway_class")], r[cols.index("window_start")], r[cols.index("window_end")]):
-        r[cols.index("railway_class_count")]
-        for r in got
-    }
-    assert len(got_map) >= len(expected) - 10  # trailing open sessions may not emit
-    for k, v in got_map.items():
-        assert expected[k] == v, f"session {k}: stream={v} batch={expected[k]}"
-
-
 def test_out_of_order_chunk_semantics(spark, tmp_path):
     """T2 divergence, pinned to Spark's ACTUAL behavior (verified empirically on
     4.1.2): the late-event filter uses the watermark as of the batch START — one
@@ -594,53 +562,6 @@ def test_rocksdb_state_store_provider(spark, replay_dir, tmp_path):
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
         else:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_transform_with_state_matches_batch(spark, replay_dir, tmp_path):
-    """The transformWithStateInPandas twin of the sliding operator (Spark 4's
-    successor stateful API) produces identical results to the batch oracle.
-    Runs through the protobuf shim (protobuf_compat / pb_shim: SDK-bundled
-    pure-python runtime + runtime_version back-fill, exported to workers via
-    PYTHONPATH in conftest); skips only where no usable protobuf exists at
-    all."""
-    from kda_flink_demo_spark.streaming import protobuf_compat
-
-    if not protobuf_compat.tws_available():
-        pytest.skip("transformWithStateInPandas requires google.protobuf (none shimmable here)")
-    from kda_flink_demo_spark.streaming.jobs import use_rocksdb_state
-    from kda_flink_demo_spark.streaming.sliding_state import sliding_range_count_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)  # transformWithStateInPandas requires RocksDB
-    sink = DuckDBUpsertSink(
-        str(tmp_path / "tws.duckdb"), "sliding", jobs.SLIDING_SINK_KEYS, jobs.SLIDING_SINK_SCHEMA
-    )
-    try:
-        result = sliding_range_count_tws(_stream(spark, replay_dir), preceding_seconds=30 * 60)
-        _run(spark, result, sink, str(tmp_path / "tws_ckpt"))
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    cols, got = sink.read_all()
-    batch = sliding_range_count(
-        load_table(spark, SF_DIR, "events").select(
-            "event_id", F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime")
-        ),
-        preceding_seconds=30 * 60,
-    )
-    expected = {
-        (r.event_id, r.railway_class, r.rowtime): r.railway_class_count for r in batch.collect()
-    }
-    got_map = {
-        (r[cols.index("event_id")], r[cols.index("railway_class")], r[cols.index("rowtime")]):
-        r[cols.index("railway_class_count")]
-        for r in got
-    }
-    assert len(got_map) == len(expected)
-    mismatches = {k: (v, expected[k]) for k, v in got_map.items() if expected[k] != v}
-    assert not mismatches, f"{len(mismatches)} mismatches, e.g. {list(mismatches.items())[:3]}"
 
 
 def test_dispatch_no_fallthrough():
@@ -1062,52 +983,6 @@ def test_upsert_sink_all_key_columns_does_nothing_on_conflict(spark, tmp_path):
     assert sorted(r[0] for r in rows) == [1, 2, 3]
 
 
-def test_streaming_session_windows_match_batch(spark, replay_dir, tmp_path):
-    """W6 streaming twin: session_window works under a 0-second watermark in
-    append mode; every session the stream closes must equal the batch
-    sessionization of the same events. (Still-open trailing sessions only
-    emit on EOS, so compare on the intersection with near-complete coverage,
-    as in the tumbling test.)"""
-    from kda_flink_demo_spark.operators.windows import session_counts
-
-    sink = DuckDBUpsertSink(
-        str(tmp_path / "sink_sess.duckdb"),
-        "sessions",
-        ["railway_class", "window_start"],
-        TUMBLING_SINK_SCHEMA_SESS,
-    )
-    stream = _stream(spark, replay_dir).withWatermark("rowtime", "0 seconds")
-    result = session_counts(stream, gap="5 minutes").select(
-        "railway_class", "railway_class_count", "window_start", "window_end"
-    )
-    _run(spark, result, sink, str(tmp_path / "ckpt_sess"))
-
-    cols, got = sink.read_all()
-    batch = session_counts(
-        load_table(spark, SF_DIR, "events").select(
-            F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime")
-        ),
-        gap="5 minutes",
-    )
-    expected = {
-        (r.railway_class, r.window_start): (r.window_end, r.railway_class_count)
-        for r in batch.collect()
-    }
-    got_map = {
-        (r[cols.index("railway_class")], r[cols.index("window_start")]): (
-            r[cols.index("window_end")],
-            r[cols.index("railway_class_count")],
-        )
-        for r in got
-    }
-    assert got_map, "stream should close at least one session"
-    # trailing open sessions (one per key at most) may be missing
-    n_keys = len({k for k, _ in expected})
-    assert len(got_map) >= len(expected) - n_keys
-    for k, v in got_map.items():
-        assert expected[k] == v, f"session {k}: stream={v} batch={expected[k]}"
-
-
 def test_streaming_count_windows_match_batch(spark, tmp_path):
     """Count-window streaming twin (Flink countWindow): closed streaming
     windows must EXACTLY equal the batch query's full windows — count windows
@@ -1179,269 +1054,17 @@ def test_streaming_count_windows_match_batch(spark, tmp_path):
     assert got_map == expected
 
 
-def test_count_windows_tws_matches_batch(spark, tmp_path):
-    """The transformWithStateInPandas twin of the count-window operator
-    (typed ValueState — the sliding TWS twin covers ListState) must emit
-    exactly the batch query's full windows on an in-order replay. Runs
-    through the protobuf shim; skips only with no shimmable protobuf."""
-    from pyspark.sql import types as T
-
-    from kda_flink_demo_spark.streaming import protobuf_compat
-    from kda_flink_demo_spark.streaming.count_windows import count_windows_tws
-    from kda_flink_demo_spark.streaming.jobs import use_rocksdb_state
-
-    if not protobuf_compat.tws_available():
-        pytest.skip("transformWithStateInPandas requires google.protobuf (none shimmable here)")
-
-    ev = (
-        load_table(spark, SF_DIR, "events")
-        .select(
-            "event_id",
-            F.col("event_type").alias("railway_class"),
-            F.col("ts").alias("rowtime"),
-            "value",
-        )
-        .orderBy("rowtime", "event_id")
-    )
-    replay = str(tmp_path / "replay_tws_cw")
-    _build_replay(spark, ev, replay)
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("railway_class", T.StringType()),
-            T.StructField("rowtime", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(replay + "/chunk=*")
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)  # transformWithStateInPandas requires RocksDB
-    sink = DuckDBUpsertSink(
-        str(tmp_path / "sink_tws_cw.duckdb"),
-        "count_windows",
-        ["railway_class", "window_id"],
-        "railway_class VARCHAR, window_id BIGINT, railway_class_count BIGINT, sum_value DOUBLE",
-    )
-    try:
-        result = count_windows_tws(stream, size=100)
-        _run(spark, result, sink, str(tmp_path / "ckpt_tws_cw"))
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    cols, got = sink.read_all()
-    got_map = {
-        (r[cols.index("railway_class")], r[cols.index("window_id")]): (
-            r[cols.index("railway_class_count")],
-            r[cols.index("sum_value")],
-        )
-        for r in got
-    }
-    from kda_flink_demo_spark.registry import queries
-
-    batch = queries()["count_windows_100"](spark, SF_DIR)
-    expected = {
-        (r.railway_class, r.window_id): (r.railway_class_count, r.sum_value)
-        for r in batch.collect()
-        if r.railway_class_count == 100  # full windows only
-    }
-    assert got_map, "stream should close at least one window"
-    assert got_map == expected
-
-
-def test_session_finalize_tws_timers_match_batch(spark, tmp_path):
-    """The event-time TIMER path of transformWithStateInPandas (third TWS
-    operator; handleExpiredTimer + registerTimer/deleteTimer): gap sessions
-    must equal the batch session_window values exactly — in-batch splits
-    close deterministically in handleInputRows, idle tails flush when the
-    watermark fires their timer. At most one session per key (a tail the
-    final watermark never passes) may be unflushed."""
-    from pyspark.sql import types as T
-
-    from kda_flink_demo_spark.operators.windows import session_counts
-    from kda_flink_demo_spark.streaming import protobuf_compat
-    from kda_flink_demo_spark.streaming.jobs import use_rocksdb_state
-    from kda_flink_demo_spark.streaming.session_timer import session_finalize_tws
-
-    if not protobuf_compat.tws_available():
-        pytest.skip("transformWithStateInPandas requires google.protobuf (none shimmable here)")
-
-    gap = 120
-    ev = (
-        load_table(spark, SF_DIR, "events")
-        .select(
-            "event_id",
-            F.col("event_type").alias("railway_class"),
-            F.col("ts").alias("rowtime"),
-        )
-        .orderBy("rowtime", "event_id")
-    )
-    replay = str(tmp_path / "replay_sess")
-    _build_replay(spark, ev, replay)
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("railway_class", T.StringType()),
-            T.StructField("rowtime", T.TimestampType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(replay + "/chunk=*")
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)
-    out_dir = str(tmp_path / "sess_out")
-    try:
-        q = (
-            session_finalize_tws(stream, gap_seconds=gap)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        assert not q.isActive
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    got = {
-        (r.railway_class, r.window_start): (r.window_end, r.railway_class_count)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    batch = session_counts(
-        ev.select("railway_class", "rowtime"), gap=f"{gap} seconds"
-    )
-    expected = {
-        (r.railway_class, r.window_start): (r.window_end, r.railway_class_count)
-        for r in batch.collect()
-    }
-    n_keys = ev.select("railway_class").distinct().count()
-    # every emitted session is EXACTLY a batch session
-    mismatches = {k: (v, expected.get(k)) for k, v in got.items() if expected.get(k) != v}
-    assert not mismatches, f"{len(mismatches)} wrong, e.g. {list(mismatches.items())[:3]}"
-    # completeness: only per-key unflushed tails may be missing — and the
-    # timer path must have flushed at least one idle tail (not just
-    # handleInputRows splits), else the timer machinery silently never ran
-    missing = set(expected) - set(got)
-    assert len(missing) <= n_keys, f"{len(missing)} missing > {n_keys} keys"
-    ends_by_key = {}
-    for (k, _s), (e, _c) in expected.items():
-        ends_by_key.setdefault(k, []).append(e)
-    finals = {(k, s) for (k, s), (e, _c) in expected.items() if e == max(ends_by_key[k])}
-    assert any(f in got for f in finals), "no per-key final session flushed — timers never fired"
-
-
-def test_session_finalize_tws_never_regresses_session_end_on_late_events(spark, tmp_path):
-    """With a nonzero watermark delay a later batch can carry an event OLDER
-    than the standing session's last time. The session end must never move
-    backwards: (a) a late event must not manufacture a false split when the
-    next on-time event is still within the gap of the TRUE last time, and
-    (b) a legit split after a late event must emit the merged session with
-    the true end (r08 second-review finding)."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from kda_flink_demo_spark.streaming import protobuf_compat
-    from kda_flink_demo_spark.streaming.jobs import use_rocksdb_state
-    from kda_flink_demo_spark.streaming.session_timer import session_finalize_tws
-
-    if not protobuf_compat.tws_available():
-        pytest.skip("transformWithStateInPandas requires google.protobuf (none shimmable here)")
-
-    def ts(sec):
-        return dt.datetime(2024, 1, 1, 0, 0, 0) + dt.timedelta(seconds=sec)
-
-    schema = T.StructType(
-        [
-            T.StructField("railway_class", T.StringType()),
-            T.StructField("rowtime", T.TimestampType()),
-        ]
-    )
-
-    def run(name, chunks):
-        replay = str(tmp_path / f"replay_{name}")
-        for i, secs in enumerate(chunks):
-            spark.createDataFrame(
-                [("k", ts(s)) for s in secs], schema
-            ).coalesce(1).write.parquet(f"{replay}/chunk={i:02d}")
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(replay + "/chunk=*")
-        )
-        out_dir = str(tmp_path / f"out_{name}")
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        use_rocksdb_state(spark)
-        try:
-            q = (
-                session_finalize_tws(
-                    stream, gap_seconds=300, watermark_delay="10 minutes"
-                )
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-        finally:
-            if prev:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-            else:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        return spark.read.parquet(out_dir).collect()
-
-    # (a) late 900s between 1000s and 1250s: 1250 - TRUE last (1000) = 250s
-    # < gap — one merged session, still open at stream end → NO emission
-    # (the pre-fix code regressed last to 900 and emitted a false split)
-    assert run("false_split", [[1000], [900], [1250]]) == []
-
-    # (b) late 900s then a 2000s event: legit split — the closed session is
-    # the MERGED one (start 900, end = true last 1000 + gap, count 2)
-    got = run("legit_split", [[1000], [900, 2000]])
-    assert len(got) == 1
-    r = got[0]
-    assert r.railway_class == "k"
-    assert r.railway_class_count == 2
-    assert r.window_start == ts(900)
-    assert r.window_end == ts(1300)
-
-
 def test_session_tail_flush_contract(spark, tmp_path):
-    """The terminal-tail contract (README divergence note, r10 verdict
-    directive 7): a key's LAST session stays open at query stop — Spark's
-    watermark never passes the final event, so its timer can never fire and
-    flushing from close() would double-emit on replay. A heartbeat that DOES
-    advance the watermark past last+gap (any later event, any key) flushes
-    the tail exactly once through the normal timer path."""
+    """The terminal-tail contract of ``jobs.job_session`` (README divergence
+    note): a key's LAST session stays open at query stop — append mode emits
+    a session once the watermark passes its end (last event + gap), and
+    Spark's watermark never passes the final event of a bounded replay.
+    Emitting open sessions at stop would double-emit on replay. A heartbeat
+    that DOES advance the watermark past last+gap (any later event, any key)
+    flushes the tail exactly once."""
     import datetime as dt
 
     from pyspark.sql import types as T
-
-    from kda_flink_demo_spark.streaming import protobuf_compat
-    from kda_flink_demo_spark.streaming.jobs import use_rocksdb_state
-    from kda_flink_demo_spark.streaming.session_timer import session_finalize_tws
-
-    if not protobuf_compat.tws_available():
-        pytest.skip("transformWithStateInPandas requires google.protobuf (none shimmable here)")
 
     def ts(sec):
         return dt.datetime(2024, 1, 1, 0, 0, 0) + dt.timedelta(seconds=sec)
@@ -1465,39 +1088,32 @@ def test_session_tail_flush_contract(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .load(replay + "/chunk=*")
         )
-        out_dir = str(tmp_path / f"out_{name}")
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        use_rocksdb_state(spark)
-        try:
-            q = (
-                session_finalize_tws(stream, gap_seconds=120)
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-        finally:
-            if prev:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-            else:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        sink = DuckDBUpsertSink(
+            str(tmp_path / f"sink_{name}.duckdb"),
+            "sessions",
+            jobs.TUMBLING_SINK_KEYS,
+            jobs.TUMBLING_SINK_SCHEMA,
+        )
+        result = jobs.job_session(stream, gap="120 seconds")
+        _run(spark, result, sink, str(tmp_path / f"ckpt_{name}"))
+        cols, got = sink.read_all()
         return {
-            (r.railway_class, r.window_start): (r.window_end, r.railway_class_count)
-            for r in spark.read.parquet(out_dir).collect()
+            (r[cols.index("railway_class")], r[cols.index("window_start")]): (
+                r[cols.index("window_end")],
+                r[cols.index("railway_class_count")],
+            )
+            for r in got
         }
 
-    # without a heartbeat: the in-batch split closes session 1 ({0,10} →
-    # end 130), the tail {200} stays open forever — exactly one emission
+    # without a heartbeat: the watermark reaches 200, which closes session 1
+    # ({0,10} → end 130); the tail {200} (end 320) stays open — exactly one
+    # emission
     got = run("no_heartbeat", [[("A", 0), ("A", 10), ("A", 200)]])
     assert got == {("A", ts(0)): (ts(130), 2)}
 
     # heartbeats on an UNRELATED key advance the watermark past 200+120:
-    # A's tail flushes exactly once via handleExpiredTimer (batch 3 runs with
-    # batch 2's watermark, so the heartbeat needs a successor batch), and the
-    # heartbeat key's own tail now holds the contract's open slot
+    # A's tail flushes exactly once, and the heartbeat key's own tail now
+    # holds the contract's open slot
     got = run(
         "heartbeat",
         [
@@ -1513,8 +1129,9 @@ def test_session_tail_flush_contract(spark, tmp_path):
 
 
 def test_distinct_users_tws_mapstate_matches_batch(spark, replay_dir, tmp_path):
-    """The MapState member of the TWS family (point containsKey/updateValue
-    per user — never an iteration of the whole map): per-key exact distinct
+    """The one transformWithStateInPandas operator (MapState: point
+    containsKey/updateValue per user — never an iteration of the whole
+    map): per-key exact distinct
     users upserted each micro-batch must converge to the batch
     COUNT(DISTINCT user_id) per type, and total_events to COUNT(*)."""
     from kda_flink_demo_spark.streaming import protobuf_compat
