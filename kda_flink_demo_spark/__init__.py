@@ -6,7 +6,7 @@ Layout
 ------
 - ``session``     SparkSession factory with scale-oriented defaults (AQE, Arrow, UTC).
 - ``schemas``     GeoJSON input schema (reference parity) + testdata schemas.
-- ``io``          batch/stream sources and idempotent upsert sinks.
+- ``io``          batch/stream sources and batch parquet sinks.
 - ``operators``   batch operators: projections, windows, over-windows, aggregates,
                   relational breadth (joins/sorts/sets), and ``operators.llm`` —
                   large-scale training-data pipeline ops (dedup, similarity search,

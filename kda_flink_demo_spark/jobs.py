@@ -65,15 +65,7 @@ def main(argv: list[str] | None = None) -> None:
     job = sjobs.dispatch(args.job)
     result = job(build_source(spark, args))
 
-    if args.job in ("StreamJobSqlSliding", "StreamJobSingle"):
-        schema_sql, keys = sjobs.SLIDING_SINK_SCHEMA, sjobs.SLIDING_SINK_KEYS
-        table = "sliding"
-    elif args.job == "StreamJobSqlHopping":
-        schema_sql = sjobs.TUMBLING_SINK_SCHEMA + ", received_on TIMESTAMP"
-        keys, table = sjobs.TUMBLING_SINK_KEYS, "tumbling"
-    else:
-        schema_sql, keys, table = sjobs.TUMBLING_SINK_SCHEMA, sjobs.TUMBLING_SINK_KEYS, "tumbling"
-
+    table, keys, schema_sql = sjobs.JOB_SINKS[args.job]
     sink = DuckDBUpsertSink(args.sink_db, table, keys, schema_sql)
     query = sjobs.run_to_sink(result, sink, args.checkpoint, available_now=not args.watch)
     query.awaitTermination()

@@ -12,20 +12,21 @@ from the Kinesis source in production or a file replay locally (io.sources) —
 applies a 0-second watermark (the reference's punctuated max-event-time
 watermark, T2; micro-batch granularity divergence documented in SURVEY §2.3),
 and returns an append-mode DataFrame matching the reference's sink contract.
-``run_to_sink`` wires any of them into the idempotent upsert sink with a
-checkpoint location — the whole O5 write-ahead machinery.
+``run_to_sink`` wires any of them into a ``foreachBatch`` sink (the idempotent
+upsert sink for the jobs, see ``JOB_SINKS``) with a checkpoint location — the
+whole O5 write-ahead machinery.
 """
 
 from __future__ import annotations
 
 import threading
+from collections.abc import Callable
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
 from kda_flink_demo_spark.operators.windows import hopping_counts, tumbling_counts
 from kda_flink_demo_spark.streaming.sliding_state import sliding_range_count_stream
-from kda_flink_demo_spark.streaming.upsert import DuckDBUpsertSink
 
 WATERMARK = "0 seconds"  # zero allowed lateness, per the reference's assigner
 
@@ -159,6 +160,28 @@ JOB_REGISTRY = {
 }
 
 
+_TUMBLING_SINK = ("tumbling", TUMBLING_SINK_KEYS, TUMBLING_SINK_SCHEMA)
+_SLIDING_SINK = ("sliding", SLIDING_SINK_KEYS, SLIDING_SINK_SCHEMA)
+
+# job name -> (table, primary key, DuckDB column schema) of its upsert sink;
+# the schema's columns are the job's output columns on a replay or Kinesis
+# event stream (event_id, railway_class, rowtime)
+JOB_SINKS = {
+    "StreamJobSqlTumbling": _TUMBLING_SINK,
+    "StreamJobTumbling": _TUMBLING_SINK,
+    "StreamJobTumblingOffset": _TUMBLING_SINK,
+    "StreamJobSqlHopping": (
+        "tumbling", TUMBLING_SINK_KEYS, TUMBLING_SINK_SCHEMA + ", received_on TIMESTAMP"
+    ),
+    "StreamJobSqlSliding": _SLIDING_SINK,
+    "StreamJobSingle": _SLIDING_SINK,
+    "StreamJobSession": _TUMBLING_SINK,
+    "StreamJobDedup": (
+        "dedup", ["event_id"], "event_id BIGINT, railway_class VARCHAR, rowtime TIMESTAMP"
+    ),
+}
+
+
 def dispatch(job_class_name: str):
     """Single-job dispatch replicating the reference Starter's *intent* — without
     its missing-break fall-through bug (Starter.java:31-42, SURVEY §7.3)."""
@@ -201,14 +224,18 @@ def _start_conf(spark, checkpoint_dir: str) -> dict[str, str]:
 
 def run_to_sink(
     result: DataFrame,
-    sink: DuckDBUpsertSink,
+    sink: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """Start the streaming query into the idempotent upsert sink with a
-    checkpoint — Spark replays failed batches under the same batchId, the keyed
-    upsert absorbs the replay (the reference's 244-line checkpoint-coordinated
-    WAL sink, SinkDataApiTumbling.java:30-273, in one call).
+    """Start an append-mode streaming query into ``sink`` with a checkpoint.
+    ``sink`` is any ``foreachBatch`` callable ``(batch_df, batch_id)``: an
+    idempotent upsert sink (``upsert.DuckDBUpsertSink``), a standing-store
+    fold, or a collector. Spark replays a failed batch under the same
+    batchId, and the keyed upsert absorbs the replay (the reference's
+    244-line checkpoint-coordinated WAL sink,
+    SinkDataApiTumbling.java:30-273, in one call). ``available_now`` drains
+    what is there and stops; otherwise the query runs until stopped.
 
     A new checkpoint starts with fewer shuffle/state partitions than batch
     queries use. AQE does not coalesce a stateful streaming shuffle, and

@@ -14,24 +14,42 @@ the same effectively-exactly-once result — in ~15 lines instead of 244
 (RAILWAY_CLASS, WINDOW_START, WINDOW_END) (`README.MD:88`).
 
 Local implementation targets DuckDB (present in this container, real ON
-CONFLICT semantics). `jdbc_upsert_sql` emits the identical statement for a
-PostgreSQL JDBC writer on a real cluster.
+CONFLICT semantics). Both writers here build their statement's ON CONFLICT
+clause with ``on_conflict_sql``: ``DuckDBUpsertSink`` (driver-side, one
+statement per micro-batch) and ``jdbc_partition_writer`` (executor-side
+batched statements against a PostgreSQL-style server).
 
 Scale notes: the upserted stream is the *aggregated* windowed output — small by
 construction (cardinality = windows × keys), so a driver-side DB write per
-micro-batch is fine; for high-cardinality sinks, swap the executor path in
-(`df.write.jdbc` to a staging table + MERGE, or Delta `MERGE INTO`) — same
-idempotency argument, batchId-keyed.
+micro-batch is fine; for high-cardinality sinks against a server, compose
+``jdbc_partition_writer`` inside ``foreachBatch`` so every executor partition
+writes its own rows — same idempotency argument, the keyed upsert absorbs a
+replayed batch.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 import threading
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
+
+
+def on_conflict_sql(table: str, cols: list[str], key_cols: list[str], merge: str = "overwrite") -> str:
+    """The ON CONFLICT clause of a keyed upsert of ``cols`` into ``table``:
+    update the non-key columns (``merge`` as in ``DuckDBUpsertSink``), or DO
+    NOTHING when every column IS a key (a pure distinct-keys sink — 'DO
+    UPDATE SET' with an empty list would be a SQL syntax error)."""
+    updates = [c for c in cols if c not in key_cols]
+    if not updates:
+        action = "DO NOTHING"
+    elif merge == "max":
+        action = "DO UPDATE SET " + ", ".join(
+            f"{c} = greatest({table}.{c}, excluded.{c})" for c in updates
+        )
+    else:
+        action = "DO UPDATE SET " + ", ".join(f"{c} = excluded.{c}" for c in updates)
+    return f"ON CONFLICT ({', '.join(key_cols)}) {action}"
 
 
 class DuckDBUpsertSink:
@@ -56,7 +74,8 @@ class DuckDBUpsertSink:
         watermark by one micro-batch, so a window reopened by barely-late rows
         can re-emit a PARTIAL count; max-merge keeps the complete value while
         staying idempotent under replays."""
-        assert merge in ("overwrite", "max")
+        if merge not in ("overwrite", "max"):
+            raise ValueError(f"merge must be 'overwrite' or 'max', not {merge!r}")
         self.db_path = db_path
         self.table = table
         self.key_cols = key_cols
@@ -80,35 +99,19 @@ class DuckDBUpsertSink:
         finally:
             con.close()
 
-    def _conflict_action(self, cols: list[str]) -> str:
-        """The ON CONFLICT action: keyed update of the non-key columns, or DO
-        NOTHING when every column IS a key (a pure distinct-keys sink —
-        'DO UPDATE SET' with an empty list would be a SQL syntax error)."""
-        updates = [c for c in cols if c not in self.key_cols]
-        if not updates:
-            return "DO NOTHING"
-        if self.merge == "max":
-            set_sql = ", ".join(
-                f"{c} = greatest({self.table}.{c}, excluded.{c})" for c in updates
-            )
-        else:
-            set_sql = ", ".join(f"{c} = excluded.{c}" for c in updates)
-        return f"DO UPDATE SET {set_sql}"
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         pdf = batch_df.toPandas()
         if pdf.empty:
             return
         cols = list(pdf.columns)
-        action = self._conflict_action(cols)
+        conflict = on_conflict_sql(self.table, cols, self.key_cols, self.merge)
         with self._lock:
             con = self._connect()
             try:
                 con.register("_batch", pdf)
                 con.execute(
                     f"INSERT INTO {self.table} ({', '.join(cols)}) "
-                    f"SELECT {', '.join(cols)} FROM _batch "
-                    f"ON CONFLICT ({', '.join(self.key_cols)}) {action}"
+                    f"SELECT {', '.join(cols)} FROM _batch {conflict}"
                 )
             finally:
                 con.close()
@@ -121,70 +124,6 @@ class DuckDBUpsertSink:
             return cols, cur.fetchall()
         finally:
             con.close()
-
-
-class ExecutorStagedUpsertSink(DuckDBUpsertSink):
-    """Executor-parallel production sink: task-side row writes + one
-    transactional MERGE-style promote per micro-batch.
-
-    The reference's sinks write rows from task threads
-    (sink/SinkDataApiTumbling.java:59-85); ``DuckDBUpsertSink`` instead funnels
-    every micro-batch through the driver (``toPandas``) — fine for
-    aggregate-cardinality output, a bottleneck for raw rows. This sink keeps
-    the ROW DATA PATH on the executors: each task writes its partition
-    directly to a batchId-keyed staging directory
-    (``batch_df.write.parquet`` — no rows ever reach the driver), then the
-    driver issues a single ``INSERT … ON CONFLICT`` from the staged files.
-    That is the standard scale pattern (JDBC staging table + MERGE, Delta
-    ``MERGE INTO``): data moves executor→storage in parallel, the commit is
-    one statement.
-
-    Idempotence: a replayed micro-batch (same batchId after failure/restart)
-    overwrites the SAME staging path and re-upserts the same keys — the
-    O5/O8 effectively-exactly-once contract, verified by the same
-    replay/crash tests as the driver-side sink.
-    """
-
-    def __init__(
-        self,
-        db_path: str,
-        table: str,
-        key_cols: list[str],
-        schema_sql: str,
-        staging_dir: str,
-        merge: str = "overwrite",
-    ):
-        super().__init__(db_path, table, key_cols, schema_sql, merge)
-        self.staging_dir = staging_dir
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # No isEmpty() pre-check: foreachBatch DataFrames re-execute their plan
-        # per action, so probing emptiness would run the batch computation
-        # twice for every NON-empty batch (the common case). An empty batch
-        # just writes a schema-only part file, upserts zero rows, and has its
-        # staging removed below — constant cost, no second plan execution.
-        staging = os.path.join(self.staging_dir, f"batch_id={batch_id}")
-        # task-side writes: one parquet file per partition, straight from the
-        # executors; mode=overwrite makes batch replay idempotent at this stage
-        batch_df.write.mode("overwrite").parquet(staging)
-        cols = batch_df.columns
-        action = self._conflict_action(cols)
-        glob = os.path.join(staging, "*.parquet")
-        with self._lock:
-            con = self._connect()
-            try:
-                con.execute(
-                    f"INSERT INTO {self.table} ({', '.join(cols)}) "
-                    f"SELECT {', '.join(cols)} FROM read_parquet('{glob}') "
-                    f"ON CONFLICT ({', '.join(self.key_cols)}) {action}"
-                )
-            finally:
-                con.close()
-        # staged data is committed — drop it so a long-running query's staging
-        # dir stays O(1 batch), not O(all batches). A crash BEFORE this point
-        # replays the batch: the overwrite re-stages and the PK upsert is
-        # idempotent, so cleanup does not weaken the exactly-once contract.
-        shutil.rmtree(staging, ignore_errors=True)
 
 
 def jdbc_partition_writer(
@@ -208,7 +147,7 @@ def jdbc_partition_writer(
     ``connect_fn`` must be picklable (module-level function / functools.partial
     capturing DSN strings, not a live connection). Idempotence comes from the
     ``ON CONFLICT`` statement itself, so micro-batch replays are safe exactly
-    as in the staged variant. No server ships in this container — the batching
+    as in ``DuckDBUpsertSink``. No server ships in this container — the batching
     and statement logic are unit-tested against a recording fake connection.
     """
     sql = jdbc_upsert_sql(table, cols, key_cols)
@@ -232,69 +171,11 @@ def jdbc_partition_writer(
     return write_partition
 
 
-class ForeachRowUpsertWriter:
-    """Per-RECORD sink shim (reference O2, sink/SinkDataApiSingle.java:19-99):
-    Spark's ``df.writeStream.foreach(writer)`` contract — ``open(partition_id,
-    epoch_id)`` / ``process(row)`` / ``close(error)``. Rows buffer in-process
-    and flush as batched ``ON CONFLICT`` upserts on buffer-full and on close,
-    exactly the reference's buffer-then-flush loop.
-
-    The idiomatic form remains ``foreachBatch`` (micro-batch IS the buffer;
-    SURVEY §2.8) — this class exists for API parity and for sinks that only
-    expose a row-level client. Same picklable ``connect_fn`` contract and
-    statement as ``jdbc_partition_writer``; unit-tested against the recording
-    fake (no DB server in this container).
-    """
-
-    def __init__(
-        self,
-        connect_fn: Callable[[], object],
-        table: str,
-        cols: list[str],
-        key_cols: list[str],
-        buffer_size: int = 200,
-    ):
-        self.connect_fn = connect_fn
-        self.table = table
-        self.cols = cols
-        self.key_cols = key_cols
-        self.buffer_size = buffer_size
-        self._sql = jdbc_upsert_sql(table, cols, key_cols)
-        self._con = None
-        self._buf: list[tuple] = []
-
-    def open(self, partition_id: int, epoch_id: int) -> bool:
-        self._con = self.connect_fn()
-        self._buf = []
-        return True
-
-    def _flush(self) -> None:
-        if self._buf:
-            self._con.cursor().executemany(self._sql, self._buf)
-            self._buf = []
-
-    def process(self, row) -> None:
-        self._buf.append(tuple(row[c] for c in self.cols))
-        if len(self._buf) >= self.buffer_size:
-            self._flush()
-
-    def close(self, error) -> None:
-        try:
-            if error is None:
-                self._flush()
-                self._con.commit()
-        finally:
-            self._con.close()
-
-
-def jdbc_upsert_sql(table: str, cols: list[str], key_cols: list[str], constraint: str | None = None) -> str:
+def jdbc_upsert_sql(table: str, cols: list[str], key_cols: list[str]) -> str:
     """The PostgreSQL statement the production JDBC sink issues per row batch —
     same shape as the reference's (sink/SinkDataApiTumbling.java:236-238)."""
-    updates = [c for c in cols if c not in key_cols]
-    conflict = f"ON CONSTRAINT {constraint}" if constraint else f"({', '.join(key_cols)})"
-    set_sql = ", ".join(f"{c} = EXCLUDED.{c}" for c in updates)
     placeholders = ", ".join(["?"] * len(cols))
     return (
         f"INSERT INTO {table} ({', '.join(cols)}) VALUES ({placeholders}) "
-        f"ON CONFLICT {conflict} DO UPDATE SET {set_sql}"
+        + on_conflict_sql(table, cols, key_cols)
     )

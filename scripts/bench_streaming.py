@@ -20,21 +20,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql import types as T  # noqa: E402
 
-from kda_flink_demo_spark.io.sources import load_table  # noqa: E402
+from kda_flink_demo_spark.io.sources import file_events_stream, load_table  # noqa: E402
+from kda_flink_demo_spark.jobs import REPLAY_SCHEMA  # noqa: E402
 from kda_flink_demo_spark.session import get_spark  # noqa: E402
 from kda_flink_demo_spark.streaming import jobs  # noqa: E402
 from kda_flink_demo_spark.streaming.upsert import DuckDBUpsertSink  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("railway_class", T.StringType()),
-        T.StructField("rowtime", T.TimestampType()),
-    ]
-)
 
 
 def main() -> None:
@@ -64,16 +57,9 @@ def main() -> None:
         )
 
     results = {}
-    for job_name, table, keys, schema_sql in [
-        ("StreamJobSqlTumbling", "tumbling", jobs.TUMBLING_SINK_KEYS, jobs.TUMBLING_SINK_SCHEMA),
-        ("StreamJobSqlSliding", "sliding", jobs.SLIDING_SINK_KEYS, jobs.SLIDING_SINK_SCHEMA),
-    ]:
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .load(tmp + "/replay/chunk=*")
-        )
+    for job_name in ("StreamJobSqlTumbling", "StreamJobSqlSliding"):
+        table, keys, schema_sql = jobs.JOB_SINKS[job_name]
+        stream = file_events_stream(spark, tmp + "/replay/chunk=*", REPLAY_SCHEMA)
         sink = DuckDBUpsertSink(f"{tmp}/{table}.duckdb", table, keys, schema_sql)
         t0 = time.time()
         q = jobs.run_to_sink(jobs.dispatch(job_name)(stream), sink, f"{tmp}/ckpt_{job_name}")

@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import functions as F
-
 from kda_flink_demo_spark.io.sources import file_geojson_stream
 from kda_flink_demo_spark.operators.projections import project_railway_events
 from kda_flink_demo_spark.streaming import jobs

@@ -27,7 +27,7 @@ from kda_flink_demo_spark.io.fake_kinesis import (
 def test_kinesis_reader_contract_end_to_end(spark, tmp_path):
     spark.dataSource.register(FakeKinesisDataSource)
     parsed = sources.kinesis_geojson_stream(spark)  # production defaults
-    q = (
+    q = (  # by hand: this pins the Kinesis reader contract, not a file replay
         parsed.writeStream.format("memory")
         .queryName("fake_kinesis_sink")
         .option("checkpointLocation", str(tmp_path / "ck"))

@@ -8,7 +8,7 @@ import pytest
 
 from kda_flink_demo_spark.io.sources import load_table
 from kda_flink_demo_spark.operators.llm import dedup, similarity
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, drain, write_replay
 
 
 @pytest.fixture(scope="module")
@@ -224,8 +224,6 @@ def test_quantize_roundtrip_error_bound(embeddings):
 def test_apply_dedup_drops_exactly_noncanonical(documents):
     """Survivor count = corpus − Σ(cluster_size − 1); every canonical survives,
     no non-canonical does."""
-    from pyspark.sql import functions as F
-
     from kda_flink_demo_spark.operators.llm import clustering
 
     pairs = dedup.minhash_lsh_pairs(documents, threshold=0.8)
@@ -1519,12 +1517,9 @@ def test_editdist_store_real_stream_matches_one_shot_gate(spark, tmp_path):
     SEEN texts (not just survivors), the streamed fold over batch-ordered
     ids is exactly equivalent to ONE ingest_editdist_gate over everything
     with an empty corpus — the batch-as-oracle identity this test pins."""
-    import glob
-    import os as _os
-    import time as _time
-
     from pyspark.sql import types as T
 
+    from kda_flink_demo_spark.io.sources import file_events_stream
     from kda_flink_demo_spark.operators.llm.dedup import ingest_editdist_gate
     from kda_flink_demo_spark.streaming.standing_stores import (
         update_editdist_index_store,
@@ -1549,33 +1544,20 @@ def test_editdist_store_real_stream_matches_one_shot_gate(spark, tmp_path):
             (23, "a closing unique document nothing matches"),
         ],
     ]
-    replay = tmp_path / "replay"
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
-            str(replay / f"chunk={i:02d}")
-        )
-    for i, f in enumerate(sorted(glob.glob(str(replay / "chunk=*/*.parquet")))):
-        _os.utime(f, (_time.time() + i, _time.time() + i))
+    replay = write_replay(
+        str(tmp_path / "replay"),
+        [spark.createDataFrame(rows, "doc_id long, text string") for rows in batches],
+    )
 
     schema = T.StructType(
         [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
     )
     store, sink = str(tmp_path / "ed_idx"), str(tmp_path / "ed_clean")
-    q = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(replay / "chunk=*"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(
-            lambda df, bid: update_editdist_index_store(df, bid, store, sink)
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        file_events_stream(spark, replay, schema),
+        lambda df, bid: update_editdist_index_store(df, bid, store, sink),
+        str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(300)
-    assert not q.isActive
 
     streamed = {r.doc_id for r in spark.read.parquet(sink).collect()}
     all_docs = spark.createDataFrame(

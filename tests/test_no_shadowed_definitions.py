@@ -1,7 +1,8 @@
 """A module or class body that defines the same function or class name twice
 keeps only the last definition: the earlier ones are dead code, and a
-shadowed test is never collected, so it passes silently forever. With no
-linter in the repo, this test is the check."""
+shadowed test is never collected, so it passes silently forever. A name that
+is imported and never read is dead code too. With no linter in the repo,
+these tests are the check."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import pytest
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 CHECKED = ("tests", "kda_flink_demo_spark")
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
 def _shadowed(tree: ast.Module) -> list[str]:
@@ -36,3 +38,44 @@ def test_no_name_is_defined_twice_in_one_body(package):
         if dup:
             found[str(path.relative_to(ROOT))] = dup
     assert not found, f"shadowed definitions: {found}"
+
+
+def _unused_imports(tree: ast.Module, lines: list[str]) -> list[str]:
+    """``name line`` for every name a module or function body imports and
+    never reads (a module's names may be read anywhere in it, or listed in
+    ``__all__``). ``__future__`` imports and ``# noqa`` lines are exempt."""
+    out = []
+    for scope in [tree] + [n for n in ast.walk(tree) if isinstance(n, FUNCS)]:
+        imported, todo = [], list(scope.body)
+        while todo:
+            node = todo.pop()
+            if isinstance(node, DEFS + (ast.Lambda,)):
+                continue  # a nested body is its own scope
+            todo.extend(ast.iter_child_nodes(node))
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(node, "module", None) == "__future__" or "# noqa" in lines[node.lineno - 1]:
+                continue
+            imported += [
+                ((a.asname or a.name).split(".")[0], node.lineno) for a in node.names if a.name != "*"
+            ]
+        read = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+        if scope is tree:
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Assign) and any(
+                    isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+                ):
+                    read |= {c.value for c in ast.walk(node.value) if isinstance(c, ast.Constant)}
+        out += [f"{name} {line}" for name, line in imported if name not in read]
+    return out
+
+
+@pytest.mark.parametrize("package", CHECKED)
+def test_no_import_is_unused(package):
+    found = {}
+    for path in sorted((ROOT / package).rglob("*.py")):
+        text = path.read_text()
+        unused = _unused_imports(ast.parse(text, filename=str(path)), text.splitlines())
+        if unused:
+            found[str(path.relative_to(ROOT))] = unused
+    assert not found, f"unused imports: {found}"

@@ -6,7 +6,6 @@ tests pin the operator-level contracts and edge cases the fixture can't hit."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -322,8 +321,6 @@ def test_prefix_sum_family_deterministic_and_correct_at_sampling_scale(spark):
     At 5000 rows the unpinned version is nondeterministic run-to-run and
     disagrees with the plain-window spec; the lazy localCheckpoint pin must
     hold both properties."""
-    import math
-
     from kda_flink_demo_spark.operators.llm import sampling
 
     docs = spark.range(5000).select(

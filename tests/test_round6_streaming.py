@@ -5,14 +5,13 @@ computation as oracle, with fault-injection and replay-idempotence coverage
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kda_flink_demo_spark.io.sources import load_table
+from kda_flink_demo_spark.io.sources import file_events_stream, load_table
 from kda_flink_demo_spark.operators.cdc import scd2_history
 from kda_flink_demo_spark.streaming.standing_stores import (
     diff_snapshot_versions,
@@ -21,7 +20,7 @@ from kda_flink_demo_spark.streaming.standing_stores import (
     update_scd2_store,
     update_snapshot_version_store,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, build_replay, drain
 
 _SCD2_ARGS = dict(
     keys=["user_id"], attr_cols=["event_type"], ts_col="ts", tie_col="event_id"
@@ -35,25 +34,15 @@ def _canon(df):
 def _event_chunks(spark, tmp_path, n_chunks=4):
     """Time-ordered event chunks (per-key in-order arrival, the CDC
     contract), one parquet file each so maxFilesPerTrigger=1 replays them as
-    separate micro-batches in order."""
+    separate micro-batches in order. Returns the replay glob and the
+    chunks."""
     ev = (
         load_table(spark, SF_DIR, "events")
         .select("user_id", "event_type", "ts", "event_id")
         .orderBy("ts", "event_id")
     )
-    rows = ev.collect()
-    chunk = (len(rows) + n_chunks - 1) // n_chunks
-    out = tmp_path / "scd2_replay"
-    out.mkdir()
-    dfs = []
-    for i in range(n_chunks):
-        part = rows[i * chunk : (i + 1) * chunk]
-        df = spark.createDataFrame(part, ev.schema)
-        df.coalesce(1).write.parquet(str(tmp_path / f"chunk{i}"))
-        for j, f in enumerate(sorted(glob.glob(str(tmp_path / f"chunk{i}" / "*.parquet")))):
-            shutil.copy(f, out / f"c{i}_{j}.parquet")
-        dfs.append(df)
-    return str(out), dfs, ev
+    out = str(tmp_path / "scd2_replay")
+    return out + "/chunk=*", build_replay(spark, ev, out, n_chunks)
 
 
 def _scd2_expected(spark):
@@ -67,7 +56,7 @@ def test_streaming_scd2_store_matches_batch(spark, tmp_path):
     """Fold time-ordered CDC micro-batches into the standing transition log;
     the derived history must equal the one-shot batch scd2_history, and a
     checkpoint-style duplicate replay of an old batch must not change it."""
-    replay, dfs, _ = _event_chunks(spark, tmp_path)
+    replay, dfs = _event_chunks(spark, tmp_path)
     store = str(tmp_path / "scd2_store")
     schema = T.StructType(
         [
@@ -78,20 +67,11 @@ def test_streaming_scd2_store_matches_batch(spark, tmp_path):
         ]
     )
     n_batches = []
-    q = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(replay)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(
-            lambda df, bid: (update_scd2_store(df, store, **_SCD2_ARGS), n_batches.append(bid))
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        file_events_stream(spark, replay, schema),
+        lambda df, bid: (update_scd2_store(df, store, **_SCD2_ARGS), n_batches.append(bid)),
+        str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(300)
     assert len(n_batches) >= 2  # genuinely incremental
 
     expected = _scd2_expected(spark)
@@ -107,7 +87,7 @@ def test_streaming_scd2_store_crash_recovery(spark, tmp_path):
     """Crash between the promote's delete and rename (store gone, complete
     .next present) must be recovered by the next fold, not treated as a
     fresh store."""
-    _, dfs, _ = _event_chunks(spark, tmp_path)
+    _, dfs = _event_chunks(spark, tmp_path)
     store = str(tmp_path / "scd2_store")
     update_scd2_store(dfs[0], store, **_SCD2_ARGS)
     update_scd2_store(dfs[1], store, **_SCD2_ARGS)

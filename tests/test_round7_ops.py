@@ -9,7 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, drain, write_replay
 
 
 def _docs(spark, n=200):
@@ -292,9 +292,7 @@ def test_span_index_real_stream_matches_batch(spark, tmp_path):
     partitions must equal one-shot span_dedup_apply over everything replayed.
     Files are replayed one per trigger in doc_id order (the probe's ordering
     contract — mtimes pin FileStreamSource's ordering)."""
-    import glob
-    import time as _time
-
+    from kda_flink_demo_spark.io.sources import file_events_stream
     from kda_flink_demo_spark.operators.llm.dedup import span_dedup_apply
     from kda_flink_demo_spark.streaming.standing_stores import (
         update_span_index_store,
@@ -302,13 +300,10 @@ def test_span_index_real_stream_matches_batch(spark, tmp_path):
 
     span = 5
     docs = _docs(spark, n=150).select("doc_id", "text")
-    replay = tmp_path / "replay"
-    for i, batch in enumerate(_span_batches(spark, span)):
-        batch.select("doc_id", "text").coalesce(1).write.parquet(
-            str(replay / f"chunk={i:02d}")
-        )
-    for i, f in enumerate(sorted(glob.glob(str(replay / "chunk=*/*.parquet")))):
-        os.utime(f, (_time.time() + i, _time.time() + i))
+    replay = write_replay(
+        str(tmp_path / "replay"),
+        [batch.select("doc_id", "text") for batch in _span_batches(spark, span)],
+    )
 
     from pyspark.sql import types as T
 
@@ -316,23 +311,11 @@ def test_span_index_real_stream_matches_batch(spark, tmp_path):
         [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
     )
     store, sink_dir = str(tmp_path / "idx"), str(tmp_path / "clean")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(replay / "chunk=*"))
+    drain(
+        file_events_stream(spark, replay, schema),
+        lambda df, bid: update_span_index_store(df, bid, store, sink_dir, span=span),
+        str(tmp_path / "ckpt"),
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(
-            lambda df, bid: update_span_index_store(df, bid, store, sink_dir, span=span)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert not q.isActive
 
     streamed = spark.read.parquet(sink_dir)
     batch_ref = span_dedup_apply(docs, span=span)
@@ -1038,6 +1021,7 @@ def test_cms_store_real_stream_matches_one_pass(spark, tmp_path):
     bit-equal to one-pass cms_state over every replayed row."""
     from pyspark.sql import types as T
 
+    from kda_flink_demo_spark.io.sources import file_events_stream
     from kda_flink_demo_spark.operators.sketches import cms_state
     from kda_flink_demo_spark.streaming.standing_stores import (
         cms_from_store,
@@ -1046,29 +1030,18 @@ def test_cms_store_real_stream_matches_one_pass(spark, tmp_path):
 
     docs = _docs(spark, n=150)
     terms = _term_stream(docs).select("term")
-    replay = tmp_path / "replay"
-    for i in range(3):
-        _term_stream(docs.filter(F.col("doc_id") % 3 == i)).select(
-            "term"
-        ).coalesce(1).write.parquet(str(replay / f"chunk={i:02d}"))
+    replay = write_replay(
+        str(tmp_path / "replay"),
+        [_term_stream(docs.filter(F.col("doc_id") % 3 == i)).select("term") for i in range(3)],
+    )
 
     schema = T.StructType([T.StructField("term", T.StringType())])
     store = str(tmp_path / "cms")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(replay / "chunk=*"))
+    drain(
+        file_events_stream(spark, replay, schema),
+        lambda df, bid: update_cms_store(df, bid, store, depth=3, width=64),
+        str(tmp_path / "ckpt"),
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(lambda df, bid: update_cms_store(df, bid, store, depth=3, width=64))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert not q.isActive
     assert _canon(cms_from_store(spark, store)) == _canon(
         cms_state(terms, depth=3, width=64)
     )

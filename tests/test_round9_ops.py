@@ -17,6 +17,7 @@ from kda_flink_demo_spark.operators.llm.image_dedup import (
     audio_ahash,
     image_ahash,
 )
+from tests.conftest import drain, write_replay
 
 
 def _signed(w: int) -> int:
@@ -464,12 +465,9 @@ def test_image_gate_real_stream_matches_batch(spark, tmp_path):
     checkpoint (not direct fold calls): the union of the cleaned micro-batch
     partitions must equal the one-shot batch gate over everything replayed —
     here, exactly one canonical image per group (the replay's first)."""
-    import glob
-    import os
-    import time as _time
-
     from pyspark.sql import types as T
 
+    from kda_flink_demo_spark.io.sources import file_events_stream
     from kda_flink_demo_spark.operators.llm.image_dedup import image_dedup_probe
     from kda_flink_demo_spark.streaming.standing_stores import update_ahash_index_store
 
@@ -477,31 +475,19 @@ def test_image_gate_real_stream_matches_batch(spark, tmp_path):
         ids = spark.createDataFrame([(i,) for i in range(lo, hi)], "doc_id long")
         return synth_media.synth_images(ids)
 
-    replay = tmp_path / "replay"
-    for i, (lo, hi) in enumerate(((0, 40), (40, 80), (80, 120))):
-        imgs(lo, hi).coalesce(1).write.parquet(str(replay / f"chunk={i:02d}"))
-    for i, f in enumerate(sorted(glob.glob(str(replay / "chunk=*/*.parquet")))):
-        os.utime(f, (_time.time() + i, _time.time() + i))
+    replay = write_replay(
+        str(tmp_path / "replay"), [imgs(lo, hi) for lo, hi in ((0, 40), (40, 80), (80, 120))]
+    )
 
     schema = T.StructType(
         [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
     )
     store, sink_dir = str(tmp_path / "idx"), str(tmp_path / "clean")
-    q = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(replay / "chunk=*"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(
-            lambda df, bid: update_ahash_index_store(df, bid, store, sink_dir)
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        file_events_stream(spark, replay, schema),
+        lambda df, bid: update_ahash_index_store(df, bid, store, sink_dir),
+        str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(300)
-    assert not q.isActive
 
     streamed = {r.doc_id for r in spark.read.parquet(sink_dir).collect()}
     one_shot = {

@@ -8,9 +8,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kda_flink_demo_spark.io.sources import load_table, register_views
+from kda_flink_demo_spark.io.sources import file_events_stream, load_table, register_views
 from kda_flink_demo_spark.operators.windows import tumbling_counts
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, drain, write_replay
 
 
 def _rows(df):
@@ -98,9 +98,6 @@ def test_cumulate_real_stream_matches_batch(spark, tmp_path):
     cumulate_counts over everything replayed — additive windows make the
     early-firing refresh exact no matter how events split across
     micro-batches."""
-    import glob
-    import os as _os
-    import time as _time
     from datetime import datetime, timezone
 
     from pyspark.sql import types as T
@@ -116,13 +113,13 @@ def test_cumulate_real_stream_matches_batch(spark, tmp_path):
         ("a" if i % 3 else "b", datetime.fromtimestamp(base + i * 37, tz=timezone.utc))
         for i in range(120)
     ]
-    replay = tmp_path / "replay"
-    for c, chunk in enumerate((rows[:40], rows[40:80], rows[80:])):
-        spark.createDataFrame(
-            chunk, "railway_class string, rowtime timestamp"
-        ).coalesce(1).write.parquet(str(replay / f"chunk={c:02d}"))
-    for i, f in enumerate(sorted(glob.glob(str(replay / "chunk=*/*.parquet")))):
-        _os.utime(f, (_time.time() + i, _time.time() + i))
+    replay = write_replay(
+        str(tmp_path / "replay"),
+        [
+            spark.createDataFrame(chunk, "railway_class string, rowtime timestamp")
+            for chunk in (rows[:40], rows[40:80], rows[80:])
+        ],
+    )
 
     schema = T.StructType(
         [
@@ -131,19 +128,11 @@ def test_cumulate_real_stream_matches_batch(spark, tmp_path):
         ]
     )
     store = str(tmp_path / "cum_store")
-    q = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(replay / "chunk=*"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(lambda df, bid: update_cumulate_store(df, bid, store))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        file_events_stream(spark, replay, schema),
+        lambda df, bid: update_cumulate_store(df, bid, store),
+        str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(300)
-    assert not q.isActive
 
     canon = lambda df: sorted(  # noqa: E731
         (r["railway_class"], r["window_start"], r["window_end"], r["railway_class_count"])

@@ -12,12 +12,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from kda_flink_demo_spark.io.sources import load_table
+from kda_flink_demo_spark.io.sources import file_events_stream, load_table
+from kda_flink_demo_spark.jobs import REPLAY_SCHEMA
 from kda_flink_demo_spark.operators.over_windows import sliding_range_count
 from kda_flink_demo_spark.operators.windows import hopping_counts, tumbling_counts
 from kda_flink_demo_spark.streaming import jobs
 from kda_flink_demo_spark.streaming.upsert import DuckDBUpsertSink
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, build_replay, drain, write_replay
 
 
 @pytest.fixture(scope="module")
@@ -31,53 +32,12 @@ def replay_dir(spark, tmp_path_factory):
         .select("event_id", F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime"))
         .orderBy("rowtime")
     )
-    rows = ev.collect()
-    n = len(rows)
-    chunk = (n + 4) // 5
-    for i in range(5):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(f"{out}/chunk={i:02d}")
+    build_replay(spark, ev, out)
     return out
 
 
-def _build_replay(spark, df, path, n_chunks=5):
-    """Chunk an (already ordered) DataFrame into n time-ordered parquet files
-    for maxFilesPerTrigger replay — the shared builder behind replay_dir and
-    the per-test replays that need extra columns."""
-    rows = df.collect()
-    chunk = (len(rows) + n_chunks - 1) // n_chunks
-    for i in range(n_chunks):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            spark.createDataFrame(part, df.schema).coalesce(1).write.parquet(
-                f"{path}/chunk={i:02d}"
-            )
-
-
 def _stream(spark, replay_dir):
-    from kda_flink_demo_spark.schemas import EVENTS_SCHEMA
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("railway_class", T.StringType()),
-            T.StructField("rowtime", T.TimestampType()),
-        ]
-    )
-    return (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(replay_dir + "/chunk=*")
-    )
-
-
-def _run(spark, result, sink, checkpoint):
-    q = jobs.run_to_sink(result, sink, checkpoint)
-    q.awaitTermination(300)
-    assert not q.isActive
+    return file_events_stream(spark, replay_dir + "/chunk=*", REPLAY_SCHEMA)
 
 
 @contextlib.contextmanager
@@ -92,16 +52,17 @@ def _shuffle_partitions(spark, n: int):
         spark.conf.set(jobs.SHUFFLE_PARTITIONS, prev)
 
 
-def _recorded_partitions(checkpoint: str) -> list[str]:
-    """The shuffle-partition count a checkpoint's offset log recorded for each
-    planned batch (line 2 of ``offsets/<n>`` is the batch metadata)."""
+def _recorded_conf(checkpoint: str, key: str) -> list[str]:
+    """The value of session conf ``key`` a checkpoint's offset log recorded
+    for each planned batch (line 2 of ``offsets/<n>`` is the batch
+    metadata)."""
     out = []
     offsets = os.path.join(checkpoint, "offsets")
     for name in os.listdir(offsets):
         if name.isdigit():
             with open(os.path.join(offsets, name)) as f:
                 meta = json.loads(f.read().splitlines()[1])
-            out.append(meta["conf"][jobs.SHUFFLE_PARTITIONS])
+            out.append(meta["conf"][key])
     return out
 
 
@@ -115,7 +76,7 @@ def test_streaming_tumbling_matches_batch(spark, replay_dir, tmp_path):
         str(tmp_path / "sink.duckdb"), "tumbling", jobs.TUMBLING_SINK_KEYS, jobs.TUMBLING_SINK_SCHEMA
     )
     result = jobs.job_tumbling(_stream(spark, replay_dir))
-    _run(spark, result, sink, str(tmp_path / "ckpt"))
+    drain(result, sink, str(tmp_path / "ckpt"))
 
     cols, got = sink.read_all()
     batch = tumbling_counts(
@@ -159,7 +120,7 @@ def test_streaming_sliding_state_matches_batch(spark, replay_dir, tmp_path):
     )
     events = _stream(spark, replay_dir)
     result = jobs.job_sliding(events, preceding_seconds=30 * 60)
-    _run(spark, result, sink, str(tmp_path / "ckpt3"))
+    drain(result, sink, str(tmp_path / "ckpt3"))
 
     cols, got = sink.read_all()
     batch = sliding_range_count(
@@ -193,13 +154,10 @@ def test_streaming_sliding_state_matches_batch(spark, replay_dir, tmp_path):
 )
 def test_streaming_windows_match_batch(spark, replay_dir, tmp_path, job_name, batch_fn):
     """W3 offset and W4 hopping streaming jobs equal their batch twins."""
-    schema_sql = jobs.TUMBLING_SINK_SCHEMA
-    keys = jobs.TUMBLING_SINK_KEYS
-    if job_name == "StreamJobSqlHopping":
-        schema_sql += ", received_on TIMESTAMP"
-    sink = DuckDBUpsertSink(str(tmp_path / f"{job_name}.duckdb"), "w", keys, schema_sql)
+    table, keys, schema_sql = jobs.JOB_SINKS[job_name]
+    sink = DuckDBUpsertSink(str(tmp_path / f"{job_name}.duckdb"), table, keys, schema_sql)
     result = jobs.dispatch(job_name)(_stream(spark, replay_dir))
-    _run(spark, result, sink, str(tmp_path / f"ckpt_{job_name}"))
+    drain(result, sink, str(tmp_path / f"ckpt_{job_name}"))
     cols, got = sink.read_all()
     ev = load_table(spark, SF_DIR, "events").select(
         F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime")
@@ -227,7 +185,8 @@ def test_crash_recovery_mid_stream(spark, replay_dir, tmp_path):
     ckpt = str(tmp_path / "crash_ckpt")
 
     with _shuffle_partitions(spark, 32):
-        # phase 1: continuous trigger, kill after ≥1 committed batch
+        # phase 1: continuous trigger, kill after ≥1 committed batch; started
+        # by hand because it pins 32 partitions, which run_to_sink would cap
         q = (
             jobs.job_tumbling(_stream(spark, replay_dir))
             .writeStream.outputMode("append")
@@ -243,14 +202,14 @@ def test_crash_recovery_mid_stream(spark, replay_dir, tmp_path):
             time.sleep(0.5)
         q.stop()
         _, mid = sink.read_all()
-        n_batches = len(_recorded_partitions(ckpt))
+        n_batches = len(_recorded_conf(ckpt, jobs.SHUFFLE_PARTITIONS))
 
         # phase 2: restart from the same checkpoint, drain the rest
         q2 = jobs.run_to_sink(jobs.job_tumbling(_stream(spark, replay_dir)), sink, ckpt)
         q2.awaitTermination(300)
     cols, got = sink.read_all()
 
-    recorded = _recorded_partitions(ckpt)
+    recorded = _recorded_conf(ckpt, jobs.SHUFFLE_PARTITIONS)
     assert len(recorded) > n_batches and set(recorded) == {"32"}
     assert _state_partition_dirs(ckpt) == 32
 
@@ -289,7 +248,7 @@ def test_run_to_sink_caps_state_partitions_at_task_slots(spark, replay_dir, tmp_
         q.awaitTermination(300)
         assert spark.conf.get(jobs.SHUFFLE_PARTITIONS) == "32"
     assert not q.isActive and q.exception() is None
-    assert set(_recorded_partitions(ckpt)) == {str(want)}
+    assert set(_recorded_conf(ckpt, jobs.SHUFFLE_PARTITIONS)) == {str(want)}
     assert _state_partition_dirs(ckpt) == want
     assert sink.read_all()[1], "the capped query must still emit closed windows"
 
@@ -337,7 +296,7 @@ def test_concurrent_run_to_sink_starts_restore_the_session_value(spark, replay_d
     assert len(queries) == n
     for q, i in queries:
         assert not q.isActive and q.exception() is None
-        assert set(_recorded_partitions(str(tmp_path / f"c{i}"))) == {want}
+        assert set(_recorded_conf(str(tmp_path / f"c{i}"), jobs.SHUFFLE_PARTITIONS)) == {want}
 
 
 def _checkpoint_managers(query) -> set[str]:
@@ -414,8 +373,7 @@ def test_out_of_order_chunk_semantics(spark, tmp_path):
     early, late, tail = rows[: n // 3], rows[n // 3 : 2 * n // 3], rows[2 * n // 3 :]
     out = str(tmp_path / "ooo_replay")
     # arrival order: early, TAIL (jumps the watermark forward), then LATE
-    for i, part in enumerate([early, tail, late]):
-        spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(f"{out}/chunk={i:02d}")
+    write_replay(out, [spark.createDataFrame(part, ev.schema) for part in (early, tail, late)])
 
     sink = DuckDBUpsertSink(
         str(tmp_path / "ooo.duckdb"),
@@ -424,7 +382,7 @@ def test_out_of_order_chunk_semantics(spark, tmp_path):
         jobs.TUMBLING_SINK_SCHEMA,
         merge="max",
     )
-    _run(spark, jobs.job_tumbling(_stream(spark, out)), sink, str(tmp_path / "ooo_ckpt"))
+    drain(jobs.job_tumbling(_stream(spark, out)), sink, str(tmp_path / "ooo_ckpt"))
     cols, got = sink.read_all()
     got_map = {
         (r[cols.index("railway_class")], r[cols.index("window_start")], r[cols.index("window_end")]):
@@ -466,14 +424,13 @@ def test_watermark_delay_keeps_late_data(spark, tmp_path):
     tail = [r for r in rows if r.rowtime >= day(20)]
     assert late and main and tail
     out = str(tmp_path / "wm_replay")
-    for i, part in enumerate([main, late, tail]):
-        spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(f"{out}/chunk={i:02d}")
+    write_replay(out, [spark.createDataFrame(part, ev.schema) for part in (main, late, tail)])
 
     sink = DuckDBUpsertSink(
         str(tmp_path / "wm.duckdb"), "tumbling", jobs.TUMBLING_SINK_KEYS, jobs.TUMBLING_SINK_SCHEMA
     )
     result = tumbling_counts(_stream(spark, out).withWatermark("rowtime", "15 days"))
-    _run(spark, result, sink, str(tmp_path / "wm_ckpt"))
+    drain(result, sink, str(tmp_path / "wm_ckpt"))
     cols, got = sink.read_all()
     got_map = {
         (r[cols.index("railway_class")], r[cols.index("window_start")], r[cols.index("window_end")]):
@@ -502,7 +459,7 @@ def test_update_mode_with_upsert_converges_to_batch(spark, replay_dir, tmp_path)
         str(tmp_path / "upd.duckdb"), "tumbling", jobs.TUMBLING_SINK_KEYS, jobs.TUMBLING_SINK_SCHEMA
     )
     result = jobs.job_tumbling(_stream(spark, replay_dir))
-    q = (
+    q = (  # by hand: run_to_sink is append-only
         result.writeStream.outputMode("update")
         .foreachBatch(sink)
         .option("checkpointLocation", str(tmp_path / "upd_ckpt"))
@@ -529,16 +486,20 @@ def test_update_mode_with_upsert_converges_to_batch(spark, replay_dir, tmp_path)
 
 
 def test_rocksdb_state_store_provider(spark, replay_dir, tmp_path):
-    """The at-scale state backend loads and produces identical results."""
+    """The at-scale state backend loads, is the provider the query ran, and
+    produces identical results."""
     from kda_flink_demo_spark.streaming.jobs import ROCKSDB_PROVIDER, use_rocksdb_state
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(provider, None)
     use_rocksdb_state(spark)
     try:
         sink = DuckDBUpsertSink(
             str(tmp_path / "rocks.duckdb"), "tumbling", jobs.TUMBLING_SINK_KEYS, jobs.TUMBLING_SINK_SCHEMA
         )
-        _run(spark, jobs.job_tumbling(_stream(spark, replay_dir)), sink, str(tmp_path / "rocks_ckpt"))
+        ckpt = str(tmp_path / "rocks_ckpt")
+        drain(jobs.job_tumbling(_stream(spark, replay_dir)), sink, ckpt)
+        assert set(_recorded_conf(ckpt, provider)) == {ROCKSDB_PROVIDER}
         cols, got = sink.read_all()
         batch = tumbling_counts(
             load_table(spark, SF_DIR, "events").select(
@@ -559,9 +520,9 @@ def test_rocksdb_state_store_provider(spark, replay_dir, tmp_path):
             assert expected[k] == v
     finally:
         if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+            spark.conf.set(provider, prev)
         else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+            spark.conf.unset(provider)
 
 
 def test_dispatch_no_fallthrough():
@@ -570,129 +531,49 @@ def test_dispatch_no_fallthrough():
         jobs.dispatch("NoSuchJob")
 
 
-# ---------------------------------------------------------------------------
-# Executor-parallel sink (reference task-side writes, SinkDataApiTumbling.java:59-85)
-# ---------------------------------------------------------------------------
+def test_every_job_has_an_upsert_sink_for_its_output(spark, tmp_path):
+    """Each job's sink table has exactly the job's output columns, and its
+    keys are among them (built on a replay stream, never started)."""
+    stream = file_events_stream(spark, str(tmp_path), REPLAY_SCHEMA)
+    assert set(jobs.JOB_SINKS) == set(jobs.JOB_REGISTRY)
+    for name, job in jobs.JOB_REGISTRY.items():
+        table, keys, schema_sql = jobs.JOB_SINKS[name]
+        sink = DuckDBUpsertSink(str(tmp_path / f"{name}.duckdb"), table, keys, schema_sql)
+        cols, _ = sink.read_all()
+        assert cols == job(stream).columns, name
+        assert set(keys) <= set(cols), name
 
 
-def test_executor_staged_sink_streaming_matches_batch(spark, replay_dir, tmp_path):
-    from kda_flink_demo_spark.streaming.upsert import ExecutorStagedUpsertSink
+def test_cli_runs_the_dedup_job(spark, replay_dir, tmp_path):
+    """``python -m kda_flink_demo_spark.jobs --job StreamJobDedup`` drains the
+    replay into its own sink table: every event once (the fixture's
+    event_ids are unique)."""
+    from kda_flink_demo_spark import jobs as cli
 
-    sink = ExecutorStagedUpsertSink(
-        str(tmp_path / "exec_sink.duckdb"),
-        "tumbling",
-        jobs.TUMBLING_SINK_KEYS,
-        jobs.TUMBLING_SINK_SCHEMA,
-        staging_dir=str(tmp_path / "staging"),
+    db = str(tmp_path / "dedup.duckdb")
+    cli.main([
+        "--job", "StreamJobDedup", "--source-path", replay_dir + "/chunk=*",
+        "--sink-db", db, "--checkpoint", str(tmp_path / "ckpt"),
+    ])
+    table, keys, schema_sql = jobs.JOB_SINKS["StreamJobDedup"]
+    _, got = DuckDBUpsertSink(db, table, keys, schema_sql).read_all()
+    want = load_table(spark, SF_DIR, "events").select(
+        "event_id", F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime")
     )
-    result = jobs.job_tumbling(_stream(spark, replay_dir))
-    _run(spark, result, sink, str(tmp_path / "ckpt_exec"))
-
-    cols, got = sink.read_all()
-    batch = tumbling_counts(
-        load_table(spark, SF_DIR, "events").select(
-            F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime")
-        )
-    )
-    expected = {
-        (r.railway_class, r.window_start, r.window_end): r.railway_class_count
-        for r in batch.collect()
-    }
-    got_map = {
-        (r[cols.index("railway_class")], r[cols.index("window_start")], r[cols.index("window_end")]):
-        r[cols.index("railway_class_count")]
-        for r in got
-    }
-    assert len(got_map) >= len(expected) - 10
-    for k, v in got_map.items():
-        assert expected[k] == v, f"window {k}: stream={v} batch={expected[k]}"
+    assert sorted(got) == sorted(tuple(r) for r in want.collect())
 
 
-def test_executor_staged_sink_idempotent_on_replay(spark, tmp_path):
-    from kda_flink_demo_spark.streaming.upsert import ExecutorStagedUpsertSink
-
-    sink = ExecutorStagedUpsertSink(
-        str(tmp_path / "exec_sink2.duckdb"),
-        "tumbling",
-        jobs.TUMBLING_SINK_KEYS,
-        jobs.TUMBLING_SINK_SCHEMA,
-        staging_dir=str(tmp_path / "staging2"),
-    )
-    batch = tumbling_counts(
-        load_table(spark, SF_DIR, "events").select(
-            F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime")
-        )
-    )
-    sink(batch, 0)
-    _, once = sink.read_all()
-    sink(batch, 0)  # replayed micro-batch, same batchId → same staging path, same PKs
-    _, twice = sink.read_all()
-    assert sorted(once) == sorted(twice)
-    assert len(once) > 0
-
-
-def test_executor_staged_sink_crash_recovery(spark, replay_dir, tmp_path):
-    """Kill the query mid-stream, restart from the same checkpoint — the staged
-    sink must converge to the batch result exactly like the driver-side sink."""
-    from kda_flink_demo_spark.streaming.upsert import ExecutorStagedUpsertSink
-
-    sink = ExecutorStagedUpsertSink(
-        str(tmp_path / "exec_sink3.duckdb"),
-        "tumbling",
-        jobs.TUMBLING_SINK_KEYS,
-        jobs.TUMBLING_SINK_SCHEMA,
-        staging_dir=str(tmp_path / "staging3"),
-    )
-    ckpt = str(tmp_path / "ckpt_crash")
-
-    q = (
-        jobs.job_tumbling(_stream(spark, replay_dir))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    import time as _time
-
-    _time.sleep(8)
-    q.stop()  # crash mid-stream
-    q.awaitTermination(60)
-
-    # restart from the same checkpoint: pending batch replays into the sink
-    q2 = (
-        jobs.job_tumbling(_stream(spark, replay_dir))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(300)
-
-    cols, got = sink.read_all()
-    batch = tumbling_counts(
-        load_table(spark, SF_DIR, "events").select(
-            F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime")
-        )
-    )
-    expected = {
-        (r.railway_class, r.window_start, r.window_end): r.railway_class_count
-        for r in batch.collect()
-    }
-    for r in got:
-        k = (
-            r[cols.index("railway_class")],
-            r[cols.index("window_start")],
-            r[cols.index("window_end")],
-        )
-        assert expected[k] == r[cols.index("railway_class_count")]
+def test_upsert_sink_rejects_an_unknown_merge(tmp_path):
+    with pytest.raises(ValueError, match="merge"):
+        DuckDBUpsertSink(str(tmp_path / "m.duckdb"), "t", ["k"], "k BIGINT, v BIGINT", merge="sum")
 
 
 def test_jdbc_partition_writer_batches_and_commits():
     """The per-partition JDBC writer (task-thread twin of the reference sink):
     verify statement shape, executemany chunking, and commit/close — against a
-    recording fake connection (no DB server in this container)."""
+    recording fake connection (no DB server in this container). A table whose
+    every column is a key gets ON CONFLICT DO NOTHING: 'DO UPDATE SET' with an
+    empty column list is a SQL syntax error."""
     from kda_flink_demo_spark.streaming.upsert import jdbc_partition_writer
 
     class FakeCursor:
@@ -729,8 +610,13 @@ def test_jdbc_partition_writer_batches_and_commits():
     chunks = [r for op, _, r in con.log if op == "executemany"]
     assert [len(c) for c in chunks] == [2, 2, 1]
     sql = con.log[0][1]
-    assert "ON CONFLICT (k) DO UPDATE SET v = EXCLUDED.v" in sql
+    assert "ON CONFLICT (k) DO UPDATE SET v = excluded.v" in sql
     assert sql.startswith("INSERT INTO t (k, v) VALUES (?, ?)")
+
+    jdbc_partition_writer(FakeConn, "seen", ["k"], ["k"])(iter([{"k": 1}]))
+    assert FakeConn.instances[-1].log[0][1] == (
+        "INSERT INTO seen (k) VALUES (?) ON CONFLICT (k) DO NOTHING"
+    )
 
 
 def test_streaming_exact_dedup_emits_each_event_once(spark, replay_dir, tmp_path):
@@ -750,116 +636,31 @@ def test_streaming_exact_dedup_emits_each_event_once(spark, replay_dir, tmp_path
         shutil.copy(f, dup_dir / f"a{i:02d}.parquet")
         shutil.copy(f, dup_dir / f"b{i:02d}.parquet")
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("railway_class", T.StringType()),
-            T.StructField("rowtime", T.TimestampType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(dup_dir))
-        .dropDuplicates(["event_id"])
-    )
+    stream = file_events_stream(spark, str(dup_dir), REPLAY_SCHEMA).dropDuplicates(["event_id"])
     emitted = {"rows": 0, "ids": 0}
 
     def sink(batch_df, batch_id):
         emitted["rows"] += batch_df.count()
 
-    q = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain(stream, sink, str(tmp_path / "ckpt_dedup"))
 
     n_unique = (
-        spark.read.schema(schema).parquet(str(dup_dir)).select("event_id").distinct().count()
+        spark.read.schema(REPLAY_SCHEMA).parquet(str(dup_dir)).select("event_id").distinct().count()
     )
     assert emitted["rows"] == n_unique
-
-
-def test_foreach_row_writer_buffers_flushes_and_aborts():
-    """Per-record foreach sink shim (reference O2 SinkDataApiSingle): buffer →
-    batched upsert flush on buffer-full and close; no commit on error."""
-    from kda_flink_demo_spark.streaming.upsert import ForeachRowUpsertWriter
-
-    class FakeCursor:
-        def __init__(self, log):
-            self.log = log
-
-        def executemany(self, sql, rows):
-            self.log.append(list(rows))
-
-    class FakeConn:
-        def __init__(self):
-            self.log = []
-            self.committed = False
-            self.closed = False
-
-        def cursor(self):
-            return FakeCursor(self.log)
-
-        def commit(self):
-            self.committed = True
-
-        def close(self):
-            self.closed = True
-
-    conns = []
-
-    def connect():
-        c = FakeConn()
-        conns.append(c)
-        return c
-
-    w = ForeachRowUpsertWriter(connect, "t", ["k", "v"], ["k"], buffer_size=3)
-    assert w.open(partition_id=0, epoch_id=7) is True
-    for i in range(7):
-        w.process({"k": i, "v": i})
-    w.close(None)
-    con = conns[-1]
-    assert [len(c) for c in con.log] == [3, 3, 1]
-    assert con.committed and con.closed
-
-    # error path: buffered rows are NOT committed
-    w2 = ForeachRowUpsertWriter(connect, "t", ["k", "v"], ["k"], buffer_size=10)
-    w2.open(0, 8)
-    w2.process({"k": 1, "v": 1})
-    w2.close(RuntimeError("boom"))
-    con2 = conns[-1]
-    assert con2.log == [] and not con2.committed and con2.closed
 
 
 @pytest.fixture(scope="module")
 def replay_full_dir(spark, tmp_path_factory):
     """Full-column events replay (user_id/value kept) for the join tests."""
     out = str(tmp_path_factory.mktemp("events_replay_full"))
-    ev = load_table(spark, SF_DIR, "events").orderBy("ts")
-    rows = ev.collect()
-    chunk = (len(rows) + 4) // 5
-    for i in range(5):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(f"{out}/chunk={i:02d}")
+    build_replay(spark, load_table(spark, SF_DIR, "events").orderBy("ts"), out)
     return out
 
 
 def _full_stream(spark, replay_full_dir):
     schema = load_table(spark, SF_DIR, "events").schema
-    return (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(replay_full_dir + "/chunk=*")
-    )
+    return file_events_stream(spark, replay_full_dir + "/chunk=*", schema)
 
 
 def test_stream_static_enrichment_matches_batch(spark, replay_full_dir, tmp_path):
@@ -875,16 +676,9 @@ def test_stream_static_enrichment_matches_batch(spark, replay_full_dir, tmp_path
         .join(F.broadcast(dim), "event_type")
         .select("event_id", "category")
     )
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("enrich_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_enrich"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {(r.event_id, r.category) for r in spark.sql("SELECT * FROM enrich_out").collect()}
+    rows = []
+    drain(enriched, lambda b, _bid: rows.extend(b.collect()), str(tmp_path / "ckpt_enrich"))
+    got = {(r.event_id, r.category) for r in rows}
     want = {
         (r.event_id, r.category)
         for r in load_table(spark, SF_DIR, "events").join(dim, "event_type").select("event_id", "category").collect()
@@ -914,16 +708,9 @@ def test_stream_stream_interval_join_matches_batch(spark, replay_full_dir, tmp_p
         & (F.col("click_ts") >= F.col("view_ts"))
         & (F.col("click_ts") <= F.col("view_ts") + F.expr("INTERVAL 60 MINUTES")),
     ).select("view_id", "click_id")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("attrib_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_attrib"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {(r.view_id, r.click_id) for r in spark.sql("SELECT * FROM attrib_out").collect()}
+    rows = []
+    drain(joined, lambda b, _bid: rows.extend(b.collect()), str(tmp_path / "ckpt_attrib"))
+    got = {(r.view_id, r.click_id) for r in rows}
     ev = load_table(spark, SF_DIR, "events")
     v = ev.filter(F.col("event_type") == "view").select(
         "user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("view_ts")
@@ -941,35 +728,6 @@ def test_stream_stream_interval_join_matches_batch(spark, replay_full_dir, tmp_p
         ).collect()
     }
     assert got == want and len(want) > 0
-
-
-def test_executor_staged_sink_cleans_staging_and_skips_empty(spark, tmp_path):
-    """Committed staging dirs must be deleted (a long-running query's staging
-    stays O(1 batch), not O(all batches)); empty micro-batches leave no
-    residue either (their schema-only staging is cleaned like any other —
-    deliberately no isEmpty() pre-check, which would re-execute every
-    non-empty batch's plan a second time)."""
-    import os
-
-    from kda_flink_demo_spark.streaming.upsert import ExecutorStagedUpsertSink
-
-    staging = str(tmp_path / "staging3")
-    sink = ExecutorStagedUpsertSink(
-        str(tmp_path / "exec_sink3.duckdb"),
-        "t",
-        ["k"],
-        "k BIGINT, v BIGINT",
-        staging_dir=staging,
-    )
-    sink(spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"), batch_id=0)
-    sink(spark.createDataFrame([(2, 21)], "k long, v long"), batch_id=1)
-    assert not os.path.exists(os.path.join(staging, "batch_id=0"))
-    assert not os.path.exists(os.path.join(staging, "batch_id=1"))
-    empty = spark.createDataFrame([], "k long, v long")
-    sink(empty, batch_id=2)
-    assert not os.path.exists(os.path.join(staging, "batch_id=2"))
-    cols, rows = sink.read_all()
-    assert dict((r[cols.index("k")], r[cols.index("v")]) for r in rows) == {1: 10, 2: 21}
 
 
 def test_upsert_sink_all_key_columns_does_nothing_on_conflict(spark, tmp_path):
@@ -1002,15 +760,8 @@ def test_streaming_count_windows_match_batch(spark, tmp_path):
         )
         .orderBy("rowtime", "event_id")
     )
-    rows = ev.collect()
     replay = str(tmp_path / "replay_vals")
-    chunk = (len(rows) + 4) // 5
-    for i in range(5):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(
-                f"{replay}/chunk={i:02d}"
-            )
+    build_replay(spark, ev, replay)
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -1019,12 +770,7 @@ def test_streaming_count_windows_match_batch(spark, tmp_path):
             T.StructField("value", T.DoubleType()),
         ]
     )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(replay + "/chunk=*")
-    )
+    stream = file_events_stream(spark, replay + "/chunk=*", schema)
     result = count_windows_stream(stream, size=100)
     sink = DuckDBUpsertSink(
         str(tmp_path / "sink_cw.duckdb"),
@@ -1032,7 +778,7 @@ def test_streaming_count_windows_match_batch(spark, tmp_path):
         ["railway_class", "window_id"],
         "railway_class VARCHAR, window_id BIGINT, railway_class_count BIGINT, sum_value DOUBLE",
     )
-    _run(spark, result, sink, str(tmp_path / "ckpt_cw"))
+    drain(result, sink, str(tmp_path / "ckpt_cw"))
 
     cols, got = sink.read_all()
     got_map = {
@@ -1077,17 +823,11 @@ def test_session_tail_flush_contract(spark, tmp_path):
     )
 
     def run(name, chunks):
-        replay = str(tmp_path / f"replay_{name}")
-        for i, rows in enumerate(chunks):
-            spark.createDataFrame(
-                [(k, ts(s)) for k, s in rows], schema
-            ).coalesce(1).write.parquet(f"{replay}/chunk={i:02d}")
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(replay + "/chunk=*")
+        replay = write_replay(
+            str(tmp_path / f"replay_{name}"),
+            [spark.createDataFrame([(k, ts(s)) for k, s in rows], schema) for rows in chunks],
         )
+        stream = file_events_stream(spark, replay, schema)
         sink = DuckDBUpsertSink(
             str(tmp_path / f"sink_{name}.duckdb"),
             "sessions",
@@ -1095,7 +835,7 @@ def test_session_tail_flush_contract(spark, tmp_path):
             jobs.TUMBLING_SINK_SCHEMA,
         )
         result = jobs.job_session(stream, gap="120 seconds")
-        _run(spark, result, sink, str(tmp_path / f"ckpt_{name}"))
+        drain(result, sink, str(tmp_path / f"ckpt_{name}"))
         cols, got = sink.read_all()
         return {
             (r[cols.index("railway_class")], r[cols.index("window_start")]): (
@@ -1150,7 +890,7 @@ def test_distinct_users_tws_mapstate_matches_batch(spark, replay_dir, tmp_path):
         F.col("ts").alias("rowtime"),
     ).orderBy("rowtime")
     replay = str(tmp_path / "replay_users")
-    _build_replay(spark, src, replay)
+    build_replay(spark, src, replay)
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -1160,12 +900,7 @@ def test_distinct_users_tws_mapstate_matches_batch(spark, replay_dir, tmp_path):
             T.StructField("rowtime", T.TimestampType()),
         ]
     )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(replay + "/chunk=*")
-    )
+    stream = file_events_stream(spark, replay + "/chunk=*", schema)
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     use_rocksdb_state(spark)
     sink = DuckDBUpsertSink(
@@ -1175,7 +910,7 @@ def test_distinct_users_tws_mapstate_matches_batch(spark, replay_dir, tmp_path):
         "railway_class VARCHAR, distinct_users BIGINT, total_events BIGINT",
     )
     try:
-        q = (
+        q = (  # by hand: run_to_sink is append-only
             distinct_users_tws(stream)
             .writeStream.outputMode("update")
             .foreachBatch(sink)
@@ -1221,35 +956,19 @@ def test_streaming_ingest_dedup_matches_batch(spark, tmp_path):
     )
     incoming = docs.filter(F.col("doc_id") >= 400).unionByName(recrawl)
 
-    replay = tmp_path / "incoming"
-    replay.mkdir()
     # three arrival chunks, duplicates interleaved with genuinely-new docs
     rows = incoming.collect()
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], incoming.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(replay / f"chunk{i}"))
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(incoming.schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(replay) + "/chunk*")
+    replay = write_replay(
+        str(tmp_path / "incoming"),
+        [spark.createDataFrame(rows[i::3], incoming.schema) for i in range(3)],
     )
+    stream = file_events_stream(spark, replay, incoming.schema)
     got = set()
 
     def sink(batch_df, batch_id):
         got.update(r.doc_id for r in batch_df.select("doc_id").collect())
 
-    q = (
-        ingest_dedup_against_corpus(stream, corpus)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain(ingest_dedup_against_corpus(stream, corpus), sink, str(tmp_path / "ckpt"))
 
     expected = {
         r.doc_id for r in ingest_dedup_against_corpus(incoming, corpus).select("doc_id").collect()
@@ -1275,8 +994,6 @@ def test_drop_duplicates_within_watermark_invariants(spark, tmp_path):
         earliest-anchor greedy is the maximal such chain, any processing
         order yields a subchain-sized set."""
     import datetime as dt
-    import glob
-    import shutil
 
     from pyspark.sql import types as T
 
@@ -1301,36 +1018,23 @@ def test_drop_duplicates_within_watermark_invariants(spark, tmp_path):
     df = spark.createDataFrame(rows, schema)
 
     # ordered replay: one file per 300 s event-time slice, one batch per file
-    files_dir = tmp_path / "flat"
-    files_dir.mkdir()
-    for i, lo in enumerate(range(0, 1500, 300)):
-        sl = df.filter(
-            (F.col("ts") >= base + dt.timedelta(seconds=lo))
-            & (F.col("ts") < base + dt.timedelta(seconds=lo + 300))
-        )
-        d = tmp_path / f"s{i:02d}"
-        sl.coalesce(1).write.mode("overwrite").parquet(str(d))
-        for j, f in enumerate(sorted(glob.glob(str(d / "*.parquet")))):
-            shutil.copy(f, files_dir / f"f{i:02d}_{j}.parquet")
-
+    replay = write_replay(
+        str(tmp_path / "slices"),
+        [
+            df.filter(
+                (F.col("ts") >= base + dt.timedelta(seconds=lo))
+                & (F.col("ts") < base + dt.timedelta(seconds=lo + 300))
+            )
+            for lo in range(0, 1500, 300)
+        ],
+    )
     stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(files_dir))
+        file_events_stream(spark, replay, schema)
         .withWatermark("ts", "300 seconds")  # the watermark delay IS the horizon
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
     got = []
-
-    q = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_wmdedup"))
-        .foreachBatch(lambda b, _i: got.extend(b.collect()))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain(stream, lambda b, _i: got.extend(b.collect()), str(tmp_path / "ckpt_wmdedup"))
     assert got, "stream must emit something"
 
     by_key = {}
@@ -1374,16 +1078,8 @@ def test_stream_stream_interval_left_outer_join_emits_nulls(spark, replay_full_d
         & (F.col("click_ts") <= F.col("view_ts") + F.expr("INTERVAL 60 MINUTES")),
         "leftOuter",
     ).select("view_id", "click_id")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("outer_attrib_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_outer"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("SELECT * FROM outer_attrib_out").collect()
+    rows = []
+    drain(joined, lambda b, _bid: rows.extend(b.collect()), str(tmp_path / "ckpt_outer"))
     got_pairs = {(r.view_id, r.click_id) for r in rows if r.click_id is not None}
     got_nulls = {r.view_id for r in rows if r.click_id is None}
 
@@ -1426,12 +1122,8 @@ def test_streaming_fuzzy_ingest_probe_matches_batch(spark, tmp_path):
     probing is exact because each batch is checked independently against the
     same static index (no cross-batch state needed for corpus-vs-batch
     dedup)."""
-    import glob
-    import shutil
-
     from pyspark.sql import types as T
 
-    from kda_flink_demo_spark.io.sources import load_table
     from kda_flink_demo_spark.operators.llm import dedup
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -1445,14 +1137,10 @@ def test_streaming_fuzzy_ingest_probe_matches_batch(spark, tmp_path):
     hashes = hashes.localCheckpoint()
 
     # replay the incoming batch as 4 files -> 4 micro-batches
-    replay = tmp_path / "fuzzy_replay"
-    replay.mkdir()
-    for i in range(4):
-        sl = incoming.filter(F.col("doc_id") % 4 == i).coalesce(1)
-        d = tmp_path / f"part{i}"
-        sl.write.mode("overwrite").parquet(str(d))
-        for j, f in enumerate(sorted(glob.glob(str(d / "*.parquet")))):
-            shutil.copy(f, replay / f"f{i}_{j}.parquet")
+    replay = write_replay(
+        str(tmp_path / "fuzzy_replay"),
+        [incoming.filter(F.col("doc_id") % 4 == i) for i in range(4)],
+    )
 
     schema = T.StructType(
         [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
@@ -1463,18 +1151,7 @@ def test_streaming_fuzzy_ingest_probe_matches_batch(spark, tmp_path):
         out = dedup.ingest_dedup_fuzzy_probe(batch_df, buckets, hashes).select("doc_id")
         survivors.extend(r.doc_id for r in out.collect())
 
-    q = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(replay))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_fuzzy_ingest"))
-        .foreachBatch(probe_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain(file_events_stream(spark, replay, schema), probe_batch, str(tmp_path / "ckpt_fuzzy_ingest"))
 
     want = {
         r.doc_id for r in dedup.ingest_dedup_fuzzy(incoming, corpus).select("doc_id").collect()
@@ -1494,14 +1171,7 @@ def replay_dir_anomaly(spark, tmp_path_factory):
         .select("event_id", "event_type", "ts", "value")
         .orderBy("ts", "event_id")
     )
-    rows = ev.collect()
-    chunk = (len(rows) + 4) // 5
-    for i in range(5):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(
-                f"{out}/chunk={i:02d}"
-            )
+    build_replay(spark, ev, out)
     return out
 
 
@@ -1525,19 +1195,14 @@ def test_streaming_anomaly_zscore_matches_batch_exactly(
             T.StructField("value", T.DoubleType()),
         ]
     )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(replay_dir_anomaly + "/chunk=*")
-    )
+    stream = file_events_stream(spark, replay_dir_anomaly + "/chunk=*", schema)
     sink = DuckDBUpsertSink(
         str(tmp_path / "anom.duckdb"),
         "anomalies",
         ["event_id"],
         "event_id BIGINT, event_type VARCHAR, ts TIMESTAMP, value DOUBLE, zscore DOUBLE",
     )
-    _run(spark, anomaly_zscore_stream(stream), sink, str(tmp_path / "ckpt_anom"))
+    drain(anomaly_zscore_stream(stream), sink, str(tmp_path / "ckpt_anom"))
 
     cols, got = sink.read_all()
     batch = anomaly_zscore(load_table(spark, SF_DIR, "events"))
@@ -1578,12 +1243,7 @@ def test_streaming_anomaly_state_survives_crash_recovery(
     )
 
     def stream():
-        return (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(replay_dir_anomaly + "/chunk=*")
-        )
+        return file_events_stream(spark, replay_dir_anomaly + "/chunk=*", schema)
 
     sink = DuckDBUpsertSink(
         str(tmp_path / "anom_crash.duckdb"),
@@ -1593,14 +1253,7 @@ def test_streaming_anomaly_state_survives_crash_recovery(
     )
     ckpt = str(tmp_path / "anom_crash_ckpt")
 
-    q = (
-        anomaly_zscore_stream(stream())
-        .writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="1 second")
-        .start()
-    )
+    q = jobs.run_to_sink(anomaly_zscore_stream(stream()), sink, ckpt, available_now=False)
     deadline = time.time() + 120
     while time.time() < deadline:
         if any(p["numInputRows"] > 0 for p in (q.recentProgress or [])):
@@ -1630,9 +1283,6 @@ def test_streaming_bloom_ingest_probe_matches_batch(spark, tmp_path):
     replay as a file stream, each micro-batch probes the PREBUILT word table +
     corpus hash projection via foreachBatch. Survivors across the run must
     equal the one-shot batch anti join on the full incoming set."""
-    import glob
-    import shutil
-
     from pyspark.sql import types as T
 
     from kda_flink_demo_spark.operators.llm import dedup
@@ -1652,14 +1302,10 @@ def test_streaming_bloom_ingest_probe_matches_batch(spark, tmp_path):
     bloom = dedup.bloom_build(corpus).localCheckpoint()
     corpus_hashes = corpus.select(F.xxhash64(F.col("text")).alias("_h")).localCheckpoint()
 
-    replay = tmp_path / "bloom_replay"
-    replay.mkdir()
-    for i in range(4):
-        sl = incoming.filter(F.col("doc_id") % 4 == i).coalesce(1)
-        d = tmp_path / f"bpart{i}"
-        sl.write.mode("overwrite").parquet(str(d))
-        for j, f in enumerate(sorted(glob.glob(str(d / "*.parquet")))):
-            shutil.copy(f, replay / f"f{i}_{j}.parquet")
+    replay = write_replay(
+        str(tmp_path / "bloom_replay"),
+        [incoming.filter(F.col("doc_id") % 4 == i) for i in range(4)],
+    )
 
     schema = T.StructType(
         [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
@@ -1672,19 +1318,7 @@ def test_streaming_bloom_ingest_probe_matches_batch(spark, tmp_path):
         )
         survivors.extend(r.doc_id for r in out.collect())
 
-    q = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(replay))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_bloom_ingest"))
-        .foreachBatch(probe_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert not q.isActive
+    drain(file_events_stream(spark, replay, schema), probe_batch, str(tmp_path / "ckpt_bloom_ingest"))
 
     expected = {
         r.doc_id
@@ -1698,9 +1332,6 @@ def test_streaming_sketch_store_equals_one_pass(spark, tmp_path):
     per-key sketch store; after the replay the store's report must equal the
     one-pass batch sketch BIT-EXACTLY (HLL/Theta unions are associative and
     commutative), including after a duplicate-batch replay (idempotent merge)."""
-    import glob
-    import shutil
-
     from pyspark.sql import types as T
 
     from kda_flink_demo_spark.operators.sketches import (
@@ -1710,15 +1341,10 @@ def test_streaming_sketch_store_equals_one_pass(spark, tmp_path):
     )
 
     ev_src = load_table(spark, SF_DIR, "events").select("event_id", "event_type", "user_id")
-    replay = tmp_path / "sketch_replay"
-    replay.mkdir()
-    for i in range(4):
-        d = tmp_path / f"spart{i}"
-        ev_src.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(d))
-        for j, f in enumerate(sorted(glob.glob(str(d / "*.parquet")))):
-            shutil.copy(f, replay / f"f{i}_{j}.parquet")
+    replay = write_replay(
+        str(tmp_path / "sketch_replay"),
+        [ev_src.filter(F.col("event_id") % 4 == i) for i in range(4)],
+    )
 
     schema = T.StructType(
         [
@@ -1734,18 +1360,7 @@ def test_streaming_sketch_store_equals_one_pass(spark, tmp_path):
         update_sketch_store(batch_df, store)
         seen_batches.append(batch_id)
 
-    q = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(replay))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sketch"))
-        .foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain(file_events_stream(spark, replay, schema), fold, str(tmp_path / "ckpt_sketch"))
     assert len(seen_batches) >= 2  # actually replayed incrementally
 
     canon = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
@@ -1772,7 +1387,7 @@ def test_streaming_session_windows_match_batch(spark, replay_dir, tmp_path):
         jobs.TUMBLING_SINK_SCHEMA,
     )
     result = jobs.job_session(_stream(spark, replay_dir), gap="5 minutes")
-    _run(spark, result, sink, str(tmp_path / "ckpt_sess"))
+    drain(result, sink, str(tmp_path / "ckpt_sess"))
 
     cols, got = sink.read_all()
     batch = session_counts(
@@ -1805,15 +1420,8 @@ def test_streaming_interval_join_matches_batch_exactly(spark, tmp_path):
     from pyspark.sql import types as T
 
     ev = load_table(spark, SF_DIR, "events").select("event_id", "user_id", "event_type", "ts")
-    rows = ev.orderBy("ts").collect()
     out = str(tmp_path / "events_replay")
-    chunk = max(1, len(rows) // 4)
-    for i in range(4):
-        part = rows[i * chunk : (i + 1) * chunk] if i < 3 else rows[3 * chunk :]
-        if part:
-            spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(
-                f"{out}/chunk={i:02d}"
-            )
+    build_replay(spark, ev.orderBy("ts"), out, n_chunks=4)
 
     schema = T.StructType(
         [
@@ -1825,12 +1433,7 @@ def test_streaming_interval_join_matches_batch_exactly(spark, tmp_path):
     )
 
     def _src():
-        return (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .load(out + "/chunk=*")
-        )
+        return file_events_stream(spark, out + "/chunk=*", schema)
 
     bound = 1800
     stream_result = jobs.job_interval_join(
@@ -1843,15 +1446,7 @@ def test_streaming_interval_join_matches_batch_exactly(spark, tmp_path):
     def sink(batch_df, _bid):
         collected.extend(tuple(r) for r in batch_df.collect())
 
-    q = (
-        stream_result.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ij"))
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert not q.isActive
+    drain(stream_result, sink, str(tmp_path / "ckpt_ij"))
 
     batch = jobs.job_interval_join(
         ev.filter(F.col("event_type") == "view"),
@@ -1869,8 +1464,6 @@ def test_streaming_dedup_drops_replayed_duplicates_exactly(spark, tmp_path):
     redelivery) must yield EXACTLY the batch dropDuplicates result — one copy
     per event_id, first-seen values — because every duplicate arrives inside
     the dedup horizon."""
-    from pyspark.sql import types as T
-
     ev = (
         load_table(spark, SF_DIR, "events")
         .select("event_id", F.col("event_type").alias("railway_class"),
@@ -1878,47 +1471,23 @@ def test_streaming_dedup_drops_replayed_duplicates_exactly(spark, tmp_path):
         .orderBy("rowtime")
     )
     rows = ev.collect()
-    out = str(tmp_path / "dup_replay")
-    n = len(rows)
-    chunk = (n + 3) // 4
+    chunk = (len(rows) + 3) // 4
     overlap = 25
-    for i in range(4):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if i > 0:  # redeliver the previous chunk's tail
-            part = rows[max(0, i * chunk - overlap) : i * chunk] + part
-        if part:
-            spark.createDataFrame(part, ev.schema).coalesce(1).write.parquet(
-                f"{out}/chunk={i:02d}"
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("railway_class", T.StringType()),
-            T.StructField("rowtime", T.TimestampType()),
-        ]
+    # every chunk after the first redelivers the previous chunk's tail
+    parts = [rows[max(0, i * chunk - overlap) : (i + 1) * chunk] for i in range(4)]
+    replay = write_replay(
+        str(tmp_path / "dup_replay"),
+        [spark.createDataFrame(p, ev.schema) for p in parts if p],
     )
-    src = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(out + "/chunk=*")
+    result = jobs.job_dedup(
+        file_events_stream(spark, replay, REPLAY_SCHEMA), keys=("event_id",), delay="48 hours"
     )
-    result = jobs.job_dedup(src, keys=("event_id",), delay="48 hours")
     collected = []
 
     def sink(batch_df, _bid):
         collected.extend(tuple(r) for r in batch_df.collect())
 
-    q = (
-        result.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert not q.isActive
+    drain(result, sink, str(tmp_path / "ckpt_dedup"))
 
     expected = sorted(tuple(r) for r in rows)  # fixture event_ids are unique
     assert len(collected) == len(expected), "a duplicate survived or a row was lost"

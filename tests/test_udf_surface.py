@@ -38,7 +38,7 @@ def test_rate_source_streaming_smoke(spark, tmp_path):
         .load()
         .select(F.col("timestamp").alias("rowtime"), (F.col("value") % 5).cast("string").alias("railway_class"))
     )
-    q = (
+    q = (  # by hand: a live rate source in complete mode; run_to_sink is append-only
         stream.groupBy("railway_class")
         .count()
         .writeStream.outputMode("complete")
