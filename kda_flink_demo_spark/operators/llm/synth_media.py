@@ -107,7 +107,7 @@ def staged(spark, sf_dir: str, kind: str) -> DataFrame:
     import os
     import tempfile
 
-    from kda_flink_demo_spark.io.sources import load_table
+    from kda_flink_demo_spark.io.sources import load_table, read_parquet
     from kda_flink_demo_spark.operators.llm.standing import standing_artifact
 
     generators = {
@@ -136,7 +136,7 @@ def staged(spark, sf_dir: str, kind: str) -> DataFrame:
         # kernels downstream — re-spread exactly like the synth generators
         # did; at lake scale the scan arrives already parallel and
         # spread_for_compute is a no-op
-        return spread_for_compute(spark.read.parquet(path))
+        return spread_for_compute(read_parquet(spark, path))
 
     return standing_artifact(spark, ("staged_media", kind, sf_dir), _build)
 

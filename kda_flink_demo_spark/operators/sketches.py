@@ -444,12 +444,13 @@ def update_sketch_store(
     ``streaming/store.py``'s _SUCCESS-validated probe, ``.next`` recovery,
     and delete+rename promote; see that module's contract docstring.
     """
+    from kda_flink_demo_spark.io.sources import read_parquet
     from kda_flink_demo_spark.streaming.store import promote, recover_standing
 
     spark = batch_df.sparkSession
     fresh = sketch_state(batch_df, key_col=key_col, id_col=id_col)
     if recover_standing(spark, store_path):
-        standing = spark.read.parquet(store_path.rstrip("/"))
+        standing = read_parquet(spark, store_path.rstrip("/"))
         merged = merge_sketch_states(standing, fresh, key_col=key_col)
     else:  # first batch: no store yet
         merged = fresh

@@ -248,6 +248,15 @@ def run_to_sink(
     checkpoint keeps the count recorded in its offset log, which Spark
     applies over the session value.
 
+    Migrating a checkpoint that recorded the uncapped count (one created
+    before the cap) means rewriting its state, and Spark 4.1 cannot: its
+    state data source (``format("statestore")``) only reads, since its table
+    supports no write. So drain the old query (run it with ``available_now``
+    until it stops), then start the job on a fresh checkpoint directory,
+    which gets the capped count. The fresh query rebuilds its state from the
+    source: a file source reads every file again, and the keyed upsert sink
+    overwrites the rows it already holds with the same values.
+
     A checkpoint on the local file system is also written through the Hadoop
     FileSystem API instead of Spark's default FileContext one. Without
     Hadoop's native library, FileContext's rename runs a ``readlink``

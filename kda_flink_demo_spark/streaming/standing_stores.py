@@ -44,6 +44,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kda_flink_demo_spark.io.sources import read_parquet
 from kda_flink_demo_spark.operators.cdc import scd2_compress, scd2_history
 from kda_flink_demo_spark.streaming.store import (
     committed_dirs,
@@ -71,7 +72,7 @@ def update_scd2_store(
     cols = [*keys, *attr_cols, ts_col, *([tie_col] if tie_col else [])]
     batch = batch_df.select(*cols)
     if recover_standing(spark, store_path):
-        standing = spark.read.parquet(store_path.rstrip("/"))
+        standing = read_parquet(spark, store_path.rstrip("/"))
         bkeys = batch.select(*keys).distinct()
         untouched = standing.join(bkeys, list(keys), "left_anti")
         affected = standing.join(bkeys, list(keys), "left_semi")
@@ -96,7 +97,7 @@ def scd2_from_store(
     ``scd2_history`` over everything folded so far (the batch-as-oracle
     equality the streaming tests pin)."""
     return scd2_history(
-        spark.read.parquet(store_path.rstrip("/")), keys, attr_cols, ts_col, tie_col
+        read_parquet(spark, store_path.rstrip("/")), keys, attr_cols, ts_col, tie_col
     )
 
 
@@ -211,7 +212,7 @@ def diff_snapshot_versions(
     statuses as the batch ``snapshot_diff``)."""
 
     def side(version: int, h: str) -> DataFrame:
-        return spark.read.parquet(part_dir(store_path, "version", version)).select(
+        return read_parquet(spark, part_dir(store_path, "version", version)).select(
             F.col(id_col).alias("_id"), F.col("text_hash").alias(h)
         )
 
@@ -310,7 +311,7 @@ def bpe_merges_from_store(spark: SparkSession, store_path: str) -> DataFrame | N
     """The stored merge table; None when no committed store exists (caller
     trains)."""
     if recover_standing(spark, store_path):
-        return spark.read.parquet(store_path.rstrip("/"))
+        return read_parquet(spark, store_path.rstrip("/"))
     return None
 
 
@@ -423,7 +424,7 @@ def drift_between(
         return None
 
     def side(batches: Sequence[int], tag: int) -> DataFrame:
-        return spark.read.parquet(*[segs[b] for b in batches]).withColumn(
+        return read_parquet(spark, *[segs[b] for b in batches]).withColumn(
             "_t", F.lit(tag)
         )
 

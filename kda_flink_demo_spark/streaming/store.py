@@ -48,6 +48,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kda_flink_demo_spark.io.sources import read_parquet
+
 
 def _fs(spark: SparkSession, path: str):
     hpath = spark._jvm.org.apache.hadoop.fs.Path
@@ -166,7 +168,7 @@ def read_segments(
 ) -> DataFrame | None:
     """Union of the readable segments; None before the first committed fold."""
     segs = committed_dirs(spark, store_path, exclude_batch)
-    return spark.read.parquet(*segs.values()) if segs else None
+    return read_parquet(spark, *segs.values()) if segs else None
 
 
 def compact_segments(spark: SparkSession, store_path: str, upto_batch: int, merge) -> None:
@@ -202,7 +204,7 @@ def compact_segments(spark: SparkSession, store_path: str, upto_batch: int, merg
         return
     upto_batch = max(covered)
     cseg = cseg_dir(store, upto_batch)
-    merge(spark.read.parquet(*covered.values())).write.mode("overwrite").parquet(cseg)
+    merge(read_parquet(spark, *covered.values())).write.mode("overwrite").parquet(cseg)
     for p in covered.values():
         _delete(fs, hpath, p)
     _rename(fs, hpath, cseg, part_dir(store, "seg", upto_batch))

@@ -33,8 +33,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     spark = get_spark("bench-streaming")
     spark.sparkContext.setLogLevel("ERROR")
-    tmp = tempfile.mkdtemp(prefix="bench-streaming-")
+    # removed on exit, also when a run fails: the replay chunks, checkpoints
+    # and DuckDB files never outlive the run
+    with tempfile.TemporaryDirectory(prefix="bench-streaming-") as tmp:
+        _bench(spark, tmp)
 
+
+def _bench(spark, tmp: str) -> None:
     ev = (
         load_table(spark, SF_DIR, "events")
         .select("event_id", F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime"))
@@ -65,6 +70,7 @@ def main() -> None:
         q = jobs.run_to_sink(jobs.dispatch(job_name)(stream), sink, f"{tmp}/ckpt_{job_name}")
         q.awaitTermination(600)
         elapsed = time.time() - t0
+        q.stop()  # a no-op once drained; never leave a query writing into tmp
         _, rows = sink.read_all()
         batches = [p for p in q.recentProgress if p.numInputRows > 0]
         results[job_name] = {

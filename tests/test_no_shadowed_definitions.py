@@ -2,7 +2,9 @@
 keeps only the last definition: the earlier ones are dead code, and a
 shadowed test is never collected, so it passes silently forever. A name that
 is imported and never read is dead code too. With no linter in the repo,
-these tests are the check."""
+these tests are the check. The last guard keeps one way to read parquet in
+the package: ``io.sources.read_parquet``, which reads the schema from the
+footer instead of running Spark's inference job."""
 
 from __future__ import annotations
 
@@ -79,3 +81,52 @@ def test_no_import_is_unused(package):
         if unused:
             found[str(path.relative_to(ROOT))] = unused
     assert not found, f"unused imports: {found}"
+
+
+def _reader_chain(call: ast.Call) -> list:
+    """The calls and attributes a call's receiver is built from, outermost
+    first: ``spark.read.schema(s).parquet(p)`` gives ``schema(s)``, ``read``,
+    ``spark``."""
+    chain, node = [], call.func.value
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        chain.append(node)
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return chain
+
+
+def _parquet_reads(tree: ast.Module) -> list[str]:
+    """``line`` of every batch parquet read (``<x>.read....parquet(...)`` or
+    ``<x>.read....format("parquet")....load(...)``) outside
+    ``io.sources._read_with_footer``."""
+    allowed = set()
+    for fn in ast.walk(tree):
+        if isinstance(fn, FUNCS) and fn.name == "_read_with_footer":
+            allowed |= {id(n) for n in ast.walk(fn)}
+    out = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        if node.func.attr not in ("parquet", "load") or id(node) in allowed:
+            continue
+        chain = _reader_chain(node)
+        if not any(isinstance(n, ast.Attribute) and n.attr == "read" for n in chain):
+            continue
+        parquet_format = any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "format"
+            and any(isinstance(a, ast.Constant) and a.value == "parquet" for a in n.args)
+            for n in chain
+        )
+        if node.func.attr == "parquet" or parquet_format:
+            out.append(str(node.lineno))
+    return out
+
+
+def test_parquet_is_read_only_through_read_parquet():
+    found = {}
+    for path in sorted((ROOT / "kda_flink_demo_spark").rglob("*.py")):
+        reads = _parquet_reads(ast.parse(path.read_text(), filename=str(path)))
+        if reads:
+            found[str(path.relative_to(ROOT))] = reads
+    assert not found, f"parquet reads outside io.sources.read_parquet: {found}"
