@@ -76,8 +76,11 @@ def main(argv: list[str] | None = None) -> None:
 
     table, keys, schema_sql = sjobs.JOB_SINKS[args.job]
     sink = DuckDBUpsertSink(args.sink_db, table, keys, schema_sql)
-    query = sjobs.run_to_sink(result, sink, args.checkpoint, available_now=not args.watch)
-    query.awaitTermination()
+    try:
+        query = sjobs.run_to_sink(result, sink, args.checkpoint, available_now=not args.watch)
+        query.awaitTermination()
+    finally:
+        sink.close()
 
 
 if __name__ == "__main__":

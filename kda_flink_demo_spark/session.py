@@ -28,6 +28,8 @@ import weakref
 
 from pyspark.sql import SparkSession
 
+from kda_flink_demo_spark.streaming import protobuf_compat
+
 ENGINE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # static conf (ignored by apply_engine_conf on a live session): keep managed
@@ -60,8 +62,11 @@ def get_spark(app_name: str = "kda-flink-demo-spark", cpus: int | None = None) -
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores. On a real cluster the
     master/executor topology comes from spark-submit; this factory only supplies
-    SQL-level conf.
+    SQL-level conf. It exports the Python-worker start-up hook
+    (``protobuf_compat``) first, so a JVM this call launches hands it to every
+    worker; a session that already exists keeps the workers it has.
     """
+    protobuf_compat.export_worker_pythonpath()
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")

@@ -1,31 +1,47 @@
-"""Protobuf runtime shim (self-contained — runs at interpreter start).
+"""The Python-worker start-up hook (self-contained: runs at interpreter start).
 
-`transformWithStateInPandas` (Spark 4's successor stateful API, which
-`distinct_state.distinct_users_tws` runs on for its MapState) speaks a protobuf
-state-server protocol: the python worker imports
-``pyspark.sql.streaming.proto.StateMessage_pb2``, which needs a
-``google.protobuf`` runtime. This container has no protobuf install, but the
-google-cloud-sdk ships a pure-python copy (4.23). Two gaps to bridge:
+``protobuf_compat.export_worker_pythonpath`` puts this directory on
+PYTHONPATH before the SparkSession's JVM starts, so Python's ``site`` imports
+this file in the driver and in every process the JVM spawns: pyspark workers
+and streaming runners. It makes two fixes, each a no-op where it is not
+needed.
 
-1. ``StateMessage_pb2`` is protobuf-6 gencode and imports
-   ``google.protobuf.runtime_version`` (added in 5.27) purely to VALIDATE the
-   runtime version; the 4.23 runtime parses the serialized descriptors fine
-   (the wire/descriptor format is stable), so a no-op validator restores it.
-2. spark-core's jar sits on the python worker's sys.path and contains
-   ``google/protobuf/*.proto`` RESOURCES — Python imports that as an empty
-   namespace package, so "``import google.protobuf`` succeeded" is NOT
-   evidence of a usable runtime; ``descriptor`` must import too, and the
-   phantom namespace modules must be purged before retrying.
+1. **Zip-directory re-reads (Python < 3.13).** pyspark's
+   ``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``
+   on every task. Before 3.13, ``zipimport.zipimporter.invalidate_caches``
+   re-reads its archive's whole central directory, once per importer
+   instance, and a worker holds 16-18 of them: pyspark.zip x12 (1 328
+   entries each), the spark-core jar x2 (5 359 entries each) and the py4j
+   zip x2. Measured on a 4-cpu host, that was 18 reads and 200-400 ms before
+   every Python task read a row. ``_guard_zip_invalidate`` re-reads an
+   archive only when its ``(st_mtime_ns, st_size, st_ino)`` differs from the
+   stat this process took at its last read; a new or rewritten zip is still
+   picked up. Python 3.13 made the call lazy, so it is left alone there.
+2. **A protobuf runtime for ``transformWithStateInPandas``.** Spark 4's
+   stateful API (``distinct_state.distinct_users_tws``) speaks a protobuf
+   state-server protocol: the worker imports
+   ``pyspark.sql.streaming.proto.StateMessage_pb2``, which needs
+   ``google.protobuf``. This container has no protobuf install, but the
+   google-cloud-sdk ships a pure-python copy (4.23). Two gaps to bridge:
 
-This file must execute in BOTH the driver and every pyspark worker /
-streaming runner, which all start fresh interpreters — hence the
-``sitecustomize`` mechanism: put THIS directory on PYTHONPATH before the
-SparkSession (and its JVM) is created and Python's ``site`` imports it at
-startup everywhere (`protobuf_compat.export_worker_pythonpath`). Everything
-is environment-gated: with no usable protobuf anywhere this is a no-op and
-the TWS tests skip, exactly as before.
+   - ``StateMessage_pb2`` is protobuf-6 gencode and imports
+     ``google.protobuf.runtime_version`` (added in 5.27) purely to VALIDATE
+     the runtime version; the 4.23 runtime parses the serialized descriptors
+     fine (the wire/descriptor format is stable), so a no-op validator
+     restores it.
+   - spark-core's jar sits on the worker's sys.path and contains
+     ``google/protobuf/*.proto`` RESOURCES; Python imports that as an empty
+     namespace package, so "``import google.protobuf`` succeeded" is NOT
+     evidence of a usable runtime: ``descriptor`` must import too, and the
+     phantom namespace modules must be purged before retrying.
+
+   With no usable protobuf anywhere this is a no-op and the TWS tests skip.
+
+``protobuf_compat.install_in_process`` runs this file again in an
+interpreter that is already up; both fixes are idempotent.
 """
 
+import functools
 import os
 import sys
 import types
@@ -58,6 +74,47 @@ def _chain_shadowed_sitecustomize() -> None:
             except Exception:  # noqa: BLE001 — the host hook must not kill startup
                 pass
             return
+
+
+def _guard_zip_invalidate() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's directory
+    only when the archive changed since this process last read it (fix 1 in
+    the module docstring). Wraps once, however often this file runs."""
+    import zipimport
+
+    if sys.version_info >= (3, 13) or hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__"):
+        return
+    read_directory = zipimport._read_directory
+    invalidate = zipimport.zipimporter.invalidate_caches
+    read_at: dict = {}  # archive -> its stat key, taken just before its last read
+
+    def stat_key(archive):
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return None
+        return (st.st_mtime_ns, st.st_size, st.st_ino)
+
+    @functools.wraps(read_directory)
+    def recorded_read(archive):
+        # stat BEFORE the read: a rewrite racing the read shows as a change
+        key = stat_key(archive)
+        read_at.pop(archive, None)
+        files = read_directory(archive)
+        read_at[archive] = key
+        return files
+
+    @functools.wraps(invalidate)
+    def guarded_invalidate(self):
+        files = zipimport._zip_directory_cache.get(self.archive)
+        key = read_at.get(self.archive)
+        if files is not None and key is not None and key == stat_key(self.archive):
+            self._files = files
+        else:
+            invalidate(self)
+
+    zipimport._read_directory = recorded_read
+    zipimport.zipimporter.invalidate_caches = guarded_invalidate
 
 
 _SDK_ROOTS = [
@@ -118,6 +175,7 @@ def install() -> bool:
     return True
 
 
+_guard_zip_invalidate()
 install()
 if __name__ == "sitecustomize":
     # only when imported AS the interpreter-startup hook — when re-exec'd by

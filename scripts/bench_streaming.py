@@ -72,6 +72,7 @@ def _bench(spark, tmp: str) -> None:
         elapsed = time.time() - t0
         q.stop()  # a no-op once drained; never leave a query writing into tmp
         _, rows = sink.read_all()
+        sink.close()
         batches = [p for p in q.recentProgress if p.numInputRows > 0]
         results[job_name] = {
             "sec": round(elapsed, 2),

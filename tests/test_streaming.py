@@ -114,6 +114,40 @@ def test_upsert_sink_is_idempotent_on_replay(spark, tmp_path):
     assert sorted(once) == sorted(twice)
 
 
+def test_upsert_sink_holds_one_connection_until_closed(spark, tmp_path, monkeypatch):
+    """Every batch and read goes through one DuckDB connection; ``close()``
+    releases the file, so a read-only open (refused while this process holds
+    it read-write) succeeds afterwards."""
+    import duckdb
+
+    connects = []
+    real_connect = DuckDBUpsertSink._connect
+
+    def counting(self):
+        connects.append(self.db_path)
+        return real_connect(self)
+
+    monkeypatch.setattr(DuckDBUpsertSink, "_connect", counting)
+    path = str(tmp_path / "held.duckdb")
+    sink = DuckDBUpsertSink(path, "tumbling", jobs.TUMBLING_SINK_KEYS, jobs.TUMBLING_SINK_SCHEMA)
+    batch = tumbling_counts(
+        load_table(spark, SF_DIR, "events").select(
+            F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime")
+        )
+    )
+    n = 4
+    for batch_id in range(n):
+        sink(batch, batch_id)
+    cols, rows = sink.read_all()
+    assert connects == [path]
+    assert len(rows) == batch.count()
+    sink.close()
+    with duckdb.connect(path, read_only=True) as con:
+        assert con.execute("SELECT count(*) FROM tumbling").fetchone()[0] == len(rows)
+    assert sorted(sink.read_all()[1]) == sorted(rows)
+    sink.close()
+
+
 def test_streaming_sliding_state_matches_batch(spark, replay_dir, tmp_path):
     sink = DuckDBUpsertSink(
         str(tmp_path / "sink3.duckdb"), "sliding", jobs.SLIDING_SINK_KEYS, jobs.SLIDING_SINK_SCHEMA
