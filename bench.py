@@ -10,7 +10,9 @@ full per-query map is written to ``bench_full.json`` beside this file.
 Each query is forced end-to-end with the noop sink (full computation, no driver
 collect). The timer wraps query CONSTRUCTION + execution: some operators
 (simhash, clustering) eagerly localCheckpoint an intermediate at construction
-time, and that work must not escape the measurement. Since r10 the bench set
+time, and that work must not escape the measurement. ``bench_full.json``'s
+``rows`` splits every timed row into its layers (``time_row``,
+``_event_log_layers``). Since r10 the bench set
 is a SUPERSET of the registry (r09 verdict directive 3): dedup_ngram_jaccard
 and dedup_simhash_report are benched even though they deliberately pay the
 quadratic exact-pairwise oracle baseline — their scale twins
@@ -25,7 +27,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -264,7 +268,7 @@ VERIFICATION_BASELINES = {"dedup_ngram_jaccard", "dedup_simhash_report"}
 def run_calibration(spark) -> float | None:
     """The ONE machine-speed calibration workload (a fixed grouped aggregate
     over 200M generated rows, noop sink), shared by the cold t=0 sample, the
-    warm end-of-run sample, and scripts/cc_probe.py — cross-round and
+    warm samples and perfbench's host calibration — cross-round and
     cold-vs-warm comparability require the workload to stay byte-identical,
     so it lives in exactly one place. Returns seconds, or None on failure
     (calibration must never kill a bench)."""
@@ -278,7 +282,78 @@ def run_calibration(spark) -> float | None:
         return None
 
 
+# Local property that names a row's phase on the jobs of its second run:
+# ``c|<row>`` for construction, ``x|<row>`` for the noop write.
+ROW_TAG = "bench.row"
+
+
+def time_row(spark, build, sf_dir: str, name: str) -> tuple[float, dict]:
+    """Build the row ``name`` with ``build(spark, sf_dir)`` and force it
+    through the noop sink, twice; min-of-2, since the first run pays codegen
+    and Python-worker spin-up. Returns the faster run's total seconds and the
+    row's layer record: that run's ``construct_s`` and ``execute_s`` (they sum
+    to the total), and the second run's ``construct_jobs`` and ``jobs``
+    (``dagScheduler().nextJobId()`` deltas, which repeat run to run). The
+    second run's jobs carry ``ROW_TAG`` for ``_event_log_layers``."""
+    sc = spark.sparkContext
+    scheduler = sc._jsc.sc().dagScheduler()
+    best = None
+    try:
+        for run in range(2):
+            sc.setLocalProperty(ROW_TAG, f"c|{name}" if run else None)
+            j0 = scheduler.nextJobId()
+            t0 = time.time()
+            df = build(spark, sf_dir)
+            t1 = time.time()
+            j1 = scheduler.nextJobId()
+            sc.setLocalProperty(ROW_TAG, f"x|{name}" if run else None)
+            t2 = time.time()
+            df.write.format("noop").mode("overwrite").save()
+            t3 = time.time()
+            jobs = scheduler.nextJobId() - j1
+            if best is None or (t1 - t0) + (t3 - t2) < sum(best):
+                best = (t1 - t0, t3 - t2)
+    finally:
+        sc.setLocalProperty(ROW_TAG, None)
+    construct_s, execute_s = round(best[0], 3), round(best[1], 3)
+    row = {"construct_s": construct_s, "execute_s": execute_s,
+           "construct_jobs": j1 - j0, "jobs": jobs}
+    return round(construct_s + execute_s, 3), row
+
+
+def _event_log_layers(log_path: str, names) -> dict[str, dict]:
+    """Per row in ``names``, from the event log of the rows' tagged second
+    runs: the noop write's stages, tasks, shuffle and spill bytes and
+    executor run time, and the Python-worker time of construction and write
+    together (zero where a phase ran no job)."""
+    from perfbench import eventlog
+
+    groups = eventlog.read(log_path, lambda props: props.get(ROW_TAG))
+    out = {}
+    for name in names:
+        x, c = groups.get(f"x|{name}", {}), groups.get(f"c|{name}", {})
+        out[name] = {k: x.get(k, 0) for k in ("stages", "tasks", "shuffle_read_bytes",
+                                               "shuffle_write_bytes", "spill_bytes")}
+        out[name]["executor_run_s"] = round(x.get("executor_run_s", 0.0), 3)
+        out[name]["python_total_ms"] = round(
+            x.get("python_total_ms", 0.0) + c.get("python_total_ms", 0.0), 1)
+    return out
+
+
 def main() -> None:
+    # the session's event log, read once the session stops (_event_log_layers)
+    log_dir = tempfile.mkdtemp(prefix="bench-eventlog-")
+    conf = ["spark.eventLog.enabled=true", "spark.eventLog.rolling.enabled=false",
+            "spark.eventLog.compress=false", f"spark.eventLog.dir=file://{log_dir}"]
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [f"--conf {c}" for c in conf] + [os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")])
+    try:
+        _bench(log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+
+
+def _bench(log_dir: str) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     from kda_flink_demo_spark import registry
@@ -324,6 +399,7 @@ def main() -> None:
     # demoted from the driver's queries() surface but still benched
     qs = {**registry.helpers(), **registry.queries()}
     times: dict[str, float] = {}
+    rows: dict[str, dict] = {}
     errs: dict[str, str] = {}
     query_index: dict[str, int] = {}
     # the two quadratic verification baselines run at sf0.01 (see below), so
@@ -340,16 +416,9 @@ def main() -> None:
         if i and i % CALIB_EVERY == 0:
             sample_calib(i)
         query_index[name] = i
-        best = None
         try:
-            for _ in range(2):
-                # timer includes construction: eager checkpoints must be measured
-                t0 = time.time()
-                df = qs[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            times[name] = round(best, 3)
+            # timer includes construction: eager checkpoints must be measured
+            times[name], rows[name] = time_row(spark, qs[name], sf_dir, name)
         except Exception as e:  # noqa: BLE001 — record and keep benching
             errs[name] = f"{type(e).__name__}: {e}"[:300]
 
@@ -363,16 +432,8 @@ def main() -> None:
     baselines_dir = sib if os.path.isdir(sib) else sf_dir
     baseline_times: dict[str, float] = {}
     for name in VERIFICATION_BASELINES:
-        best = None
         try:
-            for _ in range(2):
-                t0 = time.time()
-                qs[name](spark, baselines_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                elapsed = time.time() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            baseline_times[name] = round(best, 3)
+            baseline_times[name], rows[name] = time_row(spark, qs[name], baselines_dir, name)
         except Exception as e:  # noqa: BLE001
             errs[name] = f"{type(e).__name__}: {e}"[:300]
     # a custom --data path need not end in 'sf<number>' — never let the
@@ -474,6 +535,13 @@ def main() -> None:
         errs["__flagship__"] = f"{type(e).__name__}: {e}"[:300]
         flagship_rps = None
 
+    # the event log is complete once the session stops; it holds the tagged
+    # second run of every row in `rows`
+    spark.stop()
+    for log in os.listdir(log_dir):
+        for name, layers in _event_log_layers(os.path.join(log_dir, log), rows).items():
+            rows[name].update(layers)
+
     slowest = dict(sorted(times.items(), key=lambda kv: kv[1], reverse=True)[:10])
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
     # r14 (VERDICT r13 item 2): bench_full.json is overwritten by every run —
@@ -495,8 +563,9 @@ def main() -> None:
                 # baseline bucket back on the pre-r11 side), baselines run at
                 # `verification_baselines_sf` (sf0.01 since r12), and
                 # `calib_series` records the per-segment warm samples outlier
-                # normalization keys on.
-                "schema_version": 3,
+                # normalization keys on. schema 4: `rows` holds each timed
+                # row's layers (time_row, _event_log_layers).
+                "schema_version": 4,
                 "metric": "headline_queries_total_wall_clock",
                 "value": total,
                 "value_excludes_verification_baselines": True,
@@ -515,12 +584,11 @@ def main() -> None:
                 "calib_series": calib_series,
                 "calib_end_warm": calib_end_warm,
                 "outlier_rerun": outlier_rerun,
+                "rows": rows,
             },
             f,
             indent=1,
         )
-    import shutil
-
     try:
         shutil.copyfile(full_path, stamped_path)
     except OSError:
@@ -531,7 +599,7 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "schema_version": 3,
+                "schema_version": 4,
                 "metric": "headline_queries_total_wall_clock",
                 "value": total,
                 "unit": "sec",

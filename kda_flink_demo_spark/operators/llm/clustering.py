@@ -189,8 +189,8 @@ def connected_components(
             # label-of-label shortcuts at most one hop the next neighbor-min
             # reaches anyway, and near-clique graphs (the common dedup case)
             # converge in 2–3 one-hop rounds where every jump join is pure
-            # overhead — the r11 cc_probe measured the old it==1 start
-            # costing +22% wall on the sf0.1 image graph for ZERO round
+            # overhead — an r11 A/B probe (SCALE.md) measured the old it==1
+            # start costing +22% wall on the sf0.1 image graph for ZERO round
             # savings. The label initialization above already IS round 1, so
             # loop iteration i equals propagation round i+2: `it < 2` keeps
             # the jump starting at effective round 4 exactly as before —

@@ -241,7 +241,7 @@ def main() -> None:
     # jumping (label-of-label, r10) makes rounds ≈ log2(diameter) + 2.
     from kda_flink_demo_spark.operators.llm.clustering import connected_components
 
-    def cc_probe(edges_df, expect_comps):
+    def time_cc(edges_df, expect_comps):
         st: dict = {}
         t0 = time.time()
         cc = connected_components(edges_df, stats=st)
@@ -258,7 +258,7 @@ def main() -> None:
         )
 
     chain_len, n_chains = 11, 100_000
-    cc_chain_rounds, t_cc_chain = cc_probe(chain_edges_of(n_chains, chain_len), n_chains)
+    cc_chain_rounds, t_cc_chain = time_cc(chain_edges_of(n_chains, chain_len), n_chains)
 
     base_ids = spark.range(n_chains * chain_len).withColumnRenamed("id", "nid")
     star_edges = (
@@ -269,9 +269,9 @@ def main() -> None:
         )
         .localCheckpoint()
     )
-    cc_star_rounds, t_cc_star = cc_probe(star_edges, n_chains)
+    cc_star_rounds, t_cc_star = time_cc(star_edges, n_chains)
 
-    cc_deep_rounds, t_cc_deep = cc_probe(chain_edges_of(10_000, 101), 10_000)
+    cc_deep_rounds, t_cc_deep = time_cc(chain_edges_of(10_000, 101), 10_000)
 
     n = ev.count()
     print(

@@ -2,9 +2,11 @@
 keeps only the last definition: the earlier ones are dead code, and a
 shadowed test is never collected, so it passes silently forever. A name that
 is imported and never read is dead code too. With no linter in the repo,
-these tests are the check. The last guard keeps one way to read parquet in
-the package: ``io.sources.read_parquet``, which reads the schema from the
-footer instead of running Spark's inference job."""
+these tests are the check. Two more guards keep one way to do a thing: the
+package reads parquet only through ``io.sources.read_parquet``, which reads
+the schema from the footer instead of running Spark's inference job, and the
+tests build no session of their own: ``getOrCreate()`` on a builder would
+change the shared session's conf for every module collected after theirs."""
 
 from __future__ import annotations
 
@@ -14,7 +16,7 @@ import pathlib
 import pytest
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
-CHECKED = ("tests", "kda_flink_demo_spark")
+CHECKED = ("tests", "kda_flink_demo_spark", "scripts", "bench.py", "__spark_entry__.py")
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
@@ -32,10 +34,16 @@ def _shadowed(tree: ast.Module) -> list[str]:
     return out
 
 
+def _sources(target: str) -> list[pathlib.Path]:
+    """The file ``target``, or the ``.py`` files under the directory."""
+    path = ROOT / target
+    return [path] if path.is_file() else sorted(path.rglob("*.py"))
+
+
 @pytest.mark.parametrize("package", CHECKED)
 def test_no_name_is_defined_twice_in_one_body(package):
     found = {}
-    for path in sorted((ROOT / package).rglob("*.py")):
+    for path in _sources(package):
         dup = _shadowed(ast.parse(path.read_text(), filename=str(path)))
         if dup:
             found[str(path.relative_to(ROOT))] = dup
@@ -75,7 +83,7 @@ def _unused_imports(tree: ast.Module, lines: list[str]) -> list[str]:
 @pytest.mark.parametrize("package", CHECKED)
 def test_no_import_is_unused(package):
     found = {}
-    for path in sorted((ROOT / package).rglob("*.py")):
+    for path in _sources(package):
         text = path.read_text()
         unused = _unused_imports(ast.parse(text, filename=str(path)), text.splitlines())
         if unused:
@@ -130,3 +138,20 @@ def test_parquet_is_read_only_through_read_parquet():
         if reads:
             found[str(path.relative_to(ROOT))] = reads
     assert not found, f"parquet reads outside io.sources.read_parquet: {found}"
+
+
+def test_tests_build_no_session_of_their_own():
+    """Every test takes conftest's ``spark``, built by ``session.get_spark``."""
+    found = {}
+    for path in _sources("tests"):
+        builders = [
+            str(node.lineno)
+            for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+            if isinstance(node, ast.Attribute)
+            and node.attr == "builder"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "SparkSession"
+        ]
+        if builders:
+            found[str(path.relative_to(ROOT))] = builders
+    assert not found, f"SparkSession.builder in tests: {found}"

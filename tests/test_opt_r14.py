@@ -6,22 +6,10 @@ at the operator level, including edge cases the fixtures don't hit)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("opt-r14-tests")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "4")
-        .getOrCreate()
-    )
-    yield s
 
 
 def _rows(df):
