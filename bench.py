@@ -321,6 +321,19 @@ def time_row(spark, build, sf_dir: str, name: str) -> tuple[float, dict]:
     return round(construct_s + execute_s, 3), row
 
 
+def prior_anchor(root: str, cpus_label: str) -> dict | None:
+    """The record of the last run on this many cpus, the
+    ``bench_full_c<cpus>.json`` that ``_bench`` stamps under ``root``, or None
+    where there is none. A record from another core count is no anchor: an
+    8-cpu host's warm calibration is about half a 4-cpu host's, so the two
+    never pass the calibration check and no row would ever be compared."""
+    try:
+        with open(os.path.join(root, f"bench_full_c{cpus_label}.json")) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
 def _event_log_layers(log_path: str, names) -> dict[str, dict]:
     """Per row in ``names``, from the event log of the rows' tagged second
     runs: the noop write's stages, tasks, shuffle and spill bytes and
@@ -453,45 +466,37 @@ def _bench(log_dir: str) -> None:
     sample_calib(len(main_queries))
     calib_end_warm = calib_series[-1]["sec"] if calib_series else None
 
-    # Outlier re-runs (r08 verdict #2, widened by r09 directive 4 + advice,
-    # localized by r11 directive 3): BENCH_r08 shipped transient
-    # host-contention spikes as engine numbers; r11's single t=0 calib then
-    # missed MID-RUN throttling and flagged late-run rows as false-positive
-    # outliers. Against the PREVIOUS committed bench_full.json, any query now
-    # >1.5× its prior time IN MACHINE-NORMALIZED TERMS gets ONE later re-run
-    # recorded separately in `outlier_rerun` — where the normalization is by
-    # the query's NEAREST warm calib sample over the prior run's warm
-    # reference, so a host that slows down halfway through the run rescales
-    # the late rows' thresholds instead of flagging them. The headline
-    # min-of-2 methodology is unchanged; no >1.5× normalized jump ships
-    # unexplained. Re-runs are capped at the 8 worst ratios so a globally-
-    # contended round can't double the bench.
+    # Outlier re-runs: against the last committed record for this core count
+    # (`prior_anchor`), any query now >1.5× its prior time IN
+    # MACHINE-NORMALIZED TERMS gets ONE later re-run, recorded separately in
+    # `outlier_rerun`. The normalization is by the query's NEAREST warm calib
+    # sample over the prior run's warm reference, so a host that slows down
+    # halfway through the run rescales the late rows' thresholds instead of
+    # flagging them. The headline min-of-2 methodology is unchanged. Re-runs
+    # are capped at the 8 worst ratios so a globally-contended run can't
+    # double the bench.
     outlier_rerun: dict[str, dict[str, float]] = {}
-    prior_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
+    cpus_label = os.environ.get("SPARK_GRAFT_CPUS", "default")
+    here = os.path.dirname(os.path.abspath(__file__))
 
     def _median(xs: list[float]) -> float | None:
         xs = sorted(xs)
         return xs[len(xs) // 2] if xs else None
 
-    try:
-        with open(prior_path) as f:
-            prior = json.load(f)
-        prior_times = dict(prior.get("queries", {}))
-        # prior warm reference: median of its calib_series when present
-        # (schema >= 3), else the old single cold calib_sec — one transition
-        # round of slightly-off normalization, self-correcting next round
-        prior_ref = (
-            _median([s["sec"] for s in prior.get("calib_series", [])])
-            or prior.get("calib_sec")
-        )
-        cur_ref = _median([s["sec"] for s in calib_series])
-        calib_comparable = (
-            cur_ref is not None
-            and prior_ref
-            and abs(cur_ref - prior_ref) / prior_ref <= 0.15
-        )
-    except (OSError, ValueError):
-        prior_times, prior_ref, calib_comparable = {}, None, False
+    prior = prior_anchor(here, cpus_label) or {}
+    prior_times = dict(prior.get("queries", {}))
+    # prior warm reference: median of its calib_series when present
+    # (schema >= 3), else the old single cold calib_sec
+    prior_ref = (
+        _median([s["sec"] for s in prior.get("calib_series", [])])
+        or prior.get("calib_sec")
+    )
+    cur_ref = _median([s["sec"] for s in calib_series])
+    calib_comparable = (
+        cur_ref is not None
+        and prior_ref
+        and abs(cur_ref - prior_ref) / prior_ref <= 0.15
+    )
     if calib_comparable:
         def norm_scale(name: str) -> float:
             lc = local_calib(query_index.get(name, 0))
@@ -543,17 +548,12 @@ def _bench(log_dir: str) -> None:
             rows[name].update(layers)
 
     slowest = dict(sorted(times.items(), key=lambda kv: kv[1], reverse=True)[:10])
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
-    # r14 (VERDICT r13 item 2): bench_full.json is overwritten by every run —
-    # the driver's low-cpu rerun used to clobber the 32-cpu per-query data, so
-    # PERF could never compute a per-query round-over-round comparison. Write
-    # a cpu-stamped copy alongside (bench_full_c<cpus>.json): each core count
-    # keeps its own latest per-query record, and committed copies give the
-    # next round a stable per-query anchor.
-    cpus_label = os.environ.get("SPARK_GRAFT_CPUS", "default")
-    stamped_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), f"bench_full_c{cpus_label}.json"
-    )
+    full_path = os.path.join(here, "bench_full.json")
+    # bench_full.json is overwritten by every run, so a run on another core
+    # count would clobber the per-query record. A cpu-stamped copy alongside
+    # (bench_full_c<cpus>.json) keeps each core count's latest record; the
+    # next run on the same core count reads it as its outlier anchor.
+    stamped_path = os.path.join(here, f"bench_full_c{cpus_label}.json")
     with open(full_path, "w") as f:
         json.dump(
             {

@@ -4,8 +4,11 @@ import glob
 import os
 import time
 
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+from kda_flink_demo_spark.io.sources import load_table
 from kda_flink_demo_spark.session import get_spark
 from kda_flink_demo_spark.streaming import jobs, protobuf_compat
 
@@ -25,6 +28,39 @@ def spark():
     spark = get_spark("kda-spark-tests", cpus=8)
     spark.sparkContext.setLogLevel("WARN")
     yield spark
+
+
+def docs_slice(spark, n):
+    """The ``documents`` rows with ``doc_id < n``."""
+    return load_table(spark, SF_DIR, "documents").filter(F.col("doc_id") < n)
+
+
+def load_embeddings(spark):
+    return load_table(spark, SF_DIR, "embeddings")
+
+
+def sorted_rows(df) -> list[tuple]:
+    """Every row of ``df`` as a tuple, sorted: compares two frames' values
+    without regard to row order."""
+    return sorted(tuple(r) for r in df.collect())
+
+
+def term_stream(docs):
+    """One ``(doc_id, term)`` row per non-empty space-separated word."""
+    return docs.select(
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
+    ).filter(F.col("term") != "")
+
+
+def signed64(w: int) -> int:
+    """An unsigned 64-bit word as the signed long Spark stores it."""
+    return w - (1 << 64) if w >= 1 << 63 else w
+
+
+def rgb_frames(n, w=6, h=4, seed=0) -> list:
+    """``n`` random ``(h, w, 3)`` uint8 RGB frames."""
+    rng = np.random.RandomState(seed)
+    return [rng.randint(0, 256, (h, w, 3), dtype=np.uint8) for _ in range(n)]
 
 
 def write_replay(path, chunks) -> str:

@@ -130,7 +130,7 @@ def test_multimodal_frames_match_oracle_on_unicode(unicode_docs):
 def test_real_decode_requires_pil_or_runs(spark):
     """real_decode=True is an honest gate: payloads the pure PPM/PGM/BMP
     codec can't parse raise NotImplementedError naming PIL at DECODE time
-    (round 8 moved the gate from construction — the pure codecs make the
+    (the gate fires at decode, not at construction — the pure codecs make the
     real path runnable on supported formats; tests/test_round8_ops.py covers
     those); with PIL present any format decodes through the same mapInPandas
     contract."""
@@ -146,7 +146,7 @@ def test_real_decode_requires_pil_or_runs(spark):
 
         # an explicitly non-image, non-magic payload — NOT the fixture text,
         # whose first two bytes could accidentally spell a codec magic
-        # ("BM"/"P6") and route into a different error (r08 review finding);
+        # ("BM"/"P6") and route into a different error;
         # the honest gate fires inside the executor (Spark wraps the
         # worker's NotImplementedError)
         blob = spark.createDataFrame(
@@ -238,7 +238,7 @@ def test_llm_ops_survive_empty_input(spark, tmp_path_factory):
 
     assert text.bpe_pair_counts(docs).count() == 0
     assert versioning.snapshot_diff(docs, docs).count() == 0
-    # round-6 ops: span removal, decontamination, BPE training + encode
+    # span removal, decontamination, BPE training + encode
     assert dedup.span_dedup_apply(docs).count() == 0
     assert dedup.span_decontaminate(docs, docs).count() == 0
     assert text.bpe_merge_train(docs, steps=2).count() == 0
@@ -342,7 +342,7 @@ def test_chunk_documents_matches_pure_python_spec(spark):
 
 
 @pytest.mark.parametrize("fixture_name", ["edge_docs", "unicode_docs"])
-def test_round5_ops_match_oracle_on_edge_docs(request, fixture_name):
+def test_document_operators_match_oracle_on_edge_docs(request, fixture_name):
     """The span/LM/mixing/pipeline operators must agree with their oracles on
     short, empty, and multi-byte-UTF-8 documents too — every guard (empty
     span range, <2-token LM docs, 1-token 'empty' split semantics, null span
@@ -414,13 +414,11 @@ _DOCS_ONLY_ORACLE_QUERIES = [
     "dedup_keep_best",
     "dataset_split",
     "multimodal_resize",
-    # round-6 additions (all documents-only)
     "span_dedup_apply",
     "span_decontaminate",
     "bpe_merge_steps",
     "bpe_encode",
     "fuzzy_ingest_index_build",
-    # round-7 additions (documents-only)
     "bpe_encode_stored",
     "dedup_simhash_report",
     "inverted_index",

@@ -6,12 +6,16 @@ these tests are the check. Two more guards keep one way to do a thing: the
 package reads parquet only through ``io.sources.read_parquet``, which reads
 the schema from the footer instead of running Spark's inference job, and the
 tests build no session of their own: ``getOrCreate()`` on a builder would
-change the shared session's conf for every module collected after theirs."""
+change the shared session's conf for every module collected after theirs.
+A helper two test modules need lives once, in ``conftest.py``, instead of
+being copied; and no new test file or test is named after the round that
+wrote it."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 import pytest
 
@@ -19,6 +23,20 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 CHECKED = ("tests", "kda_flink_demo_spark", "scripts", "bench.py", "__spark_entry__.py")
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+# Test files named after a round that predate the naming guard. A test's id
+# is its file and its name, and these ids are kept stable, so the files keep
+# their names; no other file may join them.
+ROUND_NAMED_FILES = {
+    "test_opt_r13.py",
+    "test_opt_r14.py",
+    "test_round5_ops.py",
+    "test_round6_ops.py",
+    "test_round6_streaming.py",
+    "test_round7_ops.py",
+    "test_round8_ops.py",
+    "test_round9_ops.py",
+    "test_round10_ops.py",
+}
 
 
 def _shadowed(tree: ast.Module) -> list[str]:
@@ -155,3 +173,42 @@ def test_tests_build_no_session_of_their_own():
         if builders:
             found[str(path.relative_to(ROOT))] = builders
     assert not found, f"SparkSession.builder in tests: {found}"
+
+
+def _round_names(path: pathlib.Path, tree: ast.Module) -> list[str]:
+    """The module's name if it carries a round (``test_round<n>``,
+    ``_r<n>.py``) and is not one of ``ROUND_NAMED_FILES``, and ``name line``
+    for every test function whose name carries one (``round<n>``)."""
+    named = re.search(r"test_round\d+|_r\d+\.py$", path.name) and path.name not in ROUND_NAMED_FILES
+    out = [path.name] if named else []
+    out += [
+        f"{node.name} {node.lineno}"
+        for node in ast.walk(tree)
+        if isinstance(node, FUNCS) and node.name.startswith("test") and re.search(r"round\d+", node.name)
+    ]
+    return out
+
+
+def test_tests_are_not_named_after_a_round():
+    found = {}
+    for path in _sources("tests"):
+        names = _round_names(path, ast.parse(path.read_text(), filename=str(path)))
+        if names:
+            found[str(path.relative_to(ROOT))] = names
+    assert not found, f"tests named after a round: {found}"
+    assert all((ROOT / "tests" / name).is_file() for name in ROUND_NAMED_FILES)
+
+
+def test_no_function_body_is_copied_between_test_modules():
+    """Two module-level functions in different test modules with the same
+    body (docstrings aside) are one helper written twice."""
+    owners: dict[str, list[str]] = {}
+    for path in _sources("tests"):
+        for node in ast.parse(path.read_text(), filename=str(path)).body:
+            if not isinstance(node, FUNCS):
+                continue
+            body = node.body[1:] if ast.get_docstring(node) is not None else node.body
+            key = ast.dump(ast.Module(body=body, type_ignores=[]))
+            owners.setdefault(key, []).append(f"{path.relative_to(ROOT)}::{node.name}")
+    copies = [names for names in owners.values() if len({n.split("::")[0] for n in names}) > 1]
+    assert not copies, f"function bodies copied between test modules: {copies}"

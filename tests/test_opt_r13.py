@@ -1,4 +1,4 @@
-"""Round-13 optimization equivalence pins: every restructure that changed an
+"""Optimization equivalence pins: every restructure that changed an
 operator's internals must produce bit-identical output to the shape it
 replaced (the oracle re-checks externally; these tests pin the equivalence
 at the operator level, including edge cases the fixtures don't hit)."""
@@ -7,11 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.conftest import SF_DIR, sorted_rows
 
 
 def test_fused_table_checks_equal_separate_builders(spark):
@@ -48,7 +44,7 @@ def test_fused_table_checks_equal_separate_builders(spark):
         uniqueness_check(child, ["k"], "k_unique"),
         referential_check(child, parent, "fk", "pk", "fk_refs_parent"),
     )
-    assert _rows(fused) == _rows(separate)
+    assert sorted_rows(fused) == sorted_rows(separate)
 
 
 def test_fused_table_checks_empty_input_vacuous_pass(spark):
@@ -73,7 +69,7 @@ def test_fused_table_checks_empty_input_vacuous_pass(spark):
 
 
 def test_cc_init_fold_equals_identity_init(spark):
-    """The r13 label initialization (min(u, neighbors) folded into node
+    """The label initialization (min(u, neighbors) folded into node
     discovery) converges to the same components as the transitive closure,
     on shapes that exercise the init: chains (deep), stars (shallow),
     isolated edges, and a graph whose min node sits mid-chain."""
@@ -128,7 +124,7 @@ def test_bm25_literal_vocab_prune_matches_broadcast_semantics(spark):
 
 
 def test_word_ngrams_zip_shape_equals_element_at_shape(spark):
-    """r13: word_ngrams moved from the element_at-per-position lambda (which
+    """word_ngrams moved from the element_at-per-position lambda (which
     re-inlines the split n× per gram) to arrays_zip-of-slices. Pin the new
     shape against an inline replica of the OLD shape: same grams, same order,
     same multiplicity semantics — over edge cases (NULL text, empty string,
@@ -176,7 +172,7 @@ def test_word_ngrams_zip_shape_equals_element_at_shape(spark):
 
 
 def test_lm_bigram_window_marginal_equals_two_pass_counts(spark):
-    """r13: bigram_lm_score derives c1 as the window-sum marginal of c2
+    """bigram_lm_score derives c1 as the window-sum marginal of c2
     instead of a second corpus aggregate. Pin (n_bigrams, avg_nll) against an
     inline replica of the OLD two-aggregate two-join shape on a corpus with
     repeated bigrams, a 1-token doc (absent from output) and shared prefixes."""
@@ -205,14 +201,14 @@ def test_lm_bigram_window_marginal_equals_two_pass_counts(spark):
             .select("doc_id", "n_bigrams", det_round(F.col("_avg"), 4).alias("avg_nll"))
         )
 
-    got = _rows(lm.bigram_lm_score(df))
-    want = _rows(old_score(df))
+    got = sorted_rows(lm.bigram_lm_score(df))
+    want = sorted_rows(old_score(df))
     assert got == want, (got, want)
     assert all(r[0] != 2 for r in got)  # the 1-token doc has no bigrams
 
 
 def test_pq_checkpoint_codebook_outputs_identical(spark):
-    """r13: build_pq_index checkpoints the final codebook BEFORE the last
+    """build_pq_index checkpoints the final codebook BEFORE the last
     assignment round is planned (training subtree runs once, 24 -> 16 jobs).
     Pin codes AND codebook bit-identical to the unflagged shape."""
     from kda_flink_demo_spark.io.sources import load_table
@@ -221,12 +217,12 @@ def test_pq_checkpoint_codebook_outputs_identical(spark):
     nv = load_table(spark, SF_DIR, "embeddings")
     plain_codes, plain_cb = pq_encode(nv, with_codebook=True)
     ck_codes, ck_cb = pq_encode(nv, with_codebook=True, checkpoint_codebook=True)
-    assert _rows(ck_codes) == _rows(plain_codes)
-    assert _rows(ck_cb) == _rows(plain_cb)
+    assert sorted_rows(ck_codes) == sorted_rows(plain_codes)
+    assert sorted_rows(ck_cb) == sorted_rows(plain_cb)
 
 
 def test_logreg_checkpointed_features_identical_scores(spark):
-    """r13: logreg_quality_score materializes the feature table once instead
+    """logreg_quality_score materializes the feature table once instead
     of re-featurizing the corpus in every gradient round. Pin scores against
     an inline replica of the OLD unmaterialized shape (NULL text + NULL label
     rows included — the coalesce semantics must survive the checkpoint)."""
@@ -274,6 +270,6 @@ def test_logreg_checkpointed_features_identical_scores(spark):
             (F.col("y") == 1.0).alias("label"),
         )
 
-    got = _rows(classifier.logreg_quality_score(df))
-    want = _rows(old_score(df))
+    got = sorted_rows(classifier.logreg_quality_score(df))
+    want = sorted_rows(old_score(df))
     assert got == want, (got, want)

@@ -1,4 +1,4 @@
-"""Round-14 optimization equivalence pins: every restructure that changed an
+"""Optimization equivalence pins: every restructure that changed an
 operator's internals must produce bit-identical output to the shape it
 replaced (the oracle re-checks externally; these tests pin the equivalence
 at the operator level, including edge cases the fixtures don't hit)."""
@@ -9,15 +9,11 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.conftest import SF_DIR, sorted_rows
 
 
 def _kmeans_assign_column_api(df, k, iters, id_col, vec_col, round_digits, keep_vec):
-    """Inline replica of the pre-r14 Column-object kmeans_assign (the shape
+    """Inline replica of the Column-object kmeans_assign (the shape
     the selectExpr rewrite replaced) — used to pin bit-identity."""
     from kda_flink_demo_spark.functions import det_round
     from kda_flink_demo_spark.operators.llm.similarity import _as_double, dot
@@ -76,7 +72,7 @@ def _kmeans_assign_column_api(df, k, iters, id_col, vec_col, round_digits, keep_
 
 
 def test_kmeans_selectexpr_equals_column_api(spark):
-    """The r14 selectExpr-built kmeans plan computes the exact doubles and
+    """The selectExpr-built kmeans plan computes the exact doubles and
     cluster ids of the Column-API shape it replaced, at more than one (k,
     iters) and including keep_vec."""
     from kda_flink_demo_spark.operators.llm.kmeans import kmeans_assign
@@ -87,10 +83,10 @@ def test_kmeans_selectexpr_equals_column_api(spark):
         old = _kmeans_assign_column_api(
             emb, k, iters, "vec_id", "embedding", 6, keep_vec=False
         )
-        assert _rows(new) == _rows(old), f"kmeans mismatch at k={k}, iters={iters}"
+        assert sorted_rows(new) == sorted_rows(old), f"kmeans mismatch at k={k}, iters={iters}"
     new_v = kmeans_assign(emb, k=5, iters=2, keep_vec=True)
     old_v = _kmeans_assign_column_api(emb, 5, 2, "vec_id", "embedding", 6, keep_vec=True)
-    assert _rows(new_v.select("vec_id", "cluster", "dist2", "_v")) == _rows(
+    assert sorted_rows(new_v.select("vec_id", "cluster", "dist2", "_v")) == sorted_rows(
         old_v.select("vec_id", "cluster", "dist2", "_v")
     )
 
@@ -109,15 +105,16 @@ def test_semantic_dedup_pairs_unchanged_by_selectexpr_kmeans(spark):
         block_col="cluster",
         threshold=0.3,
     )
-    assert _rows(new) == _rows(old)
+    assert sorted_rows(new) == sorted_rows(old)
 
 
 def test_cc_union_agg_round_equals_ground_truth(spark):
-    """The r14 round rewrite (own label rides the neighbor stream as a tagged
+    """The round rewrite (own label rides the neighbor stream as a tagged
     union row; neighbor-min + old-label attach in ONE aggregate, convergence
     via Observation) yields exact component minima on chains, stars, deep
     chains (jump rounds exercised), self-loops, and NULL-id rows — and the
-    reported round count stays the r13 convention."""
+    reported round count keeps its convention (iterations until no label
+    changes)."""
     from kda_flink_demo_spark.operators.llm.clustering import connected_components
 
     cases = [
@@ -171,7 +168,7 @@ def test_narrow_checkpoint_values_and_partitions(spark):
 
     df = spark.range(0, 1000, 1, 8).selectExpr("id", "id % 7 AS k")
     ck = narrow_checkpoint(df, 500)
-    assert _rows(ck) == _rows(df)
+    assert sorted_rows(ck) == sorted_rows(df)
     assert ck.rdd.getNumPartitions() == 2  # ceil(1000 / 500)
     wide = narrow_checkpoint(spark.range(0, 100, 1, 4), 10)
     assert wide.rdd.getNumPartitions() == 4  # want 10 parts > current 4: keep
@@ -215,9 +212,9 @@ def test_connected_components_fails_loudly_when_checkpoint_did_not_run(
 
 def test_bpe_train_degenerate_corpus_emits_no_step_rows(spark):
     """A corpus whose vocabulary runs out of adjacent pairs mid-training
-    emits NO row for the pair-less steps (the pre-r14 behavior the lazy-argmax
-    rewrite must reproduce: the constant columns come back NULL from the left
-    join and the step row is filtered, never a NULL-pair row)."""
+    emits NO row for the pair-less steps (the lazy-argmax rewrite keeps the
+    earlier behavior: the constant columns come back NULL from the left join
+    and the step row is filtered, never a NULL-pair row)."""
     from kda_flink_demo_spark.operators.llm.text import bpe_encode, bpe_merge_train
 
     # one 2-char word: step 1 merges ("a","b"), steps 2..4 have no pairs
@@ -231,7 +228,7 @@ def test_bpe_train_degenerate_corpus_emits_no_step_rows(spark):
 
 
 def test_cms_window_total_equals_stream_total(spark):
-    """The r14 N-rides-cells identity: for every hash row d, the per-d cell
+    """The N-rides-cells identity: for every hash row d, the per-d cell
     total equals the total trigram stream count (each term lands in exactly
     one bucket per d) — and the report's within_bound therefore uses the same
     N the old counts-wide aggregate computed."""

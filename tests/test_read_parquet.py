@@ -24,7 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kda_flink_demo_spark.io.sources import DEFAULT_SF_DIR, load_table, read_parquet
-from tests.conftest import SF_DIR, SF_DIR_MED
+from tests.conftest import SF_DIR, SF_DIR_MED, docs_slice
 
 FIXTURE_DIRS = [SF_DIR, SF_DIR_MED, DEFAULT_SF_DIR]
 # the five tables the registry_batch benchmark workload loads
@@ -120,7 +120,7 @@ def test_footer_schema_equals_inference_on_every_store_kind(spark, tmp_path):
     (for a segment store, Spark discovers ``seg`` as a partition column)."""
     from kda_flink_demo_spark.operators.sketches import update_sketch_store
     from kda_flink_demo_spark.streaming import standing_stores as ss
-    from tests.test_segment_store import _docs, _reader_case
+    from tests.test_segment_store import _reader_case
 
     roots = []
     for name in ["cms", "drift", "pca", "span", "ahash", "editdist", "cumulate"]:
@@ -132,7 +132,7 @@ def test_footer_schema_equals_inference_on_every_store_kind(spark, tmp_path):
     ss.compact_cms_store(spark, str(tmp_path / "cms" / "store"), upto_batch=1)
 
     ev = load_table(spark, SF_DIR, "events")
-    docs = _docs(spark, n=40)
+    docs = docs_slice(spark, 40)
     scd2 = dict(keys=["user_id"], attr_cols=["event_type"], ts_col="ts", tie_col="event_id")
     for bid in range(2):
         chunk = ev.filter(F.col("event_id") % 2 == bid)

@@ -1,6 +1,5 @@
-"""Round-10 additions: AVI multi-stream correctness (r09 advice), stride
-guards, the PIL-independence of the video/frame paths (r09 verdict directive
-7), and the fused one-scan media ingest profile (directive 6) — fused output
+"""AVI multi-stream correctness, stride guards, the PIL-independence of the
+video/frame paths, and the fused one-scan media ingest profile — fused output
 must be bit-identical to the dedicated sniff + *_ahash scans it replaces."""
 
 from __future__ import annotations
@@ -22,7 +21,7 @@ from kda_flink_demo_spark.operators.llm.multimodal import _video_frame_rows
 
 
 # ---------------------------------------------------------------------------
-# RIFF/AVI stream selection (r09 advice: strf must come from the 'vids' strl,
+# RIFF/AVI stream selection (strf must come from the 'vids' strl,
 # frames only from that stream's '##db'/'##dc' chunks)
 # ---------------------------------------------------------------------------
 
@@ -53,8 +52,8 @@ def _frame_bytes(f: np.ndarray) -> bytes:
 def _audio_first_avi(frames: list[np.ndarray]) -> bytes:
     """An AVI whose FIRST strl is an audio stream (stream 00, WAVEFORMATEX
     strf, '00wb' data chunks) and whose SECOND strl is the video (stream 01,
-    BITMAPINFOHEADER strf, '01db' frames) — the layout the r09 advice showed
-    the old first-strf reader misparsing."""
+    BITMAPINFOHEADER strf, '01db' frames) — the layout a first-strf reader
+    misparses."""
     h, w = frames[0].shape[0], frames[0].shape[1]
     row_stride = (w * 3 + 3) & ~3
     avih = struct.pack(
@@ -111,7 +110,7 @@ def test_decode_avi_no_vids_stream_yields_no_frames():
 
 def test_encode_avi_still_roundtrips_through_stream_selector():
     """The single-stream writer's output decodes identically under the new
-    stream-aware reader (regression guard for the r09 advice fix)."""
+    stream-aware reader."""
     frames = [np.full((4, 6, 3), i * 40, dtype=np.uint8) for i in range(4)]
     _w, _h, _fps, out = imaging.decode_avi(imaging.encode_avi(frames, fps=10))
     assert len(out) == 4
@@ -120,7 +119,8 @@ def test_encode_avi_still_roundtrips_through_stream_selector():
 
 
 # ---------------------------------------------------------------------------
-# Stride guards (r09 advice: stride=0 died deep inside the Arrow worker)
+# Stride guards (stride=0 must fail on the driver, not deep inside the Arrow
+# worker)
 # ---------------------------------------------------------------------------
 
 
@@ -142,7 +142,7 @@ def test_video_stride_guard_raises_at_construction(spark):
 
 
 # ---------------------------------------------------------------------------
-# PIL-independence of the video/frame paths (r09 verdict directive 7)
+# PIL-independence of the video/frame paths
 # ---------------------------------------------------------------------------
 
 
@@ -173,7 +173,7 @@ def test_frame_sampling_and_video_hash_pil_independent(monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# Fused media ingest profile (r09 verdict directive 6): decode once, outputs
+# Fused media ingest profile: decode once, outputs
 # bit-identical to the dedicated sniff + *_ahash scans
 # ---------------------------------------------------------------------------
 
@@ -244,7 +244,7 @@ def test_media_ingest_profile_quarantine_rows_null_hash(spark):
 
 
 # ---------------------------------------------------------------------------
-# Connected components with pointer jumping (r09 verdict directive 5)
+# Connected components with pointer jumping
 # ---------------------------------------------------------------------------
 
 
@@ -332,7 +332,7 @@ def test_profile_row_never_raises_property():
         wf.setframerate(8000)
         wf.writeframes(b"\x00\x10" * 256)
     real_wav = buf.getvalue()
-    # round-10 formats: corruptions must quarantine through the NEW decoders
+    # compressed formats: corruptions must quarantine through the NEW decoders
     # too (PNG incl. interlace+palette, GIF/LZW, baseline + progressive JPEG,
     # Motion-JPEG AVI, G.711)
     from kda_flink_demo_spark.operators.llm import jpeg as _jpeg
@@ -392,7 +392,7 @@ def test_profile_row_never_raises_property():
 
 def test_image_and_audio_hash_bits_helpers_match_patterns():
     """The per-payload bit helpers (shared by the fused kernel and the
-    dedicated scans since r10) still reproduce the designed patterns."""
+    dedicated scans) still reproduce the designed patterns."""
     for d in (0, 5, 23, 47, 61):
         img = None
         # synthesize one payload driver-side via the same corpus math

@@ -1,8 +1,8 @@
-"""Round-5 session-4 operators: Bloom-filter ingest dedup, corpus snapshot
-diff, multi-resolution rollup, trailing z-score anomaly detection, SCD2
-history reconstruction, BPE pair counts. The oracle
-sweep (test_registry_oracle) checks the registered queries end-to-end; these
-tests pin the operator-level contracts and edge cases the fixture can't hit."""
+"""Bloom-filter ingest dedup, corpus snapshot diff, multi-resolution rollup,
+trailing z-score anomaly detection, SCD2 history reconstruction, BPE pair
+counts. The oracle sweep (test_registry_oracle) checks the registered queries
+end-to-end; these tests pin the operator-level contracts and edge cases the
+fixture can't hit."""
 
 from __future__ import annotations
 

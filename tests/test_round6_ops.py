@@ -1,7 +1,6 @@
-"""Round-6 hardening + new operators: sketch-store crash recovery (rename
-promote), sketch_report empty-anchor survival, merge_agg_states explicit
-keys, NULL-text ingest-dedup semantics. Later sessions extend this file with
-BPE merge training and span-level cross-doc dedup tests."""
+"""Sketch-store crash recovery (rename promote), sketch_report empty-anchor
+survival, merge_agg_states explicit keys, NULL-text ingest-dedup semantics,
+BPE merge training and span-level cross-doc dedup."""
 
 from __future__ import annotations
 
@@ -13,11 +12,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from kda_flink_demo_spark.io.sources import load_table
-from tests.conftest import SF_DIR
-
-
-def _canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.conftest import SF_DIR, sorted_rows
 
 
 # ------------------------------------------------------------- sketch store
@@ -37,8 +32,8 @@ def test_sketch_store_recovers_from_crash_between_delete_and_promote(spark, tmp_
     """Fault injection for the promote: after batch A lands, simulate a crash
     that happened AFTER the old store was deleted but BEFORE ``.next`` was
     renamed in (store missing, complete ``.next`` present). The next batch
-    must promote ``.next`` and merge on top of it — r05's read-back probe
-    silently treated this state as 'first batch' and reset all history."""
+    must promote ``.next`` and merge on top of it — a read-back probe
+    that silently treated this state as 'first batch' and reset all history."""
     sketch_report, sketch_state, update_sketch_store = _store_tools()
 
     ev = load_table(spark, SF_DIR, "events").select("event_type", "user_id")
@@ -52,8 +47,8 @@ def test_sketch_store_recovers_from_crash_between_delete_and_promote(spark, tmp_
     assert not os.path.exists(store)
 
     update_sketch_store(b, store)
-    got = _canon(sketch_report(spark.read.parquet(store)))
-    expected = _canon(sketch_report(sketch_state(ev)))
+    got = sorted_rows(sketch_report(spark.read.parquet(store)))
+    expected = sorted_rows(sketch_report(sketch_state(ev)))
     assert got == expected  # batch A's history survived the crash
 
 
@@ -74,15 +69,15 @@ def test_sketch_store_ignores_partial_next_without_success_marker(spark, tmp_pat
     os.remove(os.path.join(store + ".next", "_SUCCESS"))
 
     update_sketch_store(b, store)
-    got = _canon(sketch_report(spark.read.parquet(store)))
-    expected = _canon(sketch_report(sketch_state(ev)))
+    got = sorted_rows(sketch_report(spark.read.parquet(store)))
+    expected = sorted_rows(sketch_report(sketch_state(ev)))
     assert got == expected
     assert not os.path.exists(store + ".next")  # consumed by the promote
 
 
 def test_sketch_report_survives_missing_anchor_key(spark):
     """If the anchor key has no state (filtered-out event type), every key's
-    HLL distinct estimate must still be reported, with a 0 overlap — the r05
+    HLL distinct estimate must still be reported, with a 0 overlap — a
     crossJoin against the empty anchor side zero-rowed the whole report."""
     from kda_flink_demo_spark.operators.sketches import sketch_report, sketch_state
 
@@ -109,14 +104,14 @@ def test_merge_agg_states_explicit_keys_match_inference(spark):
     ev = load_table(spark, SF_DIR, "events")
     a = agg_state(ev.filter(F.col("event_id") % 2 == 0))
     b = agg_state(ev.filter(F.col("event_id") % 2 == 1))
-    inferred = _canon(merge_agg_states(a, b))
-    explicit = _canon(merge_agg_states(a, b, key_cols=("event_type", "minute")))
+    inferred = sorted_rows(merge_agg_states(a, b))
+    explicit = sorted_rows(merge_agg_states(a, b, key_cols=("event_type", "minute")))
     assert inferred == explicit
 
 
 def test_merge_agg_states_rejects_measure_named_key(spark):
     """A grouping column named like a measure cannot be silently folded as
-    one (ADVICE r05) — explicit key_cols naming it must raise, not corrupt."""
+    one — explicit key_cols naming it must raise, not corrupt."""
     from kda_flink_demo_spark.operators.aggregates import agg_state, merge_agg_states
 
     ev = load_table(spark, SF_DIR, "events")
@@ -207,8 +202,8 @@ def _oracle_on_docs(spark_df, rows, sql):
 
 def test_bpe_encode_oracle_parity_when_pairs_exhaust(spark):
     """Training exhausts the pair supply before `steps` rounds: the Spark
-    fold identity-degrades and the oracle's LEFT JOIN must too — the r06
-    review caught the comma cross-join zero-rowing the encoded vocab."""
+    fold identity-degrades and the oracle's LEFT JOIN must too — a comma
+    cross-join there zero-rows the encoded vocab."""
     from kda_flink_demo_spark.operators.llm.text import (
         bpe_encode,
         bpe_encode_oracle_sql,

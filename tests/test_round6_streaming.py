@@ -1,4 +1,4 @@
-"""Streaming twins for SCD2 and snapshot diff (r05 VERDICT directive 6):
+"""Streaming twins for SCD2 and snapshot diff:
 foreachBatch folds into crash-safe standing stores, held to the batch
 computation as oracle, with fault-injection and replay-idempotence coverage
 — the same contract the sketch store and anomaly ring carry."""
@@ -20,15 +20,11 @@ from kda_flink_demo_spark.streaming.standing_stores import (
     update_scd2_store,
     update_snapshot_version_store,
 )
-from tests.conftest import SF_DIR, build_replay, drain
+from tests.conftest import SF_DIR, build_replay, drain, sorted_rows
 
 _SCD2_ARGS = dict(
     keys=["user_id"], attr_cols=["event_type"], ts_col="ts", tie_col="event_id"
 )
-
-
-def _canon(df):
-    return sorted(tuple(r) for r in df.collect())
 
 
 def _event_chunks(spark, tmp_path, n_chunks=4):
@@ -49,7 +45,7 @@ def _scd2_expected(spark):
     ev = load_table(spark, SF_DIR, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
-    return _canon(scd2_history(ev, **_SCD2_ARGS))
+    return sorted_rows(scd2_history(ev, **_SCD2_ARGS))
 
 
 def test_streaming_scd2_store_matches_batch(spark, tmp_path):
@@ -75,12 +71,12 @@ def test_streaming_scd2_store_matches_batch(spark, tmp_path):
     assert len(n_batches) >= 2  # genuinely incremental
 
     expected = _scd2_expected(spark)
-    assert _canon(scd2_from_store(spark, store, **_SCD2_ARGS)) == expected
+    assert sorted_rows(scd2_from_store(spark, store, **_SCD2_ARGS)) == expected
 
     # replayed (already-folded) batch: kept rows dedupe, compressed rows
     # compress away again — the store must not change
     update_scd2_store(dfs[1], store, **_SCD2_ARGS)
-    assert _canon(scd2_from_store(spark, store, **_SCD2_ARGS)) == expected
+    assert sorted_rows(scd2_from_store(spark, store, **_SCD2_ARGS)) == expected
 
 
 def test_streaming_scd2_store_crash_recovery(spark, tmp_path):
@@ -94,7 +90,7 @@ def test_streaming_scd2_store_crash_recovery(spark, tmp_path):
     os.rename(store, store + ".next")  # simulated mid-promote crash
     for df in dfs[2:]:
         update_scd2_store(df, store, **_SCD2_ARGS)
-    assert _canon(scd2_from_store(spark, store, **_SCD2_ARGS)) == _scd2_expected(spark)
+    assert sorted_rows(scd2_from_store(spark, store, **_SCD2_ARGS)) == _scd2_expected(spark)
 
 
 def test_streaming_quarantine_gate_matches_batch(spark, tmp_path):
@@ -121,20 +117,20 @@ def test_streaming_quarantine_gate_matches_batch(spark, tmp_path):
     got_bad = spark.read.parquet(quar_p)
     # reunion equals the input
     reunion = got_good.select("event_id").unionByName(got_bad.select("event_id"))
-    assert _canon(reunion) == _canon(ev.select("event_id"))
+    assert sorted_rows(reunion) == sorted_rows(ev.select("event_id"))
     # tags equal the batch split's
     _g, bad = quarantine_split(ev, rules())
     expected_bad = bad.select(
         "event_id", F.array_join("violations", ",").alias("violations")
     )
-    assert _canon(got_bad.select("event_id", "violations")) == _canon(expected_bad)
+    assert sorted_rows(got_bad.select("event_id", "violations")) == sorted_rows(expected_bad)
     assert got_bad.count() > 0  # the gate actually fired on the fixture
 
     # replayed batch: partition overwritten, not appended
     update_quarantine_store(chunks[1], 1, rules(), good_p, quar_p)
-    assert _canon(
+    assert sorted_rows(
         spark.read.parquet(quar_p).select("event_id", "violations")
-    ) == _canon(expected_bad)
+    ) == sorted_rows(expected_bad)
 
 
 def _snapshots(spark):
@@ -192,7 +188,7 @@ def test_streaming_scd2_enrichment_matches_batch_temporal_join(spark, tmp_path):
         facts, hist, keys=["user_id"], fact_ts="ts", attr_cols=("state_at_event",)
     ).select("event_id", "state_at_event")
     got = spark.read.parquet(sink).select("event_id", "state_at_event")
-    assert _canon(got) == _canon(expected)
+    assert sorted_rows(got) == sorted_rows(expected)
 
     # replayed fact batch: partition overwritten, not appended
     enrich_batch_with_scd2(
@@ -200,9 +196,9 @@ def test_streaming_scd2_enrichment_matches_batch_temporal_join(spark, tmp_path):
         keys=["user_id"], attr_cols=["event_type"], fact_ts="ts",
         ts_col="ts", tie_col="event_id", attr_aliases=["state_at_event"],
     )
-    assert _canon(
+    assert sorted_rows(
         spark.read.parquet(sink).select("event_id", "state_at_event")
-    ) == _canon(expected)
+    ) == sorted_rows(expected)
 
 
 def test_snapshot_version_store_diffs_match_batch(spark, tmp_path):
@@ -217,8 +213,8 @@ def test_snapshot_version_store_diffs_match_batch(spark, tmp_path):
         update_snapshot_version_store(df, store, bid)
     assert list_snapshot_versions(spark, store) == [0, 1, 2]
     for a, b in [(0, 1), (1, 2), (0, 2)]:
-        got = _canon(diff_snapshot_versions(spark, store, a, b))
-        assert got == _canon(snapshot_diff(snaps[a], snaps[b])), (a, b)
+        got = sorted_rows(diff_snapshot_versions(spark, store, a, b))
+        assert got == sorted_rows(snapshot_diff(snaps[a], snaps[b])), (a, b)
 
 
 def test_snapshot_version_store_replay_and_partial_dir(spark, tmp_path):
@@ -229,9 +225,9 @@ def test_snapshot_version_store_replay_and_partial_dir(spark, tmp_path):
     store = str(tmp_path / "snap_store")
     for bid, df in enumerate(snaps[:2]):
         update_snapshot_version_store(df, store, bid)
-    before = _canon(diff_snapshot_versions(spark, store, 0, 1))
+    before = sorted_rows(diff_snapshot_versions(spark, store, 0, 1))
     update_snapshot_version_store(snaps[1], store, 1)  # checkpoint replay
-    assert _canon(diff_snapshot_versions(spark, store, 0, 1)) == before
+    assert sorted_rows(diff_snapshot_versions(spark, store, 0, 1)) == before
 
     # simulated crash mid-write of version=5: copy of v1 with the marker gone
     shutil.copytree(f"{store}/version=1", f"{store}/version=5")

@@ -1,8 +1,8 @@
-"""Round-8 regressions: the r07 advice findings (drift_between
-duplicate/overlapping batch lists, pq_adc_topk geometry derived from a
-caller-supplied index; the compaction-retry findings are pinned on the
-segment protocol in test_segment_store.py) plus the oracle/registry hygiene
-changes."""
+"""Regressions: drift_between on duplicate/overlapping batch lists,
+pq_adc_topk geometry derived from a caller-supplied index (the
+compaction-retry cases are pinned on the segment protocol in
+test_segment_store.py), the pure PPM/BMP/WAV real-decode paths, and the
+oracle/registry hygiene."""
 
 from __future__ import annotations
 
@@ -11,34 +11,18 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
-
-
-def _docs(spark, n=150):
-    from kda_flink_demo_spark.io.sources import load_table
-
-    return load_table(spark, SF_DIR, "documents").filter(F.col("doc_id") < n)
-
-
-def _emb(spark):
-    from kda_flink_demo_spark.io.sources import load_table
-
-    return load_table(spark, SF_DIR, "embeddings")
-
-
-def _canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.conftest import docs_slice, load_embeddings, sorted_rows
 
 
 # ---------------------------------------------------------------------------
-# drift_between: duplicate / overlapping batch lists (r07 advice, low)
+# drift_between: duplicate / overlapping batch lists
 # ---------------------------------------------------------------------------
 
 
 def _drift_store(spark, tmp_path):
     from kda_flink_demo_spark.streaming.standing_stores import update_drift_store
 
-    docs = _docs(spark, n=180)
+    docs = docs_slice(spark, 180)
     store = str(tmp_path / "drift")
     dims = {"lang": F.col("lang"), "source": F.col("source")}
     for bid in range(4):
@@ -52,8 +36,8 @@ def test_drift_between_dedupes_repeated_batch_ids(spark, tmp_path):
     from kda_flink_demo_spark.streaming.standing_stores import drift_between
 
     store = _drift_store(spark, tmp_path)
-    clean = _canon(drift_between(spark, store, [0, 1], [2, 3]))
-    duped = _canon(drift_between(spark, store, [0, 1, 0, 1], [3, 2, 3]))
+    clean = sorted_rows(drift_between(spark, store, [0, 1], [2, 3]))
+    duped = sorted_rows(drift_between(spark, store, [0, 1, 0, 1], [3, 2, 3]))
     assert duped == clean
 
 
@@ -66,7 +50,7 @@ def test_drift_between_rejects_old_new_overlap(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# pq_adc_topk: geometry derived from a supplied index (r07 advice, low)
+# pq_adc_topk: geometry derived from a supplied index
 # ---------------------------------------------------------------------------
 
 
@@ -79,12 +63,12 @@ def test_pq_adc_topk_derives_geometry_from_supplied_index(spark):
         pq_adc_topk,
     )
 
-    emb = _emb(spark)
+    emb = load_embeddings(spark)
     idx = build_pq_index(emb, m=4, subdim=16, codebook_k=8)
-    want = _canon(
+    want = sorted_rows(
         pq_adc_topk(emb, [0, 1], k=5, m=4, subdim=16, codebook_k=8, index=idx)
     )
-    got = _canon(
+    got = sorted_rows(
         pq_adc_topk(emb, [0, 1], k=5, m=8, subdim=8, codebook_k=16, index=idx)
     )
     assert got == want
@@ -96,7 +80,7 @@ def test_pq_adc_topk_rejects_empty_codebook(spark):
         pq_adc_topk,
     )
 
-    emb = _emb(spark)
+    emb = load_embeddings(spark)
     nv, codes, codebook = build_pq_index(emb, m=4, subdim=16, codebook_k=8)
     empty = (nv, codes, codebook.filter(F.lit(False)))
     with pytest.raises(ValueError, match="empty codebook"):
@@ -104,7 +88,7 @@ def test_pq_adc_topk_rejects_empty_codebook(spark):
 
 
 # ---------------------------------------------------------------------------
-# Multimodal REAL decode (r07 verdict #6): the pure PPM/BMP/WAV codecs make
+# Multimodal REAL decode: the pure PPM/BMP/WAV codecs make
 # real_decode=True actually execute in this container — one green test per
 # modality, with the honest NotImplementedError gate still covered in
 # test_edge_parity.py::test_real_decode_requires_pil_or_runs.
@@ -174,7 +158,7 @@ def test_real_image_decode_ppm_and_bmp(spark):
 def test_ppm_crlf_header_decodes_identically():
     """A CRLF separator after maxval (Windows netpbm writers) must count as
     ONE separator — the naive 'one whitespace byte' rule shifts the raster a
-    byte and silently corrupts every pixel (r08 review finding)."""
+    byte and silently corrupts every pixel."""
     import numpy as np
 
     from kda_flink_demo_spark.operators.llm import imaging
@@ -192,7 +176,7 @@ def test_ppm_crlf_header_decodes_identically():
 def test_ppm_lone_cr_with_0x0a_first_pixel_disambiguated_by_length():
     """The nastier cousin of the CRLF case: a lone-CR separator whose FIRST
     raster byte is 0x0A spells b'\\r\\n' at the boundary too — the raster
-    LENGTH must disambiguate (r08 second-review finding)."""
+    LENGTH must disambiguate."""
     import numpy as np
 
     from kda_flink_demo_spark.operators.llm import imaging
@@ -293,7 +277,7 @@ def test_audio_fingerprint_volume_invariant_and_discriminative(spark):
 
 
 # ---------------------------------------------------------------------------
-# Registry hygiene: helpers out of the driver surface (r07 verdict #3)
+# Registry hygiene: helpers out of the driver surface
 # ---------------------------------------------------------------------------
 
 

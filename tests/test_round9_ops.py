@@ -1,4 +1,4 @@
-"""Round-9 additions: the driver-checkable perceptual dedup corpus
+"""The driver-checkable perceptual dedup corpus
 (synth_media design invariants, hash == designed pattern, backend-invariant
 hashing incl. the fake-PIL branch), the pure RIFF/AVI video decoder, and the
 vectorized packbits hash stage."""
@@ -17,11 +17,7 @@ from kda_flink_demo_spark.operators.llm.image_dedup import (
     audio_ahash,
     image_ahash,
 )
-from tests.conftest import drain, write_replay
-
-
-def _signed(w: int) -> int:
-    return w - (1 << 64) if w >= 1 << 63 else w
+from tests.conftest import drain, rgb_frames, signed64, write_replay
 
 
 # ---------------------------------------------------------------------------
@@ -73,7 +69,7 @@ def test_image_hash_equals_design_and_ignores_brightness(spark):
     # between e.g. doc 60 and doc 80 while the pattern saturates at v=3)
     docs = spark.range(100).withColumnRenamed("id", "doc_id")
     got = {r.doc_id: r.ahash for r in image_ahash(synth_media.synth_images(docs)).collect()}
-    assert got == {d: _signed(synth_media.image_pattern(d)) for d in range(100)}
+    assert got == {d: signed64(synth_media.image_pattern(d)) for d in range(100)}
     # brightness invariance, explicitly: docs 60 and 80 share group+pattern
     # (v saturated) but have different brightness offsets → identical hash
     assert got[60] == got[80]
@@ -85,7 +81,7 @@ def test_image_hash_equals_design_and_ignores_brightness(spark):
 def test_audio_hash_equals_design_and_ignores_volume(spark):
     docs = spark.range(100).withColumnRenamed("id", "doc_id")
     got = {r.doc_id: r.ahash for r in audio_ahash(synth_media.synth_wavs(docs)).collect()}
-    assert got == {d: _signed(synth_media.audio_pattern(d)) for d in range(100)}
+    assert got == {d: signed64(synth_media.audio_pattern(d)) for d in range(100)}
     assert got[60] == got[80]  # same pattern, volume factors differ
     wav60 = synth_media.synth_wavs(docs).filter("doc_id = 60").collect()[0].payload
     wav80 = synth_media.synth_wavs(docs).filter("doc_id = 80").collect()[0].payload
@@ -96,9 +92,9 @@ def test_image_hash_pinned_value(spark):
     """Doc 0 is codeword 0 verbatim — a packbits/bit-order regression canary."""
     docs = spark.range(1).withColumnRenamed("id", "doc_id")
     (row,) = image_ahash(synth_media.synth_images(docs)).collect()
-    assert row.ahash == _signed(0x076BF32C166E97E2)
+    assert row.ahash == signed64(0x076BF32C166E97E2)
     (arow,) = audio_ahash(synth_media.synth_wavs(docs)).collect()
-    assert arow.ahash == _signed(0x48C33F405F6C4B2F)
+    assert arow.ahash == signed64(0x48C33F405F6C4B2F)
 
 
 # ---------------------------------------------------------------------------
@@ -126,8 +122,8 @@ class _FakePILImage:
 
 def test_canonical_gray_pil_branch_bit_equal(monkeypatch):
     """A payload the pure codec rejects routes through PIL (decode ONLY) and
-    must produce the bit-identical canonical 8×8 gray — the r08 advice's
-    mixed-backend index-poisoning fix, executed in CI via a fake PIL."""
+    must produce the bit-identical canonical 8×8 gray — a mixed-backend
+    index would otherwise be poisoned; executed in CI via a fake PIL."""
     # build a real PPM, then wrap it in a fake container the pure codec rejects
     lvl = np.where(
         synth_media._bits_msb(synth_media.image_pattern(3)).reshape(8, 8) == 1, 210, 45
@@ -211,10 +207,10 @@ def _install_fake_pil(monkeypatch, opener):
 
 
 def test_multimodal_pil_tiers_match_pure_backend(monkeypatch):
-    """The PIL feature/resize tiers (module-level helpers since r09) produce
+    """The PIL feature/resize tiers (module-level helpers) produce
     the same geometry + bit-identical brightness as the pure backend on a
-    shared format — executed via the fake PIL, closing the r08 'PIL-present
-    branches never run in CI' gap."""
+    shared format — executed via the fake PIL, so the PIL-present branches
+    run in CI."""
     from kda_flink_demo_spark.operators.llm.multimodal import (
         _image_features_pil,
         _image_features_pure,
@@ -248,13 +244,8 @@ def test_multimodal_pil_tiers_match_pure_backend(monkeypatch):
 # ---------------------------------------------------------------------------
 
 
-def _frames(n, w=6, h=4, seed=0):
-    rng = np.random.RandomState(seed)
-    return [rng.randint(0, 256, (h, w, 3), dtype=np.uint8) for _ in range(n)]
-
-
 def test_avi_roundtrip_pixel_exact():
-    frames = _frames(7)
+    frames = rgb_frames(7)
     b = imaging.encode_avi(frames, fps=25)
     w, h, fps, out = imaging.decode_avi(b)
     assert (w, h, fps, len(out)) == (6, 4, 25.0, 7)
@@ -290,7 +281,7 @@ def test_avi_honest_gates():
     with pytest.raises(NotImplementedError, match="pyav/ffmpeg"):
         imaging.decode_avi(b"\x00\x00\x00\x00 not riff")
     # a compressed stream (non-zero biCompression) must refuse, not garble
-    frames = _frames(2)
+    frames = rgb_frames(2)
     b = bytearray(imaging.encode_avi(frames, fps=10))
     strf_off = bytes(b).index(b"strf") + 8
     b[strf_off + 16 : strf_off + 20] = (1).to_bytes(4, "little")  # BI_RLE8
@@ -308,7 +299,7 @@ def test_sample_video_frames_real_decode(spark):
     payloads = []
     all_frames = {}
     for doc_id, n in ((0, 7), (1, 12)):
-        frames = _frames(n, seed=doc_id)
+        frames = rgb_frames(n, seed=doc_id)
         all_frames[doc_id] = frames
         payloads.append((doc_id, bytearray(imaging.encode_avi(frames, fps=10))))
     df = spark.createDataFrame(payloads, "doc_id long, payload binary")
@@ -340,9 +331,9 @@ def test_edges_give_identical_components_to_full_pairs(spark):
     rows = []
     # groups of exact dups + hamming-chained variants + diverse singletons
     for d in range(120):
-        rows.append((d, _signed(synth_media.image_pattern(d))))
+        rows.append((d, signed64(synth_media.image_pattern(d))))
     for d in range(120, 160):
-        rows.append((d, _signed((0xDEADBEEF << 13) * (d * 2 + 1) & ((1 << 64) - 1))))
+        rows.append((d, signed64((0xDEADBEEF << 13) * (d * 2 + 1) & ((1 << 64) - 1))))
     hashes = spark.createDataFrame(rows, "doc_id long, ahash long")
 
     pairs = hash_near_dup_pairs(hashes, max_hamming=3).select(
@@ -406,7 +397,7 @@ def test_video_vhash_equals_design_despite_corrupt_frames(spark):
         r.doc_id: r.ahash
         for r in video_ahash(synth_media.synth_pattern_videos(docs)).collect()
     }
-    assert got == {d: _signed(synth_media.image_pattern(d)) for d in range(120)}
+    assert got == {d: signed64(synth_media.image_pattern(d)) for d in range(120)}
 
 
 def test_video_vhash_majority_is_load_bearing(spark):
@@ -430,8 +421,8 @@ def test_video_vhash_majority_is_load_bearing(spark):
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     got = {r.doc_id: r.ahash for r in video_ahash(df).collect()}
     pattern = synth_media.image_pattern(5)
-    assert got[0] == _signed(pattern)
-    assert got[1] == _signed(pattern ^ ((1 << 64) - 1))
+    assert got[0] == signed64(pattern)
+    assert got[1] == signed64(pattern ^ ((1 << 64) - 1))
 
 
 def test_sniff_quarantines_corrupt_and_unknown(spark):
@@ -443,7 +434,7 @@ def test_sniff_quarantines_corrupt_and_unknown(spark):
 
     good_img = imaging.encode_ppm(np.full((4, 4, 3), 100, dtype=np.uint8))
     bad_ppm = b"P6 trunca"  # valid magic, truncated header
-    avi = bytearray(imaging.encode_avi(_frames(2), fps=10))
+    avi = bytearray(imaging.encode_avi(rgb_frames(2), fps=10))
     strf_off = bytes(avi).index(b"strf") + 8
     avi[strf_off + 16 : strf_off + 20] = (1).to_bytes(4, "little")  # compressed
     rows = [
@@ -784,11 +775,11 @@ def test_empty_media_batch(spark):
 
 
 def test_avi_uncompressed_bpp_gate_fires_at_parse_time():
-    """Round-12 (from review): the bpp != 24 gate on uncompressed BI_RGB
+    """The bpp != 24 gate on uncompressed BI_RGB
     streams must fire at PARSE time like the codec gate — a parse-only
     caller (or a zero-frame sample plan) must reject a 16-bpp stream, not
     defer the refusal to the first decoded chunk."""
-    b = bytearray(imaging.encode_avi(_frames(2), fps=10))
+    b = bytearray(imaging.encode_avi(rgb_frames(2), fps=10))
     strf_off = bytes(b).index(b"strf") + 8
     b[strf_off + 14 : strf_off + 16] = (16).to_bytes(2, "little")  # biBitCount
     with pytest.raises(NotImplementedError, match="bpp != 24"):

@@ -15,23 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kda_flink_demo_spark.streaming.store import cseg_dir as _cseg_dir
-from tests.conftest import SF_DIR
-
-
-def _docs(spark, n=150):
-    from kda_flink_demo_spark.io.sources import load_table
-
-    return load_table(spark, SF_DIR, "documents").filter(F.col("doc_id") < n)
-
-
-def _term_stream(docs):
-    return docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
-    ).filter(F.col("term") != "")
-
-
-def _canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.conftest import SF_DIR, docs_slice, sorted_rows, term_stream
 
 
 def _seg_names(store):
@@ -59,7 +43,7 @@ def _cms_kind():
 
     return SegStore(
         fold=lambda docs, bid, store: update_cms_store(
-            _term_stream(docs), bid, store, depth=3, width=64
+            term_stream(docs), bid, store, depth=3, width=64
         ),
         read=cms_from_store,
         compact=compact_cms_store,
@@ -90,11 +74,11 @@ def seg_store(request):
 
 
 def _fold_store(spark, tmp_path, s, n_batches=4):
-    docs = _docs(spark)
+    docs = docs_slice(spark, 150)
     store = str(tmp_path / "store")
     for bid in range(n_batches):
         s.fold(docs.filter(F.col("doc_id") % n_batches == bid), bid, store)
-    return store, _canon(s.read(spark, store))
+    return store, sorted_rows(s.read(spark, store))
 
 
 def _hand_cseg(spark, store, upto, s):
@@ -116,7 +100,7 @@ def test_compaction_preserves_readout_bit_exact(spark, tmp_path, seg_store):
     s = seg_store
     store, before = _fold_store(spark, tmp_path, s)
     s.compact(spark, store, upto_batch=2)
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
     # segment layout: seg=2 (compacted 0..2) + seg=3
     segs = sorted(
         d for d in os.listdir(store) if d.startswith("seg=")
@@ -124,7 +108,7 @@ def test_compaction_preserves_readout_bit_exact(spark, tmp_path, seg_store):
     assert segs == ["seg=2", "seg=3"]
     # compaction is idempotent on an already-compacted range
     s.compact(spark, store, upto_batch=2)
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
 
 
 def test_compaction_crash_windows_never_lose_or_double_count(spark, tmp_path, seg_store):
@@ -140,7 +124,7 @@ def test_compaction_crash_windows_never_lose_or_double_count(spark, tmp_path, se
     os.makedirs(fake)
     with open(os.path.join(fake, "part-0.parquet"), "wb") as fh:
         fh.write(b"garbage")
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
     shutil.rmtree(fake)
 
     # (a) crash after step 1: build a real committed cseg by hand, keep segs
@@ -149,15 +133,15 @@ def test_compaction_crash_windows_never_lose_or_double_count(spark, tmp_path, se
     cseg = _cseg_dir(store, 1)
     merged = s.merge(spark.read.parquet(seg0, seg1))
     merged.write.parquet(cseg)
-    assert _canon(s.read(spark, store)) == before  # shadow, not double
+    assert sorted_rows(s.read(spark, store)) == before  # shadow, not double
 
     # (b) crash mid step 2: one covered segment already deleted
     shutil.rmtree(seg0)
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
 
     # recovery: re-running compact completes deletion + rename
     s.compact(spark, store, upto_batch=1)
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
     segs = sorted(d for d in os.listdir(store) if d.startswith("seg="))
     assert segs == ["seg=1", "seg=2"]
     assert not os.path.exists(cseg)
@@ -176,9 +160,9 @@ def test_compaction_orphan_cseg_survives_later_compaction(spark, tmp_path, seg_s
     merged.write.parquet(_cseg_dir(store, 1))
     shutil.rmtree(seg0)
     shutil.rmtree(seg1)
-    assert _canon(s.read(spark, store)) == before  # shadow read exact
+    assert sorted_rows(s.read(spark, store)) == before  # shadow read exact
     s.compact(spark, store, upto_batch=2)
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
     segs = sorted(d for d in os.listdir(store) if d.startswith("seg="))
     assert segs == ["seg=2", "seg=3"]
     assert not os.path.exists(_cseg_dir(store, 1))
@@ -193,8 +177,8 @@ def test_compaction_clamps_to_newest_covered_segment(spark, tmp_path, seg_store)
     s.compact(spark, store, upto_batch=10)  # batch 10 never folded
     assert sorted(d for d in os.listdir(store) if d.startswith("seg=")) == ["seg=2"]
     # the future batch now folds — it must NOT clobber the compacted history
-    s.fold(_docs(spark).limit(0), 10, store)
-    assert _canon(s.read(spark, store)) == before
+    s.fold(docs_slice(spark, 150).limit(0), 10, store)
+    assert sorted_rows(s.read(spark, store)) == before
 
 
 def test_compaction_retry_same_upto_after_mid_step2_crash(spark, tmp_path, seg_store):
@@ -207,10 +191,10 @@ def test_compaction_retry_same_upto_after_mid_step2_crash(spark, tmp_path, seg_s
     store, before = _fold_store(spark, tmp_path, s)
     _hand_cseg(spark, store, 2, s)
     shutil.rmtree(os.path.join(store, "seg=2"))  # mid-step-2 crash
-    assert _canon(s.read(spark, store)) == before  # shadow read exact
+    assert sorted_rows(s.read(spark, store)) == before  # shadow read exact
 
     s.compact(spark, store, upto_batch=2)  # the retry
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
     assert _seg_names(store) == ["seg=2", "seg=3"]
     assert not os.path.exists(_cseg_dir(store, 2))
     assert not os.path.exists(_cseg_dir(store, 1))
@@ -227,10 +211,10 @@ def test_compaction_two_committed_csegs_never_double_count(spark, tmp_path, seg_
     _hand_cseg(spark, store, 2, s)  # cseg=2 covers batches 0..2 (subsumes it)
     for d in ("seg=0", "seg=1", "seg=2"):
         shutil.rmtree(os.path.join(store, d))
-    assert _canon(s.read(spark, store)) == before  # highest shadows
+    assert sorted_rows(s.read(spark, store)) == before  # highest shadows
 
     s.compact(spark, store, upto_batch=3)
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
     assert not os.path.exists(_cseg_dir(store, 1))
     assert not os.path.exists(_cseg_dir(store, 2))
     # all rows now live in committed seg= dirs only, no cseg residue
@@ -253,10 +237,10 @@ def test_compaction_recovery_crash_windows_stay_exact(spark, tmp_path, seg_store
         shutil.rmtree(os.path.join(store, d))
     # crash window A: subsumed cseg=1 deleted, swap of cseg=2 not yet done
     shutil.rmtree(_cseg_dir(store, 1))
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
     # rerun converges from window A
     s.compact(spark, store, upto_batch=3)
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
     assert not any(d.startswith("cseg=") for d in os.listdir(store))
 
 
@@ -303,26 +287,26 @@ def test_compaction_fails_loudly_when_hadoop_refuses(spark, tmp_path, monkeypatc
     for _ in range(2):
         with pytest.raises(IOError, match="could not delete"):
             s.compact(spark, store, upto_batch=2)
-        assert _canon(s.read(spark, store)) == before
+        assert sorted_rows(s.read(spark, store)) == before
     refuse.clear()
     s.compact(spark, store, upto_batch=2)
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
     assert _seg_names(store) == ["seg=2", "seg=3"]
     assert not os.path.exists(_cseg_dir(store, 2))
 
     # a refused rename: step 3, then recovery
-    more = _docs(spark, n=300).filter(F.col("doc_id") >= 150)
+    more = docs_slice(spark, 300).filter(F.col("doc_id") >= 150)
     s.fold(more.filter(F.col("doc_id") % 2 == 0), 4, store)
     s.fold(more.filter(F.col("doc_id") % 2 == 1), 5, store)
-    before = _canon(s.read(spark, store))
+    before = sorted_rows(s.read(spark, store))
     refuse["rename"] = True
     for _ in range(2):
         with pytest.raises(IOError, match="rename"):
             s.compact(spark, store, upto_batch=5)
-        assert _canon(s.read(spark, store)) == before
+        assert sorted_rows(s.read(spark, store)) == before
     refuse.clear()
     s.compact(spark, store, upto_batch=5)
-    assert _canon(s.read(spark, store)) == before
+    assert sorted_rows(s.read(spark, store)) == before
     assert _seg_names(store) == ["seg=5"]
     assert not os.path.exists(_cseg_dir(store, 5))
 
@@ -341,21 +325,21 @@ def _reader_case(spark, name, tmp_path):
     from kda_flink_demo_spark.streaming import standing_stores as ss
 
     sink = str(tmp_path / "sink")
-    docs = _docs(spark, n=40)
+    docs = docs_slice(spark, 40)
 
     def half(df, col, bid):
         return df.filter(F.col(col) % 2 == bid)
 
     if name == "cms":
         return (lambda bid, st: ss.update_cms_store(
-                    _term_stream(half(docs, "doc_id", bid)), bid, st, depth=3, width=64),
-                lambda st: _canon(ss.cms_from_store(spark, st)))
+                    term_stream(half(docs, "doc_id", bid)), bid, st, depth=3, width=64),
+                lambda st: sorted_rows(ss.cms_from_store(spark, st)))
     if name == "drift":
         dims = {"lang": F.col("lang"), "source": F.col("source")}
 
         def read_drift(st):
             rep = ss.drift_between(spark, st, [0], [1])
-            return None if rep is None else _canon(rep)
+            return None if rep is None else sorted_rows(rep)
 
         return (lambda bid, st: ss.update_drift_store(half(docs, "doc_id", bid), bid, st, dims),
                 read_drift)
@@ -371,7 +355,7 @@ def _reader_case(spark, name, tmp_path):
     if name == "span":
         return (lambda bid, st: ss.update_span_index_store(
                     half(docs, "doc_id", bid), bid, st, sink),
-                lambda st: _canon(ss.read_span_index(spark, st)))
+                lambda st: sorted_rows(ss.read_span_index(spark, st)))
     if name == "ahash":
         from kda_flink_demo_spark.operators.llm import synth_media
 
@@ -379,18 +363,18 @@ def _reader_case(spark, name, tmp_path):
             ids = spark.createDataFrame([(bid * 30 + i,) for i in range(3)], "doc_id long")
             ss.update_ahash_index_store(synth_media.synth_images(ids), bid, st, sink)
 
-        return fold_ahash, lambda st: _canon(ss.read_ahash_index(spark, st))
+        return fold_ahash, lambda st: sorted_rows(ss.read_ahash_index(spark, st))
     if name == "editdist":
         return (lambda bid, st: ss.update_editdist_index_store(
                     half(docs, "doc_id", bid), bid, st, sink),
-                lambda st: _canon(ss.read_editdist_index(spark, st)))
+                lambda st: sorted_rows(ss.read_editdist_index(spark, st)))
     assert name == "cumulate"
     rows = [(i, "a" if i % 3 else "b", f"2024-01-01 00:{i:02d}:00") for i in range(40)]
     events = spark.createDataFrame(rows, "_i long, railway_class string, rowtime string")
     events = events.withColumn("rowtime", F.to_timestamp("rowtime"))
     return (lambda bid, st: ss.update_cumulate_store(
                 half(events, "_i", bid).drop("_i"), bid, st),
-            lambda st: _canon(ss.cumulate_from_store(spark, st)))
+            lambda st: sorted_rows(ss.cumulate_from_store(spark, st)))
 
 
 @pytest.mark.parametrize(
@@ -448,7 +432,7 @@ def test_read_and_compaction_list_the_store_once(spark, tmp_path, monkeypatch):
         return CountingFs(fs), hpath
 
     monkeypatch.setattr(protocol, "_fs", counting_fs)
-    assert _canon(cms_from_store(spark, store)) == before
+    assert sorted_rows(cms_from_store(spark, store)) == before
     assert len(listed) == 1
     listed.clear()
     compact_cms_store(spark, store, upto_batch=2)

@@ -10,11 +10,7 @@ from pyspark.sql import functions as F
 
 from kda_flink_demo_spark.io.sources import file_events_stream, load_table, register_views
 from kda_flink_demo_spark.operators.windows import tumbling_counts
-from tests.conftest import SF_DIR, drain, write_replay
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.conftest import SF_DIR, drain, sorted_rows, write_replay
 
 
 def test_sql_and_dataframe_spellings_agree(spark):
@@ -36,7 +32,7 @@ def test_sql_and_dataframe_spellings_agree(spark):
             F.col("event_type").alias("railway_class"), F.col("ts").alias("rowtime")
         )
     ).select("railway_class", "railway_class_count", "window_start", "window_end")
-    assert _rows(sql_df) == _rows(api_df)
+    assert sorted_rows(sql_df) == sorted_rows(api_df)
 
 
 def test_results_invariant_to_partitioning(spark):
@@ -50,8 +46,8 @@ def test_results_invariant_to_partitioning(spark):
         lambda d: text.doc_fingerprint(d),
         lambda d: dedup.simhash_values(d),
     ]:
-        one = _rows(build(docs.repartition(1)))
-        many = _rows(build(docs.repartition(17)))
+        one = sorted_rows(build(docs.repartition(1)))
+        many = sorted_rows(build(docs.repartition(17)))
         assert one == many
 
 

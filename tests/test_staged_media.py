@@ -1,13 +1,13 @@
-"""Round-12: staged media corpora (synth_media.staged).
+"""Staged media corpora (synth_media.staged).
 
-The r11 bench showed fixture-encoder cost dominating the media gate/report
-rows — production reads media bytes from the lake, so the registry rows now
-read a once-per-session parquet staging of each synthetic corpus. These tests
-pin the two properties that make that safe:
+Encoding the fixtures dominated the media gate/report rows in the bench;
+production reads media bytes from the lake, so the registry rows read a
+once-per-session parquet staging of each synthetic corpus. These tests pin
+the two properties that make that safe:
 
 1. BIT-IDENTITY: the staged payloads equal an inline ``synth_*`` call's
    payloads exactly (binary columns round-trip parquet exactly; the ahash
-   VALUES oracles re-verify this externally every round).
+   VALUES oracles re-check this externally on every driver run).
 2. SESSION CACHING + PARALLELISM: the second ``staged`` call returns the
    cached artifact without re-synthesizing, and the scan is re-spread so the
    decode kernels downstream don't serialize on a bin-packed 1-partition

@@ -1,8 +1,8 @@
-"""Round-11 bounded video sampling: the per-video decode cost cap.
+"""Bounded video sampling: the per-video decode cost cap.
 
-The r10 scale probe showed the per-frame JPEG entropy decode is the heaviest
-per-row kernel in the repo, so an unbounded per-frame walk is dishonest at
-video-lake scale. The fix is a PINNED deterministic frame sample
+The per-frame JPEG entropy decode is the heaviest per-row kernel in the
+repo, so an unbounded per-frame walk does not scale to a video lake. The
+frame sample is PINNED and deterministic
 (``imaging.sample_frame_indices``): the container walk still locates every
 chunk (cheap), but only ``max_frames`` (default 9, odd) are decoded. Videos
 with <= 9 frames hash ALL frames, so every pre-existing oracle/index is
@@ -19,10 +19,7 @@ from kda_flink_demo_spark.operators.llm.image_dedup import (
     video_ahash,
     video_hash_bits,
 )
-
-
-def _signed(u: int) -> int:
-    return u - (1 << 64) if u >= (1 << 63) else u
+from tests.conftest import rgb_frames, signed64
 
 
 def _frame(bits: np.ndarray) -> np.ndarray:
@@ -96,15 +93,15 @@ def test_decode_avi_sampled_matches_full_decode_at_indices():
 
 def test_bounded_hash_identical_for_short_videos(spark):
     """<= 9 frames ⇒ the bounded fingerprint IS the full-majority fingerprint
-    (the property that keeps every pre-r11 oracle and standing index
-    unchanged): the whole designed corpus (2-6 frames) must still hash to
+    (the property that keeps every oracle and standing index over short
+    videos unchanged): the whole designed corpus (2-6 frames) must still hash to
     image_pattern(doc_id) verbatim, bounded and unbounded agreeing."""
     docs = spark.range(60).withColumnRenamed("id", "doc_id")
     corpus = synth_media.synth_mjpeg_videos(docs)
     bounded = {r.doc_id: r.ahash for r in video_ahash(corpus).collect()}
     unbounded = {r.doc_id: r.ahash for r in video_ahash(corpus, max_frames=None).collect()}
     assert bounded == unbounded
-    assert bounded == {d: _signed(synth_media.image_pattern(d)) for d in range(60)}
+    assert bounded == {d: signed64(synth_media.image_pattern(d)) for d in range(60)}
 
 
 def test_sampling_is_load_bearing_above_the_bound():
@@ -123,8 +120,8 @@ def test_sampling_is_load_bearing_above_the_bound():
     b = imaging.encode_avi_mjpeg(frames, fps=10)
     bounded = int(pack_bits_i64(video_hash_bits(b)[None, :])[0])
     exact = int(pack_bits_i64(video_hash_bits(b, max_frames=None)[None, :])[0])
-    assert bounded == _signed(pattern)
-    assert exact == _signed(pattern ^ ((1 << 64) - 1))
+    assert bounded == signed64(pattern)
+    assert exact == signed64(pattern ^ ((1 << 64) - 1))
 
 
 def test_repeat_tiles_the_frame_cycle():
@@ -171,10 +168,9 @@ def test_long_video_hash_is_bounded_and_stable():
 
 
 def test_sniff_and_profile_agree_on_mid_sample_corrupt_frames(spark):
-    """Lockstep contract of the shared _profile_row kernel (r11 review
-    finding): sniff (want_bits=False) must decode the SAME pinned frame
-    sample as the profile, so a corrupt frame inside the sample flips BOTH
-    to 'corrupt' — a sniff that decoded fewer frames would wave through
+    """Lockstep contract of the shared _profile_row kernel: sniff
+    (want_bits=False) must decode the SAME pinned frame sample as the
+    profile, so a corrupt frame inside the sample flips BOTH to 'corrupt' — a sniff that decoded fewer frames would wave through
     payloads the fingerprint scans then die on. A corrupt frame OUTSIDE the
     sample is invisible to both (consistent, the documented sampling
     trade)."""
@@ -222,12 +218,7 @@ def test_profile_duration_exact_for_long_videos(spark):
     df = spark.createDataFrame([(0, bytearray(b))], "doc_id long, payload binary")
     row = media_ingest_profile(df).collect()[0]
     assert row.modality == "video" and row.duration_sec == 2.4
-    assert row.ahash == _signed(synth_media.image_pattern(3))
-
-
-def _rgb_frames(n, w=6, h=4, seed=3):
-    rng = np.random.RandomState(seed)
-    return [rng.randint(0, 256, (h, w, 3), dtype=np.uint8) for _ in range(n)]
+    assert row.ahash == signed64(synth_media.image_pattern(3))
 
 
 def _fake_h264_avi(frames, fps=10):
@@ -294,7 +285,7 @@ def _install_fake_av(monkeypatch, frames, fps=10.0):
 
 
 def test_pyav_branch_parity_with_fake_backend(monkeypatch):
-    """R13 (r12 verdict directive 5): the video dispatch falls through to
+    """The video dispatch falls through to
     pyav for codecs the pure reader gates, with the identical
     (w, h, fps, n, frames) contract — every downstream kernel (frame rows,
     temporal-majority fingerprint) must produce the SAME values through the
@@ -304,7 +295,7 @@ def test_pyav_branch_parity_with_fake_backend(monkeypatch):
         _video_frame_rows,
     )
 
-    frames = _rgb_frames(7)
+    frames = rgb_frames(7, seed=3)
     plain = imaging.encode_avi(frames, fps=10)
     gated = _fake_h264_avi(frames, fps=10)
     _install_fake_av(monkeypatch, frames)
@@ -332,7 +323,7 @@ def test_pyav_gate_message_and_quarantine_without_backend(monkeypatch):
         _video_decode_sampled,
     )
 
-    gated = _fake_h264_avi(_rgb_frames(3))
+    gated = _fake_h264_avi(rgb_frames(3, seed=3))
     monkeypatch.setitem(sys.modules, "av", None)  # import av -> ImportError
     with pytest.raises(NotImplementedError, match="pyav branch"):
         _video_decode_sampled(gated)
