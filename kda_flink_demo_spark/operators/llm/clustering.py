@@ -52,7 +52,6 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 24,
-    checkpoint_every: int = 3,
     stats: dict | None = None,
 ) -> DataFrame:
     """(a, b) undirected edges → (node, component) where component is the
@@ -82,13 +81,10 @@ def connected_components(
     old-vs-new join (which itself replaced re-executing the lazy plan; labels
     are (node, label) pairs, so the materialization is ~17 bytes/node). Only a
     ``limit(1).count()`` (zero or one row) ever reaches the driver.
-    ``checkpoint_every`` is retained for API compatibility but every round now
-    checkpoints (the probe requires the materialization anyway).
 
     Pass ``stats={}`` to receive ``stats["rounds"]`` — the number of
     propagation rounds actually run (≈ graph diameter; the r10 chain-depth
     probe records it against designed long-chain corpora)."""
-    del checkpoint_every  # superseded: every round checkpoints (see docstring)
     # Job hygiene (optimization r14, guide §1.2 — the loop was job-floor-bound:
     # 29 Spark jobs / 2.1 s for a 3-round fixture graph): every count the loop
     # needs now rides the checkpoint action it follows as an Observation

@@ -55,7 +55,6 @@ def hopping_counts(
     size: str = "2 minutes",
     slide: str = "1 minute",
     count_alias: str = "railway_class_count",
-    emit_hop_rowtime: bool = True,
 ) -> DataFrame:
     """W4 hopping window count with the reference's HOP_ROWTIME column
     (window end − 1 ms, used as RECEIVED_ON by the hopping sink,
@@ -64,7 +63,7 @@ def hopping_counts(
     The reference hardcodes a degenerate slide of INTERVAL '0' SECOND (quirk,
     SURVEY §7.3); we expose slide as a real parameter.
     """
-    out = (
+    return (
         df.groupBy(F.window(ts, size, slide).alias("w"), F.col(key).cast("string").alias(key))
         .agg(F.count(F.lit(1)).alias(count_alias))
         .select(
@@ -73,12 +72,8 @@ def hopping_counts(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
         )
+        .withColumn("received_on", F.col("window_end") - F.expr("INTERVAL 1 MILLISECOND"))
     )
-    if emit_hop_rowtime:
-        out = out.withColumn(
-            "received_on", F.col("window_end") - F.expr("INTERVAL 1 MILLISECOND")
-        )
-    return out
 
 
 def cumulate_counts(

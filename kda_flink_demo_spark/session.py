@@ -64,7 +64,9 @@ def get_spark(app_name: str = "kda-flink-demo-spark", cpus: int | None = None) -
     master/executor topology comes from spark-submit; this factory only supplies
     SQL-level conf. It exports the Python-worker start-up hook
     (``protobuf_compat``) first, so a JVM this call launches hands it to every
-    worker; a session that already exists keeps the workers it has.
+    worker; a session that already exists keeps the workers it has (for a
+    session built some other way, ``apply_engine_conf`` hands the hook to the
+    workers it starts later).
     """
     protobuf_compat.export_worker_pythonpath()
     if cpus is None:
@@ -97,6 +99,13 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
     Used by ``__spark_entry__`` because the verification driver owns the session.
     The critical one is the UTC session timezone: window boundaries must match the
     DuckDB oracle's naive-timestamp arithmetic.
+
+    A session whose JVM started without the Python-worker start-up hook (built
+    with ``SparkSession.builder``, not ``get_spark``) gets it through
+    ``sparkContext.environment``: Python functions defined from then on start
+    their workers with the hook, so their tasks stop re-reading the zips. A
+    JVM that already has the hook keeps its environment as it is, because a
+    changed environment starts a second worker pool.
     """
     try:
         seen = spark in _CONF_APPLIED
@@ -122,6 +131,12 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, ENGINE_CONF[k])
         except Exception:
             pass  # static conf on this build — keep going
+    hook = protobuf_compat.shim_dir()
+    if hook not in (spark._jvm.System.getenv("PYTHONPATH") or "").split(os.pathsep):
+        env = spark.sparkContext.environment
+        paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+        if hook not in paths:
+            env["PYTHONPATH"] = os.pathsep.join([hook, *paths])
     try:
         _CONF_APPLIED.add(spark)
     except TypeError:

@@ -3,48 +3,34 @@
 ``protobuf_compat.export_worker_pythonpath`` puts this directory on
 PYTHONPATH before the SparkSession's JVM starts, so Python's ``site`` imports
 this file in the driver and in every process the JVM spawns: pyspark workers
-and streaming runners. It makes two fixes, each a no-op where it is not
-needed.
+and streaming runners. It does one thing, and only before Python 3.13:
 
-1. **Zip-directory re-reads (Python < 3.13).** pyspark's
-   ``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``
-   on every task. Before 3.13, ``zipimport.zipimporter.invalidate_caches``
-   re-reads its archive's whole central directory, once per importer
-   instance, and a worker holds 16-18 of them: pyspark.zip x12 (1 328
-   entries each), the spark-core jar x2 (5 359 entries each) and the py4j
-   zip x2. Measured on a 4-cpu host, that was 18 reads and 200-400 ms before
-   every Python task read a row. ``_guard_zip_invalidate`` re-reads an
-   archive only when its ``(st_mtime_ns, st_size, st_ino)`` differs from the
-   stat this process took at its last read; a new or rewritten zip is still
-   picked up. Python 3.13 made the call lazy, so it is left alone there.
-2. **A protobuf runtime for ``transformWithStateInPandas``.** Spark 4's
-   stateful API (``distinct_state.distinct_users_tws``) speaks a protobuf
-   state-server protocol: the worker imports
-   ``pyspark.sql.streaming.proto.StateMessage_pb2``, which needs
-   ``google.protobuf``. This container has no protobuf install, but the
-   google-cloud-sdk ships a pure-python copy (4.23). Two gaps to bridge:
+**It stops zip-directory re-reads.** pyspark's
+``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()`` on
+every task. Before 3.13, ``zipimport.zipimporter.invalidate_caches``
+re-reads its archive's whole central directory, once per importer instance,
+and a worker holds 16-18 of them: pyspark.zip x12 (1 328 entries each), the
+spark-core jar x2 (5 359 entries each) and the py4j zip x2. Measured on a
+4-cpu host, that was 18 reads and 200-400 ms before every Python task read a
+row. ``_guard_zip_invalidate`` re-reads an archive only when its
+``(st_mtime_ns, st_size, st_ino)`` differs from the stat this process took at
+its last read; a new or rewritten zip is still picked up. Python 3.13 made
+the call lazy, so it is left alone there.
 
-   - ``StateMessage_pb2`` is protobuf-6 gencode and imports
-     ``google.protobuf.runtime_version`` (added in 5.27) purely to VALIDATE
-     the runtime version; the 4.23 runtime parses the serialized descriptors
-     fine (the wire/descriptor format is stable), so a no-op validator
-     restores it.
-   - spark-core's jar sits on the worker's sys.path and contains
-     ``google/protobuf/*.proto`` RESOURCES; Python imports that as an empty
-     namespace package, so "``import google.protobuf`` succeeded" is NOT
-     evidence of a usable runtime: ``descriptor`` must import too, and the
-     phantom namespace modules must be purged before retrying.
-
-   With no usable protobuf anywhere this is a no-op and the TWS tests skip.
+The hook itself adds no ``sys.path`` entry and imports nothing outside the
+standard library. Being first on PYTHONPATH, it shadows any host-level
+sitecustomize, so it chain-loads the next one down the path.
 
 ``protobuf_compat.install_in_process`` runs this file again in an
-interpreter that is already up; both fixes are idempotent.
+interpreter that is already up; the guard wraps only once. The names
+``pb_shim`` and ``protobuf_compat`` date from when the hook also shimmed a
+protobuf runtime; they stay because the benchmark (``perfbench/run.py``)
+imports ``protobuf_compat`` by name.
 """
 
 import functools
 import os
 import sys
-import types
 
 
 def _chain_shadowed_sitecustomize() -> None:
@@ -78,8 +64,8 @@ def _chain_shadowed_sitecustomize() -> None:
 
 def _guard_zip_invalidate() -> None:
     """Make ``zipimporter.invalidate_caches`` re-read an archive's directory
-    only when the archive changed since this process last read it (fix 1 in
-    the module docstring). Wraps once, however often this file runs."""
+    only when the archive changed since this process last read it (see the
+    module docstring). Wraps once, however often this file runs."""
     import zipimport
 
     if sys.version_info >= (3, 13) or hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__"):
@@ -117,66 +103,7 @@ def _guard_zip_invalidate() -> None:
     zipimport.zipimporter.invalidate_caches = guarded_invalidate
 
 
-_SDK_ROOTS = [
-    "/usr/lib/google-cloud-sdk/lib/third_party",
-    "/usr/lib/google-cloud-sdk/lib/third_party/cloudsdk",
-]
-
-
-def _usable() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def install() -> bool:
-    """Idempotent: make a real google.protobuf importable (purging phantom
-    jar-namespace modules), then back-fill runtime_version if absent.
-    Returns availability."""
-    if not _usable():
-        # purge ONLY the phantom namespace entries the jar resources create:
-        # the bare "google"/"google.protobuf" packages and protobuf submodules.
-        # Unrelated, functional google.* packages (google.auth, google.cloud,
-        # ...) that the driver may already have imported must keep their
-        # sys.modules entries — deleting them would hand later importers
-        # stale/duplicate module state (r08 advice finding).
-        for m in [
-            m
-            for m in sys.modules
-            if m in ("google", "google.protobuf") or m.startswith("google.protobuf.")
-        ]:
-            del sys.modules[m]
-        for p in _SDK_ROOTS:
-            if os.path.isdir(p) and p not in sys.path:
-                sys.path.append(p)
-    if not _usable():
-        return False
-    import google.protobuf as gpb
-
-    try:
-        from google.protobuf import runtime_version  # noqa: F401
-    except ImportError:
-        mod = types.ModuleType("google.protobuf.runtime_version")
-
-        class _Domain:
-            PUBLIC = 1
-            GOOGLE_INTERNAL = 2
-
-        def _validate(*args, **kwargs):  # noqa: ANN002, ANN003
-            return None
-
-        mod.Domain = _Domain
-        mod.ValidateProtobufRuntimeVersion = _validate
-        sys.modules["google.protobuf.runtime_version"] = mod
-        gpb.runtime_version = mod
-    return True
-
-
 _guard_zip_invalidate()
-install()
 if __name__ == "sitecustomize":
     # only when imported AS the interpreter-startup hook — when re-exec'd by
     # protobuf_compat.install_in_process (runpy) the host sitecustomize

@@ -15,14 +15,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from kda_flink_demo_spark.streaming import protobuf_compat  # noqa: E402
-
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    # the Python-worker start-up hook, as session.get_spark exports it: without
-    # it every Python task re-reads pyspark.zip and the spark-core jar
-    protobuf_compat.export_worker_pythonpath()
+    # built as the external driver builds it: no Python-worker start-up hook
+    # until the registry's apply_engine_conf hands it to the workers
     spark = (
         SparkSession.builder.master("local[16]")
         .config("spark.sql.session.timeZone", "America/New_York")

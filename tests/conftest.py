@@ -13,9 +13,9 @@ from kda_flink_demo_spark.session import get_spark
 from kda_flink_demo_spark.streaming import jobs, protobuf_compat
 
 # Must happen at import time, BEFORE any SparkSession (and its JVM) exists:
-# workers/streaming runners inherit PYTHONPATH from the JVM's launch env, and
-# the transformWithStateInPandas tests need the protobuf shim in every python
-# process (no-op on hosts with a real protobuf install).
+# workers and streaming runners inherit PYTHONPATH from the JVM's launch env,
+# so they all get the Python-worker start-up hook (its zip-directory guard);
+# test_worker_hook.py's in-process tests need the guard in this interpreter.
 protobuf_compat.export_worker_pythonpath()
 protobuf_compat.install_in_process()
 

@@ -6,8 +6,6 @@ oracle/registry hygiene."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -368,25 +366,6 @@ def test_image_dedup_probe_and_standing_index(spark, tmp_path):
     batch2 = img_df([(20, _gradient_img(16, 16, seed=7, flips=2))])
     update_ahash_index_store(batch2, 2, store, sink)
     assert spark.read.parquet(f"{sink}/batch=2").count() == 0
-
-
-def test_protobuf_compat_shims_tws_protocol():
-    """The shim makes the transformWithStateInPandas protocol importable in
-    this interpreter (idempotently); where it reports available, pyspark's
-    protobuf-6 gencode must actually build messages on the shimmed runtime.
-    The end-to-end streaming parity lives in
-    tests/test_streaming.py::test_distinct_users_tws_mapstate_matches_batch."""
-    from kda_flink_demo_spark.streaming import protobuf_compat
-
-    assert os.path.isdir(protobuf_compat.shim_dir())
-    ok1 = protobuf_compat.install_in_process()
-    ok2 = protobuf_compat.install_in_process()
-    assert ok1 == ok2  # idempotent
-    if ok1:
-        import pyspark.sql.streaming.proto.StateMessage_pb2 as sm
-
-        req = sm.StateRequest(version=3)
-        assert sm.StateRequest.FromString(req.SerializeToString()).version == 3
 
 
 def test_registry_has_no_oracle_less_queries():

@@ -902,81 +902,6 @@ def test_session_tail_flush_contract(spark, tmp_path):
     }
 
 
-def test_distinct_users_tws_mapstate_matches_batch(spark, replay_dir, tmp_path):
-    """The one transformWithStateInPandas operator (MapState: point
-    containsKey/updateValue per user — never an iteration of the whole
-    map): per-key exact distinct
-    users upserted each micro-batch must converge to the batch
-    COUNT(DISTINCT user_id) per type, and total_events to COUNT(*)."""
-    from kda_flink_demo_spark.streaming import protobuf_compat
-    from kda_flink_demo_spark.streaming.distinct_state import distinct_users_tws
-    from kda_flink_demo_spark.streaming.jobs import use_rocksdb_state
-
-    if not protobuf_compat.tws_available():
-        pytest.skip("transformWithStateInPandas requires google.protobuf (none shimmable here)")
-
-    ev = load_table(spark, SF_DIR, "events")
-    # replay_dir carries (event_id, railway_class, rowtime); this op also
-    # needs user_id — build its own 5-chunk in-order replay
-    src = ev.select(
-        F.col("event_type").alias("railway_class"),
-        F.col("user_id"),
-        F.col("ts").alias("rowtime"),
-    ).orderBy("rowtime")
-    replay = str(tmp_path / "replay_users")
-    build_replay(spark, src, replay)
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("railway_class", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("rowtime", T.TimestampType()),
-        ]
-    )
-    stream = file_events_stream(spark, replay + "/chunk=*", schema)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)
-    sink = DuckDBUpsertSink(
-        str(tmp_path / "sink_du.duckdb"),
-        "distinct_users",
-        ["railway_class"],
-        "railway_class VARCHAR, distinct_users BIGINT, total_events BIGINT",
-    )
-    try:
-        q = (  # by hand: run_to_sink is append-only
-            distinct_users_tws(stream)
-            .writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "ckpt_du"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        assert not q.isActive
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    cols, got = sink.read_all()
-    got_map = {
-        r[cols.index("railway_class")]: (
-            r[cols.index("distinct_users")],
-            r[cols.index("total_events")],
-        )
-        for r in got
-    }
-    expected = {
-        r.event_type: (r.du, r.n)
-        for r in ev.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("du"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got_map == expected
-
-
 def test_streaming_ingest_dedup_matches_batch(spark, tmp_path):
     """Stream-static anti join (incremental-ingest exact dedup): replaying the
     incoming batch as a file stream against the static corpus index must emit
